@@ -1,9 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.Harness.{num, sentinel}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // HOST-SETTLE gate (r14 verdict #7): the driver's close-protocol
     // bench starts right after the correctness sweep + trio legs, and
     // the 1-min loadavg decay tail of those runs (measured start
@@ -19,34 +19,21 @@ object Bench {
       try (parts(0).toDouble, parts(1).toInt)
       catch { case _: Throwable => (5.0, 600) }
     }
-    def loadavg1(): Double =
+    def loadavg(): Double =
       try java.nio.file.Files.readString(
         java.nio.file.Paths.get("/proc/loadavg")).split(' ')(0).toDouble
       catch { case _: Throwable => -1.0 }
     val settleT0 = System.nanoTime()
-    var la = loadavg1()
+    var la = loadavg()
     while (settleTarget > 0 && la > settleTarget &&
            (System.nanoTime() - settleT0) / 1e9 < settleMax) {
       System.err.println(
         f"[bench] settling: loadavg $la%.2f > target $settleTarget%.1f")
       Thread.sleep(15000)
-      la = loadavg1()
+      la = loadavg()
     }
     val settleSec = (System.nanoTime() - settleT0) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries INT64 TIMESTAMP(NANOS); see Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // build-time injection puts PruneAsOfPayload in the operator-
-      // optimization fixed-point (the inserted Project is itself pruned
-      // into the scan) instead of the end-of-batch experimental slot
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // absorb session/codegen warmup AND the benchmark tables' file
     // listing/footer reads so they aren't billed to the first query
     spark.range(1000).count()
@@ -67,13 +54,14 @@ object Bench {
         System.err.println(s"[bench] setup $label FAILED: $e") }
       setupSecs(label) = (System.nanoTime() - t0) / 1e9
     }
-    // a SPARK_GRAFT_ONLY subset run skips setup its queries don't load
-    // (the 500k-vector store build is ~13 min — paying it to time one
-    // unrelated query would make subset iteration useless); full runs
-    // build everything
-    val onlyPre = sys.env.get("SPARK_GRAFT_ONLY")
+    // optional subset filter (comma-separated name prefixes) for targeted
+    // runs — e.g. SPARK_GRAFT_ONLY=dedup_,ann_ for the sf-scaling trends.
+    // A subset run skips setup its queries don't load (the 500k-vector
+    // store build is ~13 min — paying it to time one unrelated query
+    // would make subset iteration useless); full runs build everything
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    def subsetNeeds(prefixes: String*): Boolean = onlyPre.forall(sel =>
+    def subsetNeeds(prefixes: String*): Boolean = only.forall(sel =>
       sel.exists(s => prefixes.exists(p =>
         s.startsWith(p) || p.startsWith(s))))
     // the versioned ANN index store: build + persist det-IVF / IVF-PQ /
@@ -117,10 +105,6 @@ object Bench {
           org.apache.spark.sql.functions.col("event_id").as("rid")),
         Seq("user_id"), "ts", "ts", Seq("rid")).count()
     } catch { case _: Throwable => () }
-    // optional subset filter (comma-separated name prefixes) for targeted
-    // runs — e.g. SPARK_GRAFT_ONLY=dedup_,ann_ for the sf-scaling trends
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
     val preselected = SparkEntry.queries.toSeq.sortBy(_._1).filter {
       case (n, _) => only.forall(_.exists(n.startsWith))
     }
@@ -187,35 +171,6 @@ object Bench {
     //     once and the MINIMUM kept — min-of-2 estimates the noise-free
     //     cost, which is the quantity the round record is meant to
     //     track. Disable with SPARK_GRAFT_BENCH_RETRY=0.
-    def loadavg(): Double =
-      try java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/loadavg")).split(' ')(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    // Host-drift SENTINEL (r10 lesson): a fixed 400M-step xorshift64
-    // loop on one core, timed at session start and end and RECORDED in
-    // the artifact. The r10 det-trio "regression" took a worktree A/B
-    // against the r8 binary to prove the host had slowed — this number
-    // shows the same thing in one field: before chasing any cross-round
-    // per-query delta, divide by the sentinel ratio of the two runs.
-    // Warmup runs the same compiled loop first so JIT state is not part
-    // of the measurement; the fold into `sink` defeats dead-code
-    // elimination.
-    var sentinelSink = 0L
-    def sentinel(): Double = {
-      def loop(n: Long): Long = {
-        var s = 88172645463325252L
-        var i = 0L
-        while (i < n) {
-          s ^= s << 13; s ^= s >>> 7; s ^= s << 17
-          i += 1
-        }
-        s
-      }
-      sentinelSink ^= loop(50000000L)
-      val t0 = System.nanoTime()
-      sentinelSink ^= loop(400000000L)
-      (System.nanoTime() - t0) / 1e9
-    }
     val sentinelStart = sentinel()
     val historyMedian: Map[String, Double] = try {
       val p = java.nio.file.Paths.get("bench_history.jsonl")
@@ -345,12 +300,6 @@ object Bench {
     }
     val loadEnd = loadavg()
     val sentinelEnd = sentinel()
-    if (sentinelSink == 42L) System.err.println("[bench] sentinel sink")
-    // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
-    // comma-decimal locale would emit "0,123" — invalid JSON in every
-    // persisted record
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results.map { case (k, v) =>
       s"\"" + k + "\":" + (if (v < 0) "null" else num(v))
     }.mkString("{", ",", "}")

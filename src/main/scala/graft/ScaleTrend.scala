@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Harness.timed
 import graft.core.Tables
 import graft.operators.{Ann, Dedup, Joins}
 import graft.plans.AsOfNative
@@ -31,23 +32,8 @@ import graft.plans.AsOfNative
   */
 object ScaleTrend {
 
-  private def timed(f: => Long): (Double, Long) = {
-    val t0 = System.nanoTime()
-    val n = f
-    ((System.nanoTime() - t0) / 1e9, n)
-  }
-
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val sf001 = "/root/testdata/sf0.01"
     val sf01 = "/root/testdata/sf0.1"

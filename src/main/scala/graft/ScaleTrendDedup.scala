@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.core.Tables
+import graft.Harness.{num, sentinel, timed}
 
 /** Scale-exponent evidence for the DOCUMENT dedup/text heavy tail —
   * the families the sf0.1 bench is blind to (r15 verdict: the 8-core
@@ -34,83 +31,15 @@ import graft.core.Tables
   */
 object ScaleTrendDedup {
 
-  private def timed(f: => Long): (Double, Long) = {
-    val t0 = System.nanoTime()
-    val n = f
-    ((System.nanoTime() - t0) / 1e9, n)
-  }
-
-  private var sentinelSink = 0L
-  private def sentinel(): Double = {
-    def loop(n: Long): Long = {
-      var s = 88172645463325252L
-      var i = 0L
-      while (i < n) {
-        s ^= s << 13; s ^= s >>> 7; s ^= s << 17
-        i += 1
-      }
-      s
-    }
-    sentinelSink ^= loop(50000000L)
-    val t0 = System.nanoTime()
-    sentinelSink ^= loop(400000000L)
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  private def num(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val sf01 = "/root/testdata/sf0.1"
 
-    /** [[ScaleTrendDeep]]'s docsNx (same offsets/suffixes, so its
-      * materialized /tmp dirs are reused verbatim). */
-    def docsNx(n: Int): DataFrame = (0 until n).map { i =>
-      val base = Tables.documents(spark, sf01).select("doc_id", "text")
-      if (i == 0) base
-      else base.select(
-        (col("doc_id") + i * 100000000L).as("doc_id"),
-        array_join(
-          transform(split(col("text"), "\\s+"), t => concat(t, lit(s"_$i"))),
-          " ").as("text"))
-    }.reduce(_ unionByName _)
-
-    def materializedDir(dir: String, params: String)
-                       (build: String => Unit): String = {
-      val marker = java.nio.file.Paths.get(dir, "_DONE")
-      val current =
-        try java.nio.file.Files.exists(marker) &&
-          new String(java.nio.file.Files.readAllBytes(marker),
-            java.nio.charset.StandardCharsets.UTF_8) == params
-        catch { case _: Throwable => false }
-      if (!current) {
-        build(dir)
-        java.nio.file.Files.write(marker, params.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-      }
-      dir
-    }
-
-    lazy val d50k = materializedDir("/tmp/graft_deep_media_10x",
-      s"docsNx:n=10:idOff=100000000:suffix=_i:src=$sf01:v=2") { dir =>
-      docsNx(10).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    }
-    lazy val d500k = materializedDir("/tmp/graft_deep_docs_100x",
-      s"docsNx:n=100:idOff=100000000:suffix=_i:src=$sf01:v=2") { dir =>
-      docsNx(100).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    }
+    lazy val d50k =
+      ScaleTrendDeep.docsDir(spark, sf01, "/tmp/graft_deep_media_10x", 10)
+    lazy val d500k =
+      ScaleTrendDeep.docsDir(spark, sf01, "/tmp/graft_deep_docs_100x", 100)
 
     val decade3 = sys.env.get("SPARK_GRAFT_DEDUP_DECADE3").contains("1")
 
@@ -164,7 +93,6 @@ object ScaleTrendDedup {
       sb.append(row).append('\n')
     }
     val sentinelEnd = sentinel()
-    if (sentinelSink == 42L) System.err.println("[dedup-ladder] sink")
 
     java.nio.file.Files.write(
       java.nio.file.Paths.get("/tmp/scale_dedup.md"),

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Harness.{num, sentinel, timed}
 import graft.core.Tables
 import graft.operators.{Ann, Dedup, Graph}
 import graft.plans.AsOfNative
@@ -24,63 +25,13 @@ import graft.plans.AsOfNative
   */
 object ScaleTrendDeep {
 
-  private def timed(f: => Long): (Double, Long) = {
-    val t0 = System.nanoTime()
-    val n = f
-    ((System.nanoTime() - t0) / 1e9, n)
-  }
-
-  /** Bench's host-drift sentinel (fixed 400M-step xorshift64 loop,
-    * one core): timed at run start and end and RECORDED in the JSON
-    * artifact, so cross-round comparison of deep-rung numbers can
-    * divide out host speed the same way the official bench records
-    * do. */
-  private var sentinelSink = 0L
-  private def sentinel(): Double = {
-    def loop(n: Long): Long = {
-      var s = 88172645463325252L
-      var i = 0L
-      while (i < n) {
-        s ^= s << 13; s ^= s >>> 7; s ^= s << 17
-        i += 1
-      }
-      s
-    }
-    sentinelSink ^= loop(50000000L)
-    val t0 = System.nanoTime()
-    sentinelSink ^= loop(400000000L)
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  private def num(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // the 100M+-pair ADC sorts of the DECADE3 rungs need far more
-    // (smaller) shuffle partitions than threads, or single-partition
-    // sorts GC-stall the shared local-mode JVM past the heartbeat
-    // timeout (round-12 close, SCALE_r12.md appendix) — overridable
-    // without a code change
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val sf01 = "/root/testdata/sf0.1"
-
-    /** n suffix-disjoint copies of the sf0.1 documents. The copy offset
-      * is 100M, NOT 10M: pipeline_media_prep internally offsets its PNG
-      * copy ids by 10M, so a 10M ladder offset would collide copy i's
-      * PNG ids with copy i+1's PGM ids and break media_id uniqueness. */
-    def docsNx(n: Int): DataFrame = (0 until n).map { i =>
-      val base = Tables.documents(spark, sf01).select("doc_id", "text")
+  /** n suffix-disjoint copies of the `src` documents. The copy offset
+    * is 100M, NOT 10M: pipeline_media_prep internally offsets its PNG
+    * copy ids by 10M, so a 10M ladder offset would collide copy i's
+    * PNG ids with copy i+1's PGM ids and break media_id uniqueness. */
+  def docsNx(spark: SparkSession, src: String, n: Int): DataFrame =
+    (0 until n).map { i =>
+      val base = Tables.documents(spark, src).select("doc_id", "text")
       if (i == 0) base
       else base.select(
         (col("doc_id") + i * 100000000L).as("doc_id"),
@@ -88,6 +39,45 @@ object ScaleTrendDeep {
           transform(split(col("text"), "\\s+"), t => concat(t, lit(s"_$i"))),
           " ").as("text"))
     }.reduce(_ unionByName _)
+
+  /** Materialize a synthetic corpus dir once per GENERATION FORMULA:
+    * the `_DONE` marker stores `params` (every formula input — copy
+    * count, id offsets, suffix scheme version), and a marker whose
+    * content does not match triggers a rebuild. A bare existence
+    * check silently reused corpora built under a superseded formula
+    * (the r9 docsNx offset change 10M→100M would have kept serving
+    * any pre-change dir). Pre-params empty markers mismatch ""≠params
+    * and rebuild exactly once. */
+  def materializedDir(dir: String, params: String)
+                     (build: String => Unit): String = {
+    val marker = java.nio.file.Paths.get(dir, "_DONE")
+    val current =
+      try java.nio.file.Files.exists(marker) &&
+        new String(java.nio.file.Files.readAllBytes(marker),
+          java.nio.charset.StandardCharsets.UTF_8) == params
+      catch { case _: Throwable => false }
+    if (!current) {
+      build(dir)
+      java.nio.file.Files.write(marker, params.getBytes(
+        java.nio.charset.StandardCharsets.UTF_8))
+    }
+    dir
+  }
+
+  /** docsNx(n) materialized as `<dir>/documents.parquet` (see
+    * materializedDir); ScaleTrendDedup reads the same dirs. */
+  def docsDir(spark: SparkSession, src: String, dir: String,
+              n: Int): String =
+    materializedDir(dir,
+      s"docsNx:n=$n:idOff=100000000:suffix=_i:src=$src:v=2") { d =>
+      docsNx(spark, src, n).write.mode("overwrite")
+        .parquet(s"$d/documents.parquet")
+    }
+
+  def main(args: Array[String]): Unit = {
+    val spark = GraftSession()
+
+    val sf01 = "/root/testdata/sf0.1"
 
     /** n direction-perturbed copies of the sf0.1 embeddings (label kept
       * for the det-IVF cell structure; copies reuse the base labels, so
@@ -152,8 +142,9 @@ object ScaleTrendDeep {
       ("graph_10m", graphEdges(10000000L)))
 
     val docInputs = Seq(
-      ("docs_5k", docsNx(1)), ("docs_50k", docsNx(10)),
-      ("docs_500k", docsNx(100)))
+      ("docs_5k", docsNx(spark, sf01, 1)),
+      ("docs_50k", docsNx(spark, sf01, 10)),
+      ("docs_500k", docsNx(spark, sf01, 100)))
     val embInputs = Seq(
       ("emb_2k", embNx(1)), ("emb_20k", embNx(10)),
       ("emb_200k", embNx(100)))
@@ -249,30 +240,6 @@ object ScaleTrendDeep {
         ("graph_triangles(synth)", graphInputs,
           e => Graph.triangles(e, "src", "dst")))
 
-    /** Materialize a synthetic corpus dir once per GENERATION FORMULA:
-      * the `_DONE` marker stores `params` (every formula input — copy
-      * count, id offsets, suffix scheme version), and a marker whose
-      * content does not match triggers a rebuild. A bare existence
-      * check silently reused corpora built under a superseded formula
-      * (the r9 docsNx offset change 10M→100M would have kept serving
-      * any pre-change dir). Pre-params empty markers mismatch ""≠params
-      * and rebuild exactly once. */
-    def materializedDir(dir: String, params: String)
-                       (build: String => Unit): String = {
-      val marker = java.nio.file.Paths.get(dir, "_DONE")
-      val current =
-        try java.nio.file.Files.exists(marker) &&
-          new String(java.nio.file.Files.readAllBytes(marker),
-            java.nio.charset.StandardCharsets.UTF_8) == params
-        catch { case _: Throwable => false }
-      if (!current) {
-        build(dir)
-        java.nio.file.Files.write(marker, params.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-      }
-      dir
-    }
-
     /** Facts-family second decade: a ×n sfDir where the FACT tables
       * (orders, lineitem) get n orderkey-shifted copies — transaction
       * history grows — while every dimension table is copied verbatim
@@ -365,10 +332,7 @@ object ScaleTrendDeep {
       * content queries run unchanged — encode + real container decode
       * are both in the timed path, exactly as a corpus read would be. */
     def mediaDir(n: Int): String =
-      materializedDir(s"/tmp/graft_deep_media_${n}x",
-        s"docsNx:n=$n:idOff=100000000:suffix=_i:src=$sf01:v=2") { dir =>
-        docsNx(n).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      }
+      docsDir(spark, sf01, s"/tmp/graft_deep_media_${n}x", n)
     val mediaDeep = Seq("media_video_frames", "media_audio_features",
       "media_scene_cuts", "pipeline_media_prep", "media_color_stats")
     runRegisteredRungs(mediaDeep,
@@ -391,10 +355,7 @@ object ScaleTrendDeep {
       * vocabulary, new ids), reads stream from disk instead of holding
       * 5M documents in one in-memory plan. */
     if (sys.env.get("SPARK_GRAFT_DEEP_DECADE3").contains("1")) {
-      val d500k = materializedDir("/tmp/graft_deep_docs_100x",
-        s"docsNx:n=100:idOff=100000000:suffix=_i:src=$sf01:v=2") { dir =>
-        docsNx(100).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      }
+      val d500k = docsDir(spark, sf01, "/tmp/graft_deep_docs_100x", 100)
       def docs5m: DataFrame = (0 until 10).map { i =>
         val base = spark.read.parquet(s"$d500k/documents.parquet")
         if (i == 0) base
@@ -631,7 +592,6 @@ object ScaleTrendDeep {
     // committed as scaletrend_deep_r{N}.json so a fix's before/after
     // diffs two JSONs, not prose
     val sentinelEnd = sentinel()
-    if (sentinelSink == 42L) System.err.println("[deep] sentinel sink")
     if (deltaRecords.nonEmpty) {
       val recJson = deltaRecords.map { case (rung, config, n, nlist,
           sub, w, s, sr, pp, q) =>

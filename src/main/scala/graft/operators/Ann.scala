@@ -226,9 +226,9 @@ object Ann {
     // checkpointed: the self-join is planned as a BROADCAST join (one
     // side a BroadcastExchange, so ReuseExchange cannot deduplicate the
     // two sides) and each side re-ran the upstream projection + bucket
-    // kernel; steady-state A/B (QProbe, min of 4): margin_bitext_lsh
-    // 3.34 → 3.18, media_near_dup_det 1.46 → 1.18, dedup_embedding_
-    // cosine 1.07 → 0.98 s with the boundary.
+    // kernel; steady-state A/B (min of 4 in one session):
+    // margin_bitext_lsh 3.34 → 3.18, media_near_dup_det 1.46 → 1.18,
+    // dedup_embedding_cosine 1.07 → 0.98 s with the boundary.
     val buckets = v.filter(size(col("v")) > 0)
       .select(col("id"), col("v"),
         posexplode(HashExprs.det_lsh_buckets(col("v"), bits, tables))

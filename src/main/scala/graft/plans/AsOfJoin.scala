@@ -132,8 +132,9 @@ object PruneAsOfPayload
   }
 }
 
-/** Build-time registration: `SparkSession.builder.withExtensions(new
-  * GraftExtensions)` or `spark.sql.extensions=graft.plans.GraftExtensions`. */
+/** Build-time registration: [[graft.GraftSession]] installs it with
+  * `withExtensions`; `spark.sql.extensions=graft.plans.GraftExtensions`
+  * works too. */
 class GraftExtensions
     extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {

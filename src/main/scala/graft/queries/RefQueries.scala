@@ -93,8 +93,12 @@ object RefQueries extends Registry {
         .limit(5)),
   )
 
-  private val logsDir =
-    sys.env.getOrElse("GRAFT_LOGS_DIR", "/root/repo/data/logs")
+  /** The grep fixture: `GRAFT_LOGS_DIR`, else `data/logs` under the
+    * working directory (sbt runs and tests fork in the project base).
+    * Absolute, because the DuckDB oracle SQL embeds it and the checker
+    * may run from another directory. */
+  private[graft] val logsDir = sys.env.getOrElse("GRAFT_LOGS_DIR",
+    java.nio.file.Paths.get("data/logs").toAbsolutePath.toString)
 
   /** DuckDB mirror of LogFiles.lines: read_text + positionally-zipped
     * unnest reproduces (file, line_no, line) with the same 1-based

@@ -23,7 +23,9 @@ object LogFiles {
   /** All lines of every `glob`-matching file under `dir`:
     * (file, line_no, line). The default glob keeps the scan pinned to
     * log files — a stray non-log file (editor backup, README) must not
-    * silently join the corpus.
+    * silently join the corpus. The glob goes to `pathGlobFilter`, not
+    * into the path: Spark's FileStreamSink.hasMetadata probe stats a
+    * glob path literally, fails, and logs a WARN stack trace per read.
     *
     * A newline-TERMINATED file (the normal POSIX shape) splits into a
     * phantom empty final element; it is dropped so line accounting matches
@@ -32,7 +34,8 @@ object LogFiles {
     * file yields zero lines. */
   def lines(spark: SparkSession, dir: String,
             glob: String = "*.log"): DataFrame =
-    spark.read.option("wholetext", "true").text(s"$dir/$glob")
+    spark.read.option("wholetext", "true").option("pathGlobFilter", glob)
+      .text(dir)
       .select(regexp_extract(input_file_name(), "[^/]+$", 0).as("file"),
         split(col("value"), "\n").as("ls"))
       .select(col("file"), size(col("ls")).as("n"), posexplode(col("ls")))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Generation-time ground truth for `text_compression_ratio` (the r10
@@ -27,12 +26,7 @@ object GenDeflateTruth {
   def main(args: Array[String]): Unit = {
     val out =
       if (args.nonEmpty) args(0) else "data/deflate/expected.parquet"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     import spark.implicits._
 
     val texts = Seq("sf0.001", "sf0.01", "sf0.1")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf-proportional EMBEDDINGS ladder fixtures (r10 verdict #7): the
@@ -56,12 +55,7 @@ object GenEmbLadder {
     val selected: Set[String] =
       if (args.length > 1) args(1).split(',').map(_.trim).toSet
       else defaultRungs
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     rungs.filter(r => selected(r._1)).foreach { case (name, n, borrowDir) =>
       val dir = java.nio.file.Paths.get(s"$root/$name")

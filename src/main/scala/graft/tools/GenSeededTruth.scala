@@ -375,12 +375,7 @@ object GenSeededTruth {
       if (args.length > 0) args(0) else "data/semdedup/expected.parquet"
     val ndOut =
       if (args.length > 1) args(1) else "data/medianeardup/expected.parquet"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     import spark.implicits._
 
     val sfs = Seq("sf0.001", "sf0.01", "sf0.1")

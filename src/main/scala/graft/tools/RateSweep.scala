@@ -4,9 +4,9 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
+import graft.GraftSession
 import graft.sources.VersionedStore
 import graft.streaming.CraneStream
 
@@ -41,12 +41,7 @@ object RateSweep {
       ("wordCount", s"$data/shakespear"),
       ("twitter", s"$data/twitter"),
       ("hothttp", s"$data/calgary"))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // cumulative rate-source rows per running query — the spout's emit
     // clock (each rate row releases exactly one corpus line while seq <

@@ -5,6 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
+import graft.GraftSession
+import graft.Harness.{num, sentinel}
 import graft.streaming.CraneStream
 import graft.sources.VersionedStore
 
@@ -33,12 +35,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val copies = if (args.nonEmpty) args(0).toInt else 40
     val data = "/root/reference/spark-streaming/data"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
 
@@ -46,25 +43,9 @@ object StreamBench {
       Files.readAllLines(java.nio.file.Paths.get(s"$data/$name"))
         .toArray(Array.empty[String])
 
-    // host-drift sentinel, same fixed xorshift64 loop as graft.Bench:
-    // recorded in the artifact so a cross-round band comparison divides
-    // by the sentinel ratio before reading any delta as real
-    var sentinelSink = 0L
-    def sentinel(): Double = {
-      def loop(n: Long): Long = {
-        var s = 88172645463325252L
-        var i = 0L
-        while (i < n) {
-          s ^= s << 13; s ^= s >>> 7; s ^= s << 17
-          i += 1
-        }
-        s
-      }
-      sentinelSink ^= loop(50000000L)
-      val t0 = System.nanoTime()
-      sentinelSink ^= loop(400000000L)
-      (System.nanoTime() - t0) / 1e9
-    }
+    // host-drift sentinel: recorded in the artifact so a cross-round
+    // band comparison divides by the sentinel ratio before reading any
+    // delta as real
     val sentinelStart = sentinel()
 
     /** Drain `copies` replays of `lines` through one started query;
@@ -498,8 +479,7 @@ object StreamBench {
           s"""{"band":"$label","base_rows":$foldBaseRows,""" +
             s""""triggers":$foldTriggers,""" +
             s""""compact_every":$foldCompactEvery,"trigger_secs":[""" +
-            secs.map(s => String.format(java.util.Locale.ROOT, "%.3f",
-              Double.box(s))).mkString(",") + "]}")
+            secs.map(num).mkString(",") + "]}")
       val foldBands = {
         val baseRows = foldBaseRows
         val triggers = foldTriggers
@@ -677,9 +657,6 @@ object StreamBench {
       .mkString(",")
     val (_, wcRate, wcTotal, wcTop) = results.find(_._1 == "wordCount").get
     val sentinelEnd = sentinel()
-    if (sentinelSink == 42L) System.err.println("[streambench] sink")
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     println(f"""{"metric":"stream_lines_per_sec","value":$wcRate%.0f,"lines":$wcTotal,"sentinel_sec":[${num(sentinelStart)},${num(sentinelEnd)}],"apps":{$apps},"top5":"$wcTop"}""")
     println(s"""{"metric":"stream_breakdown","state_partitions":$streamStateParts,"bands":[${bandBreakdowns.mkString(",")}]}""")
     spark.stop()

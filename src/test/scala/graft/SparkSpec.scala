@@ -12,15 +12,7 @@ trait SparkSpec extends AnyFunSuite with Matchers {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Pinned to 4 cores: the suite's expectations are sized for local[4],
+    * whatever SPARK_GRAFT_CPUS the surrounding run exports. */
+  lazy val session: SparkSession = GraftSession(cores = 4)
 }

@@ -243,11 +243,12 @@ class AsOfNativeSpec extends SparkSpec {
   }
 
   test("live-session pruning narrows the parquet scan's ReadSchema") {
-    // the prune rule lands end-of-optimizer on the live-session path, but
-    // V1 FileSourceStrategy computes ReadSchema at PHYSICAL planning —
-    // after every optimizer batch — so the inserted Project must still
-    // narrow the scan: with payload [a, b] and only a read downstream,
-    // the right-side parquet scan must not read b (or the unused c)
+    // the prune rule runs in the operator-optimization fixed-point (build
+    // time) and again end-of-optimizer (live-session path); V1
+    // FileSourceStrategy computes ReadSchema at PHYSICAL planning, after
+    // every optimizer batch, so the inserted Project must narrow the
+    // scan: with payload [a, b] and only a read downstream, the
+    // right-side parquet scan must not read b (or the unused c)
     val dir = java.nio.file.Files.createTempDirectory("asof_scan")
     try {
       val path = dir.resolve("right").toString
@@ -276,41 +277,31 @@ class AsOfNativeSpec extends SparkSpec {
   }
 
   test("build-time GraftExtensions installs strategy + pruning rule") {
-    import org.apache.spark.sql.SparkSession
-    val orig = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // withExtensions, not config("spark.sql.extensions", ...): the config
-    // form is read off the SparkContext conf, which already exists in
-    // this JVM and cannot pick up new static confs
-    val s2 = SparkSession.builder().master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      import s2.implicits._
-      val right = Seq((1L, 10L, "a")).toDF("k", "sec", "rid")
-        .select(col("k"), timestamp_seconds(col("sec")).as("ts"), col("rid"))
-      val left = Seq((1L, 15L, "p1"), (2L, 9L, "p2")).toDF("k", "sec", "lid")
-        .select(col("k"), timestamp_seconds(col("sec")).as("ts"), col("lid"))
-      val q = AsOfNative.join(left, right, Seq("k"), "ts", "ts", Seq("rid"))
-        .select("lid", "matched_ts")
-      val j = q.queryExecution.optimizedPlan
-        .collect { case x: AsOfJoin => x }.head
-      j.payload shouldBe empty
-      // in the operator-optimization fixed-point the inserted Project is
-      // itself pruned into the local relation: rid never materializes
-      j.right.collectLeaves().foreach(
-        _.output.map(_.name) should not contain "rid")
-      q.collect().map(_.getString(0)).toSet shouldBe Set("p1", "p2")
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(orig)
-      SparkSession.setActiveSession(orig)
-    }
+    val right = Seq((1L, 10L, "a")).toDF("k", "sec", "rid")
+      .select(col("k"), timestamp_seconds(col("sec")).as("ts"), col("rid"))
+    val left = Seq((1L, 15L, "p1"), (2L, 9L, "p2")).toDF("k", "sec", "lid")
+      .select(col("k"), timestamp_seconds(col("sec")).as("ts"), col("lid"))
+    val q = AsOfNative.join(left, right, Seq("k"), "ts", "ts", Seq("rid"))
+      .select("lid", "matched_ts")
+    val j = q.queryExecution.optimizedPlan
+      .collect { case x: AsOfJoin => x }.head
+    j.payload shouldBe empty
+    // in the operator-optimization fixed-point the inserted Project is
+    // itself pruned into the local relation: rid never materializes
+    j.right.collectLeaves().foreach(
+      _.output.map(_.name) should not contain "rid")
+    q.collect().map(_.getString(0)).toSet shouldBe Set("p1", "p2")
+  }
+
+  test("live-session registration is idempotent across joins") {
+    val l = mkSide(Seq((1L, 10L, "a")), "lid")
+    val r = mkSide(Seq((1L, 5L, "b")), "rid")
+    (1 to 2).foreach(_ =>
+      AsOfNative.join(l, r, Seq("k"), "ts", "ts", Seq("rid")))
+    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .experimental
+    exp.extraStrategies.count(_ eq AsOfJoinStrategy) shouldBe 1
+    exp.extraOptimizations.count(_ eq PruneAsOfPayload) shouldBe 1
   }
 
   test("self-join from one scan resolves unambiguously") {

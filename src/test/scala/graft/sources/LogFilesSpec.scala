@@ -12,8 +12,7 @@ import graft.SparkSpec
   * extraction) is verified bit-for-bit, not just shape-checked. */
 class LogFilesSpec extends SparkSpec {
 
-  private val logsDir =
-    sys.env.getOrElse("GRAFT_LOGS_DIR", "/root/repo/data/logs")
+  private val logsDir = graft.queries.RefQueries.logsDir
 
   private def fileLines: Seq[(String, Seq[String])] =
     Files.list(Paths.get(logsDir)).iterator().asScala.toSeq
@@ -65,5 +64,20 @@ class LogFilesSpec extends SparkSpec {
       .groupBy(_._1).view.mapValues(_.size.toLong).toSeq.sortBy(_._1)
     want should not be empty
     got shouldBe want
+  }
+
+  test("lines() reads only files matching the glob") {
+    val dir = Files.createTempDirectory("logfiles_glob")
+    try {
+      Files.writeString(dir.resolve("a.log"), "one\ntwo\n")
+      Files.writeString(dir.resolve("notes.txt"), "stray\n")
+      val got = LogFiles.lines(spark, dir.toString)
+        .orderBy("line_no").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
+      got shouldBe Seq(("a.log", 1L, "one"), ("a.log", 2L, "two"))
+    } finally {
+      Files.list(dir).iterator().asScala.foreach(Files.delete)
+      Files.delete(dir)
+    }
   }
 }
