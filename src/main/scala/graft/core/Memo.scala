@@ -39,8 +39,11 @@ object Memo {
     * the registry's working set. */
   private[core] val MaxEntries = 64
 
-  // access-ordered LinkedHashMap = LRU; all access under `cache`'s lock
-  // (build bodies are lazy plan construction, so holding it is cheap)
+  // access-ordered LinkedHashMap = LRU; all access under `cache`'s lock.
+  // The lock is NOT cheap: under AQE, `localCheckpoint(eager = false)`
+  // runs the build's shuffle stages right away, so Spark jobs execute
+  // while it is held (embed_covariance's triangle: 4 jobs). A per-key
+  // latch instead of this global lock is ROADMAP direction 3.
   private val cache =
     new java.util.LinkedHashMap[(Int, String), DataFrame](16, 0.75f, true) {
       override def removeEldestEntry(
@@ -78,13 +81,14 @@ object Memo {
         size() > MaxEntries
     }
 
-  /** NOTE: unlike [[dataFrame]] (whose build bodies are lazy plan
-    * construction), a value build typically EXECUTES Spark jobs (an
-    * aggregation + collect). The lock is held across the build — the
-    * single-threaded Bench/Verify drivers never contend, and holding it
-    * keeps the build exactly-once; a concurrent caller of a DIFFERENT
-    * key waits rather than double-building (the lock is reentrant, so
-    * nested memo builds are fine). */
+  /** NOTE: like [[dataFrame]] (whose checkpoint runs the build's
+    * shuffle stages under AQE), a value build typically EXECUTES Spark
+    * jobs (an aggregation + collect). The lock is held across the
+    * build — the single-threaded Bench/Verify drivers never contend,
+    * and holding it keeps the build exactly-once; a concurrent caller
+    * of a DIFFERENT key waits rather than double-building (the lock is
+    * reentrant, so nested memo builds are fine). Replacing both global
+    * locks with a per-key latch is ROADMAP direction 3. */
   def value[T](s: SparkSession, key: String)(build: => T): T =
     values.synchronized {
       val k = (System.identityHashCode(s), key)

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.{HashExprs, TextFunctions => TF}
 
 import scala.util.Random
@@ -2131,20 +2132,20 @@ object Ann {
     * integer arithmetic so any engine replays the identical weights.
     *
     * Solves Cov·w = c (centered least squares against y in ±1):
-    *   - C = integer covariance DIV 100 (sign-split: Spark DIV truncates,
-    *     DuckDB // floors; operands made non-negative first),
+    *   - C = integer covariance / 100, truncated toward zero,
     *   - c = cross-covariance of micro-unit coords with y,
-    *   - step: w += (c·1e10 − C·w) div S, S = Gershgorin row-sum bound
+    *   - step: w += (c·1e10 − C·w) / S, S = Gershgorin row-sum bound
     *     (≥ λ_max, so the iteration contracts on C's range space),
     *     clamped to ±1e6 (overflow guard: |C·w| ≤ 64·1e12·1e6 < 2^63
     *     even at the theoretical max covariance of unit-norm coords).
+    *   A dim survives a step only with a c entry, a matrix row meeting
+    *   the previous w, and a previous w (the oracle's inner joins).
     *
-    * At 100 TB the heavy part is the one-pass covariance/cross-covariance
-    * reduction (shared with embed_covariance via the caller's memo); the
-    * d×d iteration is tiny — production would collect it to the driver,
-    * the declarative fold is what makes it oracle-checkable. Iterates are
-    * localCheckpointed: w is referenced twice per step, so an untruncated
-    * lineage would double per iteration (see embed_pca_power).
+    * Spark runs the corpus-sized reductions (the covariance triangle,
+    * shared with embed_covariance via the caller's memo, and c), each
+    * collected once; the d×d steps run on the driver in exact Long
+    * arithmetic that throws on overflow. The unrolled DuckDB CTEs of
+    * the embed_linear_probe oracle replay them independently.
     *
     * INPUT-DOMAIN CONTRACT: y values must be ±1 and coordinates must be
     * unit-norm-scaled (|x| < 2, i.e. micro-units |xi| <= 2e6 — the
@@ -2153,24 +2154,12 @@ object Ann {
     * ~4.6e12 rows. A caller feeding large-magnitude embeddings would
     * silently wrap the Long sum under non-ANSI Spark where the old
     * decimal(38) path was unconditionally safe — scale inputs first.
-    * Output: (dim, w), total order. */
+    * Output: local (dim, w), sorted by dim. */
   def linearProbe(embs: DataFrame, idCol: String, vecCol: String,
                   yCol: String, iters: Int = 8,
                   covTri: Option[DataFrame] = None): DataFrame = {
     val dims = labeledDims(embs, idCol, vecCol, yCol)
     val tri = covTri.getOrElse(covarianceTri(embs, idCol, vecCol))
-    // full matrix, entries DIV 100 with sign-split truncation
-    val mat = tri.select(col("dim_a").as("i"), col("dim_b").as("j"),
-        col("cov_u"))
-      .unionByName(tri.filter(col("dim_a") =!= col("dim_b"))
-        .select(col("dim_b").as("i"), col("dim_a").as("j"), col("cov_u")))
-      .select(col("i"), col("j"),
-        expr("CASE WHEN cov_u < 0 THEN -((-cov_u) DIV 100) " +
-          "ELSE cov_u DIV 100 END").as("a"))
-      // lazy (r15): fixed-iteration loop, no per-step action — see
-      // pagerankInt; consumers are sequential stages, so the handle
-      // computes once and later steps read the persisted blocks
-      .localCheckpoint(false)
     // cross-covariance in LONG sums (r15): each addend is bounded by
     // |xi| <= 2e6 (coords in (-2,2), micro-units) and y = ±1, so the
     // per-dim sums stay inside a Long up to ~4.6e12 rows — far beyond
@@ -2179,37 +2168,78 @@ object Ann {
     // xi*xj addends (<= 4e12) would overflow a Long sum at ~2.3e6
     // rows; these addends are a million times smaller. Values are
     // identical integers either way, so the result is unchanged.
-    val cvec = dims.groupBy("dim")
+    val c = dims.groupBy("dim")
       .agg(count(lit(1)).as("n"),
         sum(col("xi") * col("y")).as("sxy"),
         sum(col("xi")).as("sx"),
         sum(col("y")).as("sy"))
-      .select(col("dim"),
+      .select(col("dim").cast("long"),
         floor(col("sxy").cast("double") / col("n")
           - (col("sx").cast("double") / col("n"))
             * (col("sy").cast("double") / col("n"))).cast("long").as("c"))
-      .localCheckpoint(false)
-    val gersh = mat.groupBy("i").agg(sum(abs(col("a"))).as("rs"))
-      .agg(max(col("rs")).as("m"))
-      .select(expr("CAST(greatest(m, 1) AS BIGINT)").as("s"))
-    val w0 = cvec.select(col("dim"), lit(0L).as("w"))
-    val wK = (1 to iters).foldLeft(w0) { (w, _) =>
-      val cw = mat.join(w.select(col("dim").as("jd"), col("w")),
-          col("j") === col("jd"))
-        .groupBy("i").agg(sum(col("a") * col("w")).as("cw"))
-      cvec.join(cw, col("dim") === col("i"))
-        .join(w.select(col("dim").as("pd"), col("w").as("pw")),
-          col("dim") === col("pd"))
-        .crossJoin(broadcast(gersh))
-        .select(col("dim"),
-          expr("CAST(least(1000000, greatest(-1000000, pw + " +
-            "CASE WHEN c * 10000000000 - cw < 0 " +
-            "THEN -((-(c * 10000000000 - cw)) DIV s) " +
-            "ELSE (c * 10000000000 - cw) DIV s END)) AS BIGINT)").as("w"))
-        .localCheckpoint(false)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val mat = symmetric(tri).map { case (i, j, a) => (i, j, div(a, 100L)) }
+    val s = mat.groupMapReduce(_._1)(e => Math.absExact(e._3))(
+      Math.addExact).values.foldLeft(1L)(math.max)
+    val wK = (1 to iters).foldLeft(c.map(_._1 -> 0L)) { (w, _) =>
+      matVec(mat, w).collect {
+        case (i, cw) if c.contains(i) && w.contains(i) =>
+          val r = Math.subtractExact(
+            Math.multiplyExact(c(i), 10000000000L), cw)
+          i -> (Math.addExact(w(i), div(r, s)) max -1000000L min 1000000L)
+      }
     }
-    wK.select(col("dim").cast("long").as("dim"), col("w")).orderBy("dim")
+    dimFrame(embs.sparkSession, "w", wK)
   }
+
+  /** Top principal direction of a covariance triangle (dim_a, dim_b,
+    * cov_u) by `iters` fixed power-iteration steps, collected once and
+    * run on the driver in exact Long arithmetic (overflow throws): from
+    * v = 1e5 on every dim, u = A·v, then v = u / max(ceil(max|u|/1e5), 1)
+    * — max|v| stays ~1e5, so u_i ≤ 64·1e12·1e5 fits a Long, and an
+    * all-zero matrix (constant embeddings) gives the zero vector. The
+    * unrolled DuckDB CTEs of the embed_pca_power oracle replay the steps
+    * independently. Output: local (dim, v), sorted by dim. */
+  def pcaPower(tri: DataFrame, iters: Int = 6): DataFrame = {
+    val mat = symmetric(tri)
+    val vK = (1 to iters).foldLeft(mat.map(_._1 -> 100000L).toMap) {
+      (v, _) =>
+        val u = matVec(mat, v)
+        val m = u.values.map(Math.absExact).foldLeft(0L)(math.max)
+        val s = math.max(Math.addExact(m, 99999L) / 100000L, 1L)
+        u.map { case (i, x) => i -> div(x, s) }
+    }
+    dimFrame(tri.sparkSession, "v", vK)
+  }
+
+  /** u_i = Σ_j a_ij·v_j over the (i, j, a) entries whose j is in v, for
+    * every row i with at least one such entry; overflow throws. */
+  private def matVec(mat: Seq[(Long, Long, Long)],
+                     v: Map[Long, Long]): Map[Long, Long] =
+    mat.foldLeft(Map.empty[Long, Long]) { case (u, (i, j, a)) =>
+      v.get(j).fold(u)(x => u.updated(i,
+        Math.addExact(u.getOrElse(i, 0L), Math.multiplyExact(a, x))))
+    }
+
+  /** x / s truncated toward zero, sign-split as the oracles write it
+    * (DuckDB // floors); |Long.MinValue| throws rather than wrapping. */
+  private def div(x: Long, s: Long): Long =
+    if (x < 0) -(Math.absExact(x) / s) else x / s
+
+  /** A covariance triangle collected and mirrored into the full
+    * symmetric matrix as (i, j, cov_u) entries. */
+  private def symmetric(tri: DataFrame): Seq[(Long, Long, Long)] =
+    tri.select(col("dim_a").cast("long"), col("dim_b").cast("long"),
+      col("cov_u")).collect().toSeq.flatMap { r =>
+      val (i, j, a) = (r.getLong(0), r.getLong(1), r.getLong(2))
+      if (i == j) Seq((i, j, a)) else Seq((i, j, a), (j, i, a))
+    }
+
+  private def dimFrame(s: SparkSession, name: String,
+                       v: Map[Long, Long]): DataFrame =
+    s.createDataFrame(
+      java.util.List.of(v.toSeq.sorted.map(Row.fromTuple): _*),
+      StructType.fromDDL(s"dim BIGINT, $name BIGINT"))
 
   /** Score every vector with a trained [[linearProbe]]: per-row centered
     * dot product Σ_j (xi_j − μ_j)·w_j, μ = exact integer FLOOR(Σxi/n)

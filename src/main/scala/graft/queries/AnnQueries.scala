@@ -199,9 +199,10 @@ object AnnQueries extends Registry {
     }
 
   /** Integer covariance triangle (Ann.covarianceTri), materialized once
-    * per (session, dir) — shared by embed_covariance and
-    * embed_pca_power (the latter's six iterations would otherwise
-    * re-derive the reduction). */
+    * per (session, dir) — shared by embed_covariance, embed_pca_power
+    * and embed_linear_probe. The latter two collect it once to the
+    * driver, where their fixed-step iterations run (Ann.pcaPower,
+    * Ann.linearProbe); the DuckDB CTEs replay those steps. */
   private def covTri(s: org.apache.spark.sql.SparkSession,
                      d: String): org.apache.spark.sql.DataFrame =
     graft.core.Memo.dataFrame(s, s"cov_tri:$d") {
@@ -781,7 +782,7 @@ object AnnQueries extends Registry {
           .groupBy(col("src").as("vec_id"), col("l"))
           .agg(sum(col("sim_bp") * col("w")).as("w"))
         // acc is referenced twice (rescale + product) — truncate lineage
-        // per step like embed_pca_power, or the plan doubles per iteration
+        // per step, or the plan doubles per iteration
         val acc = diff.unionByName(seeds)
           .groupBy("vec_id", "l").agg(sum("w").as("w"))
           // lazy (r15): the rescale aggregate and the next step are
@@ -885,51 +886,14 @@ object AnnQueries extends Registry {
     // whitening / PCA-pruning / drift monitors, made oracle-checkable:
     // every iterate is exact integer arithmetic (matrix-vector products
     // over the micro-unit covariance, then a sign-split truncating
-    // rescale back to ~1e6 max — sign-split because Spark DIV truncates
-    // toward zero while DuckDB // floors, and the two disagree on
-    // negatives). 6 fixed iterations from the all-ones vector is a
-    // deterministic function, not a convergence loop, so both engines
-    // produce the identical vector. At 100 TB the heavy part is the
-    // covariance reduction (embed_covariance); the 64x64 iteration
-    // itself is trivially small — production would collect it to the
-    // driver, the declarative form here is what makes it replayable.
-    "embed_pca_power" -> ((s, d) => {
-      val tri = covTri(s, d)
-        .select(col("dim_a"), col("dim_b"), col("cov_u").as("a"))
-      // localCheckpoint the 64x64 matrix and each 64-row iterate: u is
-      // referenced twice per step (by the rescale and the product), so
-      // without truncation the lineage doubles every iteration and v6's
-      // plan would re-derive the covariance reduction ~2^6 times
-      // (measured 11.4 s at sf0.1; ~1 s truncated)
-      val full = tri.select(col("dim_a").as("i"), col("dim_b").as("j"),
-          col("a"))
-        .unionByName(tri.filter(col("dim_a") =!= col("dim_b"))
-          .select(col("dim_b").as("i"), col("dim_a").as("j"), col("a")))
-        .localCheckpoint()
-      // iterate at max |v| ~ 1e5, not 1e6: u_i sums 64 terms of
-      // |a|*|v| <= ~1e12 * 1e5, keeping the worst case inside Long.
-      // greatest(s, 1): an all-zero matrix (constant embeddings) makes
-      // max|u| = 0 and s would be 0 — Spark DIV 0 yields NULL while
-      // DuckDB // 0 errors, so both sides clamp to 1 and return the
-      // zero vector instead of diverging
-      val v0 = full.select(col("i").as("dim")).distinct()
-        .select(col("dim"), lit(100000L).as("v"))
-      val vK = (1 to 6).foldLeft(v0) { (v, _) =>
-        val u = full.join(v.select(col("dim").as("jd"), col("v")),
-            col("j") === col("jd"))
-          .groupBy("i").agg(sum(col("a") * col("v")).as("u"))
-          .localCheckpoint(false)
-        val scale = u.agg(max(abs(col("u"))).as("m"))
-          .select(expr(
-            "CAST(greatest((m + 99999) DIV 100000, 1) AS BIGINT)").as("s"))
-        u.crossJoin(scale)
-          .select(col("i").as("dim"),
-            expr("CASE WHEN u < 0 THEN -(CAST(abs(u) AS BIGINT) DIV s) " +
-              "ELSE CAST(u AS BIGINT) DIV s END").as("v"))
-      }
-      vK.select(col("dim").cast("long").as("dim"), col("v"))
-        .orderBy("dim")
-    }),
+    // rescale back to ~1e5 max). 6 fixed iterations from a constant
+    // vector is a deterministic function, not a convergence loop. The
+    // heavy part is the covariance reduction, shared with
+    // embed_covariance via the covTri memo and collected once (64x64);
+    // the iteration runs on the driver (Ann.pcaPower). The DuckDB
+    // oracle unrolls the six steps as CTEs, which is what makes the
+    // result replayable.
+    "embed_pca_power" -> ((s, d) => Ann.pcaPower(covTri(s, d), iters = 6)),
 
     // Int8 quantization summarized per vector in integers (scale in
     // micro-units, sum/min/max of the quantized codes) — the oracle
@@ -1162,12 +1126,12 @@ object AnnQueries extends Registry {
         covTri = Some(covTri(s, d)))
     }
 
-  /** Six unrolled power-iteration steps as CTEs (the Spark side is the
-    * same fixed-step fold). Sign-split `//` keeps division semantics
-    * identical (Spark DIV truncates, DuckDB // floors — operands here
-    * are always non-negative). Sums are cast back to BIGINT because
-    * DuckDB widens sum(BIGINT) to HUGEINT, which pandas would render
-    * as float and break the value-hash compare. */
+  /** Six unrolled power-iteration steps as CTEs (the independent replay
+    * of the driver kernel Ann.pcaPower). Sign-split `//` keeps division
+    * semantics identical (the kernel truncates, DuckDB // floors —
+    * operands here are always non-negative). Sums are cast back to
+    * BIGINT because DuckDB widens sum(BIGINT) to HUGEINT, which pandas
+    * would render as float and break the value-hash compare. */
   private val pcaPowerSql: String = {
     val base =
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
@@ -1305,9 +1269,9 @@ object AnnQueries extends Registry {
 
   /** Shared CTE prefix of the linear-probe oracles: labeled micro-unit
     * coords, covariance matrix DIV 100 (sign-split — DuckDB // floors,
-    * Spark DIV truncates), cross-covariance, Gershgorin bound, and the 8
-    * unrolled Richardson steps (the Spark side is the same fixed-step
-    * fold in Ann.linearProbe). Sums cast back to BIGINT for the
+    * the kernel truncates), cross-covariance, Gershgorin bound, and the 8
+    * unrolled Richardson steps (the independent replay of the driver
+    * kernel in Ann.linearProbe). Sums cast back to BIGINT for the
     * HUGEINT/pandas reason documented on pcaPowerSql. */
   private val probeCtes: String = {
     val base =
