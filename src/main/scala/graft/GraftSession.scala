@@ -21,6 +21,16 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       // events.parquet carries INT64 TIMESTAMP(NANOS); see Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // ObjectHashAggregate falls back to SORT-BASED aggregation past this
+      // many distinct groups per partition (Spark default: 128). The
+      // k-bounded TopKAgg tails group by query id — thousands of tiny
+      // k-bounded buffers — and at 128 the fallback SORTED the whole
+      // 160M-row pair stream (measured: 8-14 GB spill, >90% of the deep
+      // rung chain-serve wall time). 65536 keeps k-bounded aggs on the
+      // hash path while wide-group object aggs (collect_list over a
+      // corpus-wide key) still fall back to the spill-protected sort.
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+        65536)
       // build-time injection puts PruneAsOfPayload in the operator-
       // optimization fixed-point (the inserted Project is itself pruned
       // into the scan) instead of the end-of-batch experimental slot.

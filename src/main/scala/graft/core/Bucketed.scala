@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.shims
 
 /** Bucketed-table copies of the fact tables, co-bucketed on the join key.
   *
@@ -27,21 +28,22 @@ object Bucketed {
 
   /** (lineitem, orders) bucketed+sorted on their orderkey.
     *
-    * Table names carry a per-process AND per-session nonce: the copies
-    * are throwaway layout artifacts, and concurrent JVMs sharing one
-    * spark-warehouse (two bench runs overlapping) must never contend on
-    * the same DROP + directory-delete + CTAS sequence — that race is
-    * not atomic and errored a bench run in round 11. Distinct names
+    * Table names carry a per-process AND per-session nonce (pid and
+    * session UUID): the copies are throwaway layout artifacts, and
+    * concurrent JVMs sharing one spark-warehouse (two bench runs
+    * overlapping) must never contend on the same DROP +
+    * directory-delete + CTAS sequence — that race is not atomic and
+    * errored a bench run in round 11. Distinct names
     * make each writer's sequence private; stale copies from DEAD
     * processes are swept opportunistically (liveness-checked, so a
     * concurrent live JVM's tables are never touched). */
-  def lineitemOrders(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val nonce = s"p${ProcessHandle.current().pid()}" +
-      s"_s${Integer.toHexString(System.identityHashCode(s))}"
-    val lTab = s"graft_lineitem_bkt${sfx}_$nonce"
-    val oTab = s"graft_orders_bkt${sfx}_$nonce"
-    Memo.once(s, s"bucketed_lineitem_orders:$d") {
+  def lineitemOrders(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    Memo.value(s, s"bucketed_lineitem_orders:$d") {
+      val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
+      val nonce = s"p${ProcessHandle.current().pid()}" +
+        s"_s${shims.sessionUUID(s).replace("-", "")}"
+      val lTab = s"graft_lineitem_bkt${sfx}_$nonce"
+      val oTab = s"graft_orders_bkt${sfx}_$nonce"
       // a crashed run of THIS process identity may have left the managed
       // location on disk while this session's in-memory catalog has no
       // such table — Spark then refuses the CTAS with
@@ -62,9 +64,8 @@ object Bucketed {
       Tables.orders(s, d).write.format("parquet")
         .bucketBy(Buckets, "o_orderkey").sortBy("o_orderkey")
         .saveAsTable(oTab)
+      (s.table(lTab), s.table(oTab))
     }
-    (s.table(lTab), s.table(oTab))
-  }
 
   private val NoncedDir =
     """graft_(?:lineitem|orders)_bkt.*_p(\d+)_s[0-9a-f]+""".r

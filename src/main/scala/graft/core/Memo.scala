@@ -1,11 +1,14 @@
 package graft.core
 
-import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.graft.shims
 
-/** Session-scoped materialization memo for intermediate relations several
-  * registered queries share.
+/** Session-scoped memo for what several registered queries share: one
+  * store, one entry point ([[value]]), entries keyed by
+  * (session UUID, key).
   *
   * The dedup family (`dedup_ngram_jaccard`, `dedup_components`,
   * `dedup_cluster_sizes`, `dedup_keep_representatives`,
@@ -13,13 +16,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * prefix-filter candidate pipeline — by far the most expensive plan in
   * the registry. Re-deriving it per query is pure waste: the pair
   * relation is tiny (one row per near-dup pair) while the pipeline that
-  * produces it scans and shuffles the whole shingle index. The memo
+  * produces it scans and shuffles the whole shingle index. [[dataFrame]]
   * materializes it once per (session, key) via `localCheckpoint` and
-  * hands every later query the truncated-lineage handle.
+  * hands every later query the truncated-lineage handle. The same store
+  * holds driver-side index metadata (the det-IVF plane kernel) and the
+  * handles of one-time layout writes (bucketed and day-partitioned
+  * copies, the served ANN index store).
   *
-  * Keys embed every parameter the relation depends on (table dir, n,
-  * threshold); entries are keyed by session identity so independent test
-  * sessions never see another session's RDD handles.
+  * Keys embed every parameter the entry depends on (table dir, n,
+  * threshold). The session part is Spark's session UUID, never reused,
+  * so a session never sees another session's RDD handles and a new
+  * session never inherits a stopped one's dead handles or skipped
+  * setup.
+  *
+  * Concurrency: the map's monitor guards only map operations; a build
+  * runs under its own entry's latch. Two callers of one key build it
+  * once, callers of other keys never wait on it, and nested builds of
+  * different keys (`shingle_prefix` → `shingle_idx`) follow the
+  * acyclic dependency order, so they cannot deadlock. A build that
+  * throws leaves no entry; the next call rebuilds.
   *
   * 100 TB note: `localCheckpoint` stores blocks on the executors that
   * computed them (lost on executor failure — Spark recomputes, which at
@@ -32,90 +47,73 @@ object Memo {
 
   /** Cap on live memo entries: a long-lived session touching many
     * (table, parameter) combinations must not pin executor block-store
-    * memory without bound. Eviction drops the oldest-touched handle; the
-    * checkpointed blocks behind it are reclaimed asynchronously by
-    * Spark's ContextCleaner once the RDD is unreferenced (there is no
-    * synchronous free for localCheckpoint blocks). 64 entries is ~10x
-    * the registry's working set. */
+    * memory without bound. Eviction drops the oldest-touched entry; the
+    * checkpointed blocks behind a DataFrame handle are reclaimed
+    * asynchronously by Spark's ContextCleaner once the RDD is
+    * unreferenced (there is no synchronous free for localCheckpoint
+    * blocks). A full `graft.Verify` leaves 25 entries for its one
+    * table dir (sf0.001 and sf0.01 alike), so 64 keeps two dirs'
+    * working sets resident. */
   private[core] val MaxEntries = 64
 
-  // access-ordered LinkedHashMap = LRU; all access under `cache`'s lock.
-  // The lock is NOT cheap: under AQE, `localCheckpoint(eager = false)`
-  // runs the build's shuffle stages right away, so Spark jobs execute
-  // while it is held (embed_covariance's triangle: 4 jobs). A per-key
-  // latch instead of this global lock is ROADMAP direction 3.
-  private val cache =
-    new java.util.LinkedHashMap[(Int, String), DataFrame](16, 0.75f, true) {
+  /** One entry; its monitor is the key's latch. `v` is written once,
+    * under the latch. */
+  private final class Cell { var v: Option[Any] = None }
+
+  // access-ordered LinkedHashMap = LRU. Its monitor is held only for map
+  // operations, never while a build runs: under AQE a build executes
+  // Spark jobs (a checkpoint runs the plan's shuffle stages, a value
+  // build collects), and those must not block other keys.
+  private val cells =
+    new java.util.LinkedHashMap[(String, String), Cell](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, String), DataFrame]): Boolean =
+          e: java.util.Map.Entry[(String, String), Cell]): Boolean =
         size() > MaxEntries
     }
 
-  /** Materialize `build` once per (session, key) and reuse the handle. */
+  /** Build `build` once per (session, key) and reuse the result. Builds
+    * typically EXECUTE Spark jobs; only callers of the same key wait. */
+  def value[T](s: SparkSession, key: String)(build: => T): T = {
+    val k = (shims.sessionUUID(s), key)
+    val cell = cells.synchronized(cells.computeIfAbsent(k, _ => new Cell))
+    cell.synchronized {
+      if (cell.v.isEmpty)
+        try cell.v = Some(build)
+        catch {
+          case e: Throwable =>
+            cells.synchronized(cells.remove(k, cell))
+            throw e
+        }
+      cell.v.get.asInstanceOf[T]
+    }
+  }
+
+  /** [[value]] for a relation: materialized with a lazy
+    * `localCheckpoint`, the one memo boundary. A root global `Sort` is
+    * dropped first: inside a larger fused plan the optimizer removes a
+    * sort its consumer does not need, but a checkpoint EXECUTES it —
+    * the range-partition sampling pass recomputes the whole child.
+    * Operators therefore always return their total order, and
+    * order-sensitive memo consumers re-sort the (small) result. */
   def dataFrame(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    cache.synchronized {
-      val k = (System.identityHashCode(s), key)
-      val hit = cache.get(k)
-      if (hit != null) hit
-      else {
-        val df = build.localCheckpoint(eager = false)
-        cache.put(k, df)
-        df
+    value(s, key) {
+      val df = build
+      val unsorted = shims.analyzed(df) match {
+        case sort: Sort if sort.global => shims.ofRows(s, sort.child)
+        case _ => df
       }
+      unsorted.localCheckpoint(eager = false)
     }
 
-  private[core] def liveEntries: Int = cache.synchronized(cache.size())
-
-  /** Session-keyed DRIVER-SIDE object memo for collected index metadata
-    * (e.g. the det-IVF centroid plane kernel — a few KB of longs): the
-    * ANN det families re-collected the same plane per query, paying the
-    * aggregation job + driver round trip each time. Same lifecycle and
-    * anti-gaming contract as the DataFrame memo: session-scoped, never
-    * persisted across JVMs, enumerated by [[keys]] and evicted by
-    * [[clearKeys]] so Bench's outlier/min-of-2 reruns re-measure
-    * memo-building queries cold. */
-  private val values =
-    new java.util.LinkedHashMap[(Int, String), Any](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, String), Any]): Boolean =
-        size() > MaxEntries
-    }
-
-  /** NOTE: like [[dataFrame]] (whose checkpoint runs the build's
-    * shuffle stages under AQE), a value build typically EXECUTES Spark
-    * jobs (an aggregation + collect). The lock is held across the
-    * build — the single-threaded Bench/Verify drivers never contend,
-    * and holding it keeps the build exactly-once; a concurrent caller
-    * of a DIFFERENT key waits rather than double-building (the lock is
-    * reentrant, so nested memo builds are fine). Replacing both global
-    * locks with a per-key latch is ROADMAP direction 3. */
-  def value[T](s: SparkSession, key: String)(build: => T): T =
-    values.synchronized {
-      val k = (System.identityHashCode(s), key)
-      val hit = values.get(k)
-      if (hit != null) hit.asInstanceOf[T]
-      else {
-        val v = build
-        values.put(k, v)
-        v
-      }
-    }
+  private[core] def liveEntries: Int = cells.synchronized(cells.size())
 
   /** Keys currently memoized for `s` (Bench snapshots these around each
-    * timed query to find what the query built) — BOTH memo kinds, so a
-    * retried query's plane-kernel builds are evicted exactly like its
-    * DataFrame builds. */
+    * timed query to find what the query built). */
   def keys(s: SparkSession): Set[String] = {
-    val sid = System.identityHashCode(s)
-    val a = cache.synchronized {
-      scala.jdk.CollectionConverters.SetHasAsScala(cache.keySet()).asScala
-        .collect { case (`sid`, k) => k }.toSet
+    val sid = shims.sessionUUID(s)
+    cells.synchronized {
+      cells.keySet().asScala.collect { case (`sid`, k) => k }.toSet
     }
-    val b = values.synchronized {
-      scala.jdk.CollectionConverters.SetHasAsScala(values.keySet()).asScala
-        .collect { case (`sid`, k) => k }.toSet
-    }
-    a ++ b
   }
 
   /** Drop exactly `which` for `s` — Bench's outlier retry clears only
@@ -127,19 +125,7 @@ object Memo {
     * reclaimed asynchronously by the ContextCleaner once
     * unreferenced. */
   def clearKeys(s: SparkSession, which: Set[String]): Unit = {
-    val sid = System.identityHashCode(s)
-    cache.synchronized {
-      which.foreach(k => cache.remove((sid, k)))
-    }
-    values.synchronized {
-      which.foreach(k => values.remove((sid, k)))
-    }
+    val sid = shims.sessionUUID(s)
+    cells.synchronized(which.foreach(k => cells.remove((sid, k))))
   }
-
-  private val done = TrieMap.empty[(Int, String), Unit]
-
-  /** Run a side-effecting setup (e.g. writing a bucketed table copy) once
-    * per (session, key). */
-  def once(s: SparkSession, key: String)(body: => Unit): Unit =
-    done.getOrElseUpdate((System.identityHashCode(s), key), body)
 }

@@ -24,17 +24,15 @@ import org.apache.spark.sql.functions._
 object Partitioned {
 
   /** Events with a `day` partition column (= to_date(ts)). */
-  def eventsByDay(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val tab = s"graft_events_day$sfx"
-    Memo.once(s, s"partitioned_events:$d") {
+  def eventsByDay(s: SparkSession, d: String): DataFrame =
+    Memo.value(s, s"partitioned_events:$d") {
+      val tab = s"graft_events_day${d.replaceAll("[^A-Za-z0-9]", "_")}"
       s.sql(s"DROP TABLE IF EXISTS $tab")
       val wh = s.sessionState.conf.warehousePath
       val p = new org.apache.hadoop.fs.Path(s"$wh/$tab")
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       Tables.events(s, d).withColumn("day", to_date(col("ts")))
         .write.format("parquet").partitionBy("day").saveAsTable(tab)
+      s.table(tab)
     }
-    s.table(tab)
-  }
 }

@@ -67,16 +67,14 @@ object Ann {
     * Similarities rank in basis points (round(sim·10000), integer) so
     * the ordering replays exactly in any engine; ties resolve to the
     * smaller neighbor id. Output: (vec_id, rank 1..k, sim_bp,
-    * neighbor_id), total order when `totalOrder` (the default);
-    * unordered otherwise (memo/materialization consumers re-sort the
-    * k-bounded result). */
+    * neighbor_id), in total order. */
   def knnGraph(embs: DataFrame, idCol: String, vecCol: String, k: Int,
-               blocks: Int = 0, totalOrder: Boolean = true): DataFrame = {
+               blocks: Int = 0): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val pairs = Dedup.blockPairSims(embs, idCol, vecCol, blocks)
       .select(col("id_a"), col("id_b"),
         round(col("sim") * 10000).cast("long").as("sim_bp"))
-    mirroredTopK(pairs, k, totalOrder)
+    mirroredTopK(pairs, k)
   }
 
   /** The shared kNN-graph reduction: mirror each undirected scored pair
@@ -86,27 +84,21 @@ object Ann {
     * [[graft.functions.CraneAggregators.TopKByScore]] partial
     * aggregate — at most k entries per (node, map partition) cross the
     * aggregation shuffle, never the pair relation itself. */
-  /** `totalOrder = false` skips the final global sort (see
-    * [[Corpus.bm25Retrieve]]: a checkpoint boundary would execute the
-    * range-partition sampling pass, recomputing the whole pair
-    * pipeline; consumers that need the total order re-apply it over
-    * the tiny k-bounded result). */
-  private def mirroredTopK(pairs: DataFrame, k: Int,
-                           totalOrder: Boolean = true): DataFrame = {
+  private def mirroredTopK(pairs: DataFrame, k: Int): DataFrame = {
     val dir = pairs.select(explode(array(
         struct(col("id_a").as("src"), col("sim_bp"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("sim_bp"), col("id_a").as("dst"))))
         .as("e"))
       .select(col("e.src").as("src"), col("e.sim_bp").as("sim_bp"),
         col("e.dst").as("dst"))
-    val ranked = dir.groupBy("src")
+    dir.groupBy("src")
       .agg(graft.functions.TopKAgg
         .topk_longs(col("sim_bp"), col("dst"), k).as("nn"))
       .select(col("src"), posexplode(col("nn")))
       .select(col("src").as("vec_id"),
         (col("pos") + 1).cast("long").as("rank"),
         col("col._1").as("sim_bp"), col("col._2").as("neighbor_id"))
-    if (totalOrder) ranked.orderBy("vec_id", "rank") else ranked
+      .orderBy("vec_id", "rank")
   }
 
   /** Approximate kNN graph — [[knnGraph]]'s 100 TB path: candidate pairs
@@ -127,7 +119,7 @@ object Ann {
     * empty) and a node may carry fewer than k rows. */
   def knnGraphLsh(embs: DataFrame, idCol: String, vecCol: String, k: Int,
                   bits: Int = 4, tables: Int = 16, dim: Int = -1,
-                  seed: Long = 42L, totalOrder: Boolean = true): DataFrame = {
+                  seed: Long = 42L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val v = spread(embs).select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
@@ -135,7 +127,7 @@ object Ann {
       .select(col("id_a"), col("id_b"),
         round(HashExprs.cosine_sim(col("va"), col("vb")) * 10000)
           .cast("long").as("sim_bp"))
-    mirroredTopK(pairs, k, totalOrder)
+    mirroredTopK(pairs, k)
   }
 
   /** [[knnGraphLsh]]'s deterministic twin and the DEFAULT registered
@@ -151,15 +143,14 @@ object Ann {
     * hyperplane family (Charikar 2002 needs only symmetric random
     * directions), and md5 bits are as good as a seeded PRNG. */
   def knnGraphLshDet(embs: DataFrame, idCol: String, vecCol: String,
-                     k: Int, bits: Int, tables: Int = 16,
-                     totalOrder: Boolean = true): DataFrame = {
+                     k: Int, bits: Int, tables: Int = 16): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val v = spread(embs).select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
     val pairs = lshDetPairSims(v, bits, tables)
       .select(col("id_a"), col("id_b"),
         round(col("sim") * 10000).cast("long").as("sim_bp"))
-    mirroredTopK(pairs, k, totalOrder)
+    mirroredTopK(pairs, k)
   }
 
   /** Per-(vector, table) det-LSH bucket assignment over (id, v):

@@ -424,30 +424,20 @@ object Corpus {
     * it isn't, so no plan hint can OOM the driver at 100× the data.
     * Only the 1-row corpus-stats relation is hint-broadcast.
     *
-    * Output: (query_id, rank 1..k, doc_id, score_u), total order when
-    * `totalOrder` (the default); unordered otherwise (memo consumers
-    * re-sort the k-bounded result). */
+    * Output: (query_id, rank 1..k, doc_id, score_u), in total order. */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
-               k: Int = 5, evalMod: Int = 20,
-               totalOrder: Boolean = true): DataFrame =
+               k: Int = 5, evalMod: Int = 20): DataFrame =
     bm25Retrieve(
       docs.filter(col(idCol) % evalMod =!= 0), idCol, textCol,
-      docs.filter(col(idCol) % evalMod === 0), idCol, textCol, k,
-      totalOrder)
+      docs.filter(col(idCol) % evalMod === 0), idCol, textCol, k)
 
   /** The general form of [[bm25TopK]]: any (id, text) corpus searched by
     * any (id, text) query set — e.g. whole-document queries over a
     * CHUNKED corpus, the RAG retrieval shape. Scale/parity notes above
     * apply unchanged. */
-  /** `totalOrder = false` skips the final global sort: a consumer that
-    * feeds the ranked rows into further relational work (or a
-    * materialization point like the session memo) does not need it, and
-    * while the optimizer's EliminateSorts removes the sort inside a
-    * larger fused plan, a checkpoint boundary would EXECUTE it — paying
-    * the range-partition sampling pass, which recomputes the child. */
   def bm25Retrieve(corpus: DataFrame, idCol: String, textCol: String,
                    queries: DataFrame, qidCol: String, qtextCol: String,
-                   k: Int, totalOrder: Boolean = true): DataFrame = {
+                   k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val train = corpus
       .select(col(idCol).as("doc_id"),
@@ -490,13 +480,13 @@ object Corpus {
         col("doc_id"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("score_u").desc, col("doc_id").asc)
-    val ranked = contribDt.join(qterms, "term")
+    contribDt.join(qterms, "term")
       .groupBy("query_id", "doc_id")
       .agg(sum("c_u").as("score_u"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("doc_id"), col("score_u"))
-    if (totalOrder) ranked.orderBy("query_id", "rank") else ranked
+      .orderBy("query_id", "rank")
   }
 
   /** Deterministic MIXED-SCRIPT corpus derived from an ASCII corpus:

@@ -185,8 +185,7 @@ object Dedup {
   /** [[ngramJaccardPairs]] over a prebuilt [[shingleIndex]] (and
     * optionally a prebuilt [[shinglePrefix]] at the SAME threshold). */
   def ngramJaccardPairsIdx(inv: DataFrame, thresholdBp: Int,
-                           prebuiltPrefix: Option[DataFrame] = None,
-                           totalOrder: Boolean = true)
+                           prebuiltPrefix: Option[DataFrame] = None)
       : DataFrame = {
     val sizes = inv.select("doc_id", "nsh").distinct()
     val prefix = prebuiltPrefix.getOrElse(shinglePrefix(inv, thresholdBp))
@@ -196,7 +195,7 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
     verifyJaccard(candidates, inv.select("doc_id", "shingle"),
-      sizes, thresholdBp, totalOrder)
+      sizes, thresholdBp)
   }
 
   /** Exact-Jaccard verification of candidate pairs; shared by the
@@ -209,14 +208,9 @@ object Dedup {
     * pairs; the previous form joined full array<string> shingle sets onto
     * every candidate row — at 100 TB that shuffles every document's
     * shingle set once per candidate pair it appears in. */
-  /** `totalOrder = false` skips the final global sort — the
-    * bm25Retrieve/mirroredTopK memo-boundary rationale: a checkpoint
-    * executes the sort's range-sampling pass that fused plans
-    * eliminate; ordered consumers re-sort the tiny pair relation. */
   private def verifyJaccard(candidates: DataFrame, inv: DataFrame,
-                            sizes: DataFrame, thresholdBp: Int,
-                            totalOrder: Boolean = true): DataFrame = {
-    val verified = candidates
+                            sizes: DataFrame, thresholdBp: Int): DataFrame =
+    candidates
       .join(inv.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
       .join(inv.select(col("doc_id").as("doc_b"), col("shingle")),
         Seq("doc_b", "shingle"))
@@ -228,8 +222,7 @@ object Dedup {
       .filter(col("inter") * 10000 >= col("union_sz") * thresholdBp)
       .withColumn("jac_bp", expr("CAST(10000 * inter AS BIGINT) DIV union_sz"))
       .select("doc_a", "doc_b", "jac_bp")
-    if (totalOrder) verified.orderBy("doc_a", "doc_b") else verified
-  }
+      .orderBy("doc_a", "doc_b")
 
   /** MinHash+LSH near-dup pairs, verified with exact Jaccard (so output is
     * a subset of ngramJaccardPairs; LSH only prunes candidates). */
@@ -289,8 +282,8 @@ object Dedup {
     * candidate pairs x numPerms. No stage sees an all-pairs relation. */
   def minhashDetPairs(docs: DataFrame, idCol: String, textCol: String,
                       n: Int, numPerms: Int, rowsPerBand: Int,
-                      prebuiltPostings: Option[DataFrame] = None,
-                      totalOrder: Boolean = true): DataFrame = {
+                      prebuiltPostings: Option[DataFrame] = None)
+      : DataFrame = {
     require(numPerms % rowsPerBand == 0, "rowsPerBand must divide numPerms")
     require(10000 % numPerms == 0,
       s"numPerms must divide 10000 for exact integer basis points")
@@ -321,7 +314,7 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("bands_hit"))
-    val est = cand
+    cand
       .join(mh.select(col("doc_id").as("doc_a"), col("p"),
         col("mh").as("mha")), "doc_a")
       .join(mh.select(col("doc_id").as("doc_b"), col("p"),
@@ -330,7 +323,7 @@ object Dedup {
       .agg((sum(when(col("mha") === col("mhb"), 1L).otherwise(0L))
         * (10000 / numPerms)).cast("long").as("est_bp"))
       .select("doc_a", "doc_b", "bands_hit", "est_bp")
-    if (totalOrder) est.orderBy("doc_a", "doc_b") else est
+      .orderBy("doc_a", "doc_b")
   }
 
   /** SimHash with ENGINE-PORTABLE bits — the oracle-checkable twin of
@@ -385,8 +378,7 @@ object Dedup {
   def minhashLshDetPairs(docs: DataFrame, idCol: String, textCol: String,
                          n: Int, numPerms: Int, rowsPerBand: Int,
                          threshold: Double,
-                         prebuiltIndex: Option[DataFrame] = None,
-                         totalOrder: Boolean = true)
+                         prebuiltIndex: Option[DataFrame] = None)
       : DataFrame = {
     require(numPerms % rowsPerBand == 0, "rowsPerBand must divide numPerms")
     require(threshold > 0 && threshold <= 1, // see ngramJaccardPairs
@@ -409,7 +401,7 @@ object Dedup {
     }
     val (_, candidates) = minhashDetBandChain(sh, numPerms, rowsPerBand)
     val thresholdBp = math.round(threshold * 10000).toInt
-    verifyJaccard(candidates, sh, sizes, thresholdBp, totalOrder)
+    verifyJaccard(candidates, sh, sizes, thresholdBp)
   }
 
   /** The shared det-MinHash chain over an exploded (doc_id, shingle)
@@ -547,8 +539,7 @@ object Dedup {
     * signature as pure SQL-shaped dataflow and pins this kernel
     * against the oracle. */
   def simhashMd5Pairs(docs: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int,
-                      totalOrder: Boolean = true): DataFrame = {
+                      maxHamming: Int): DataFrame = {
     require(maxHamming <= 3, "4-band pigeonhole is exact only to Hamming 3")
     // token-less docs drop BEFORE signing: the kernel would give them
     // sig = 0, but the relational twin and the shared oracle explode
@@ -559,15 +550,14 @@ object Dedup {
         TF.tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"), HashExprs.simhash_md5_60(col("toks")).as("sig"))
-    simhashBandPairs(sigs, bandBits = 15, maxHamming, totalOrder)
+    simhashBandPairs(sigs, bandBits = 15, maxHamming)
   }
 
   /** Shared banded-pigeonhole pairing over a (doc_id, sig) signature
     * relation: 4 bands of `bandBits`, co-banded candidate self-join,
     * exact Hamming verify — exact to Hamming <= 3 by pigeonhole. */
   private def simhashBandPairs(sigs: DataFrame, bandBits: Int,
-                               maxHamming: Int,
-                               totalOrder: Boolean = true): DataFrame = {
+                               maxHamming: Int): DataFrame = {
     val mask = (1L << bandBits) - 1
     val bandStructs = (0 until 4).map(b =>
       struct(lit(b).as("band"),
@@ -576,7 +566,7 @@ object Dedup {
     val banded = sigs.select(col("doc_id"), col("sig"),
         explode(array(bandStructs: _*)).as("bk"))
       .select(col("doc_id"), col("sig"), col("bk.band"), col("bk.bv"))
-    val pairs = banded.as("a")
+    banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -586,7 +576,7 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .select(col("doc_a"), col("doc_b"),
         col("hamming").cast("long").as("hamming"))
-    if (totalOrder) pairs.orderBy("doc_a", "doc_b") else pairs
+      .orderBy("doc_a", "doc_b")
   }
 
   /** Benchmark decontamination: flag every candidate document sharing at

@@ -50,42 +50,34 @@ object DedupQueries extends Registry {
   private def minhashDet(s: SparkSession, d: String): DataFrame =
     Memo.dataFrame(s, s"minhash_det:$d:n=3:p=16:b=4") {
       // postings from the session-memoized shingle index (one shingling
-      // pass per session, not one per sketch family); unsorted behind
-      // the memo — the checkpoint boundary would execute the total
-      // sort's range-sampling pass (r15 pattern), so the one
-      // order-sensitive consumer re-sorts the tiny pair relation
+      // pass per session, not one per sketch family)
       Dedup.minhashDetPairs(Tables.documents(s, d), "doc_id", "text",
         n = 3, numPerms = 16, rowsPerBand = 4,
-        prebuiltPostings = Some(shingleIdx(s, d)), totalOrder = false)
+        prebuiltPostings = Some(shingleIdx(s, d)))
     }
 
   /** The banded det-MinHash-LSH pair relation (32 perms, 8 bands) and
     * the det-SimHash pair relation, each memoized per (session, dir):
     * both are consumed by their registered standalone query AND by
     * dedup_method_agreement (which references its 3-method union
-    * twice), so each pipeline runs once per session instead of 2-3×.
-    * Unsorted behind the memo (r15 boundary rule); ordered consumers
-    * re-sort the tiny pair relations. */
+    * twice), so each pipeline runs once per session instead of 2-3×. */
   private def minhashLshPairs(s: SparkSession, d: String): DataFrame =
     Memo.dataFrame(s, s"minhash_lsh_pairs:$d:n=3:p=32:b=8:thr=0.8") {
       Dedup.minhashLshDetPairs(Tables.documents(s, d), "doc_id", "text",
         n = 3, numPerms = 32, rowsPerBand = 4, threshold = 0.8,
-        prebuiltIndex = Some(shingleIdx(s, d)), totalOrder = false)
+        prebuiltIndex = Some(shingleIdx(s, d)))
     }
 
   private def simhashMd5Pairs(s: SparkSession, d: String): DataFrame =
     Memo.dataFrame(s, s"simhash_md5_pairs:$d:h=3") {
       Dedup.simhashMd5Pairs(Tables.documents(s, d), "doc_id", "text",
-        maxHamming = 3, totalOrder = false)
+        maxHamming = 3)
     }
 
   private def jaccardPairs(s: SparkSession, d: String): DataFrame =
     Memo.dataFrame(s, s"jaccard_pairs:$d:n=3:thr=0.8") {
-      // unsorted behind the memo (r15): the checkpoint boundary would
-      // execute the final total sort's range-sampling pass; the one
-      // order-sensitive consumer re-sorts the tiny pair relation
       Dedup.ngramJaccardPairsIdx(shingleIdx(s, d), thresholdBp = 8000,
-        prebuiltPrefix = Some(prefix08(s, d)), totalOrder = false)
+        prebuiltPrefix = Some(prefix08(s, d)))
     }
 
   /** Connected-component labels over the full-corpus pair relation,
@@ -157,7 +149,7 @@ object DedupQueries extends Registry {
     // bit-for-bit in DuckDB (dedup_minhash_lsh's seeded in-JVM hashes
     // are the faster engine path; this one proves the banded-LSH
     // semantics end-to-end against SQL).
-    // re-sorts the memo's unsorted pair relation (tiny; see minhashDet)
+    // re-sorts the memo's unsorted pair relation (tiny; see Memo.dataFrame)
     "dedup_minhash_det" -> ((s, d) =>
       minhashDet(s, d).orderBy("doc_a", "doc_b")),
 
@@ -326,7 +318,7 @@ object DedupQueries extends Registry {
       Dedup.containmentPairsIdx(shingleIdx(s, d), thresholdBp = 8000,
         prebuiltPrefix = Some(prefix08(s, d)))),
 
-    "dedup_components" -> ((s, d) => jaccardComps(s, d)),
+    "dedup_components" -> ((s, d) => jaccardComps(s, d).orderBy("doc_id")),
 
     // The business readout of the whole dedup pipeline: per-source
     // kept/dropped docs and tokens under keep-the-representative

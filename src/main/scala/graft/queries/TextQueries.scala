@@ -31,8 +31,7 @@ object TextQueries extends Registry {
   private def bm25Top20(s: org.apache.spark.sql.SparkSession,
                         d: String): org.apache.spark.sql.DataFrame =
     graft.core.Memo.dataFrame(s, s"bm25_top20:$d") {
-      Corpus.bm25TopK(Tables.documents(s, d), "doc_id", "text", k = 20,
-        totalOrder = false)
+      Corpus.bm25TopK(Tables.documents(s, d), "doc_id", "text", k = 20)
     }
 
   val defs: Map[String, QueryFn] = Map(

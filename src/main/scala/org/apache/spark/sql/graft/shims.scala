@@ -15,6 +15,8 @@ import org.apache.spark.sql.execution.SparkStrategy
 object shims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  def sessionUUID(spark: SparkSession): String =
+    spark.asInstanceOf[classic.SparkSession].sessionUUID
 
   /** Lift a custom LogicalPlan into a DataFrame (Dataset.ofRows is
     * private[sql]); the plan goes through full analysis/optimization. */

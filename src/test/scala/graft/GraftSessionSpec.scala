@@ -17,6 +17,9 @@ class GraftSessionSpec extends SparkSpec {
     spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") shouldBe "true"
     spark.sparkContext.master shouldBe "local[4]"
     spark.conf.get("spark.sql.shuffle.partitions") shouldBe "4"
+    spark.conf.get(
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold") shouldBe
+      "65536"
     val state = spark.asInstanceOf[classic.SparkSession].sessionState
     state.planner.extraPlanningStrategies should contain(AsOfJoinStrategy)
     state.optimizer.extendedOperatorOptimizationRules should contain(
@@ -32,5 +35,19 @@ class GraftSessionSpec extends SparkSpec {
         .map(_.getFileName.toString)
     }
     builders shouldBe Seq("GraftSession.scala")
+  }
+
+  test("src/main shares through Memo.value alone") {
+    // one memo keyed by session UUID, one memo boundary that drops the
+    // root sort: no identity-hash keys, sort flags or side-channel maps
+    val banned = Seq("System.identityHashCode", "totalOrder", "Memo.once",
+      "TrieMap")
+    val hits = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = Files.readString(p)
+        banned.filter(src.contains).map(b => s"${p.getFileName}: $b")
+      }.toSeq
+    hits shouldBe empty
   }
 }

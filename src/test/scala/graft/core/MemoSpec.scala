@@ -1,16 +1,37 @@
 package graft.core
 
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkSpec
 
-/** core.Memo: the session-scoped materialization the dedup/ANN families
-  * lean on. The contract under test: one build per (session, key),
-  * result identity with the un-memoized plan, and key isolation.
+/** core.Memo: the session-scoped memo the dedup/ANN families lean on.
+  * The contract under test: one build per (session, key), also under
+  * concurrent callers; result identity with the un-memoized plan; key
+  * and session isolation; builds of different keys never wait on each
+  * other; a failed build leaves nothing behind. A stopped session's
+  * entries cannot leak into a new one because keys carry the session
+  * UUID, which Spark never reuses (the shared test JVM keeps one live
+  * context, so stop-then-new is not exercised here).
   */
-class MemoSpec extends SparkSpec {
+class MemoSpec extends SparkSpec with BeforeAndAfterAll {
+
+  // concurrent cases block on latches: own threads, not the global pool
+  private val pool = Executors.newFixedThreadPool(4)
+  private implicit val ec: ExecutionContext =
+    ExecutionContext.fromExecutor(pool)
+
+  override def afterAll(): Unit = {
+    pool.shutdownNow()
+    super.afterAll()
+  }
 
   test("builds once per key and returns identical rows") {
     val builds = new AtomicInteger(0)
@@ -46,13 +67,80 @@ class MemoSpec extends SparkSpec {
     builds.get() shouldBe 2
   }
 
-  test("once() runs its body a single time per key") {
+  test("value() runs its body a single time per key") {
     val runs = new AtomicInteger(0)
-    Memo.once(spark, "memospec:once")(runs.incrementAndGet())
-    Memo.once(spark, "memospec:once")(runs.incrementAndGet())
+    Memo.value(spark, "memospec:once")(runs.incrementAndGet())
+    Memo.value(spark, "memospec:once")(runs.incrementAndGet())
     runs.get() shouldBe 1
-    Memo.once(spark, "memospec:once2")(runs.incrementAndGet())
+    Memo.value(spark, "memospec:once2")(runs.incrementAndGet())
     runs.get() shouldBe 2
+  }
+
+  test("two live sessions build one key apart; keys() lists only its own") {
+    val a = spark.newSession()
+    val b = spark.newSession()
+    val builds = new AtomicInteger(0)
+    def make(s: SparkSession) = Memo.dataFrame(s, "memospec:per-session") {
+      builds.incrementAndGet()
+      Tables.documents(s, sfDir).select("doc_id").limit(3)
+    }
+    val ha = make(a)
+    val hb = make(b)
+    builds.get() shouldBe 2
+    ha should not be theSameInstanceAs(hb)
+    make(a) should be theSameInstanceAs ha
+    builds.get() shouldBe 2
+    Memo.value(b, "memospec:b-only")(1)
+    Memo.keys(a) should contain("memospec:per-session")
+    Memo.keys(a) should not contain "memospec:b-only"
+    Memo.keys(b) should contain("memospec:b-only")
+  }
+
+  test("two threads asking for one key run the build once") {
+    val runs = new AtomicInteger(0)
+    val go = new CountDownLatch(1)
+    val got = (1 to 2).map(_ => Future {
+      go.await()
+      Memo.value(spark, "memospec:race") {
+        Thread.sleep(200) // hold the build open while the other arrives
+        runs.incrementAndGet()
+      }
+    })
+    go.countDown()
+    Await.result(Future.sequence(got), 60.seconds) shouldBe Seq(1, 1)
+    runs.get() shouldBe 1
+  }
+
+  test("a build does not block the build of another key") {
+    // A's build waits for B's, which runs in another thread: one global
+    // lock held across builds would keep B out until A gave up
+    val aBuilding = new CountDownLatch(1)
+    val bBuilt = new CountDownLatch(1)
+    val a = Future {
+      Memo.value(spark, "memospec:block-a") {
+        aBuilding.countDown()
+        bBuilt.await(30, TimeUnit.SECONDS)
+      }
+    }
+    val b = Future {
+      aBuilding.await()
+      Memo.value(spark, "memospec:block-b")("b")
+      bBuilt.countDown()
+    }
+    Await.result(b, 60.seconds)
+    Await.result(a, 60.seconds) shouldBe true
+  }
+
+  test("a throwing build leaves no entry and the next call rebuilds") {
+    val runs = new AtomicInteger(0)
+    an[IllegalStateException] should be thrownBy
+      Memo.value[Int](spark, "memospec:throws") {
+        runs.incrementAndGet()
+        throw new IllegalStateException("build failed")
+      }
+    Memo.keys(spark) should not contain "memospec:throws"
+    Memo.value(spark, "memospec:throws")(runs.incrementAndGet()) shouldBe 2
+    Memo.keys(spark) should contain("memospec:throws")
   }
 
   test("LRU eviction bounds live entries and rebuilds after eviction") {

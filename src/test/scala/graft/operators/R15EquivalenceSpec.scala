@@ -1,16 +1,25 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 
 /** r15 optimization-round equivalence pins: every operator whose
-  * INTERNALS changed this round (totalOrder flags on the memo-feeding
-  * builders, checkpoint placement in minhashLshPairs, the Long-sum
-  * cross-covariance in linearProbe) must produce bit-identical ROWS to
-  * its previous form — the round's contract is speed with unchanged
-  * results. The oracle sweeps check the registered compositions; these
+  * INTERNALS changed this round (memo-fed builders materialized without
+  * their root sort, checkpoint placement in minhashLshPairs, the
+  * Long-sum cross-covariance in linearProbe) must produce bit-identical
+  * ROWS to its previous form — the round's contract is speed with
+  * unchanged results. The oracle sweeps check the registered compositions; these
   * pin the operator-level invariants directly so a future refactor
   * cannot silently decouple them. */
 class R15EquivalenceSpec extends AnyFunSuite with SparkSpec {
@@ -33,28 +42,48 @@ class R15EquivalenceSpec extends AnyFunSuite with SparkSpec {
     }.toDF("vec_id", "embedding", "label")
   }
 
-  test("bm25TopK(totalOrder=false) is the same relation as the " +
-      "ordered form, and k=5 is the depth-20 ranking filtered") {
+  /** `df`'s rows as a set, read through the session memo under `key`,
+    * with the plan the memo materialized (captured from the checkpoint
+    * execution) asserted free of a global Sort. */
+  private def viaMemo(key: String)(df: => DataFrame): Set[Row] = {
+    val plans = new ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") plans.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val rows = graft.core.Memo.dataFrame(spark, s"r15spec:$key")(df)
+        .collect().toSet
+      BusDrain(spark.sparkContext)
+      assert(!plans.isEmpty)
+      plans.asScala.foreach(p =>
+        assert(p.collectFirst { case s: Sort if s.global => s }.isEmpty,
+          s"memo materialized a global sort:\n$p"))
+      rows
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("bm25TopK behind the memo is the ordered set; k=5 is depth-20") {
     val ordered = Corpus.bm25TopK(docs, "doc_id", "text", k = 20)
       .collect().toSet
-    val unordered = Corpus.bm25TopK(docs, "doc_id", "text", k = 20,
-      totalOrder = false).collect().toSet
-    assert(ordered === unordered)
+    val memoized = viaMemo("bm25")(
+      Corpus.bm25TopK(docs, "doc_id", "text", k = 20))
+    assert(ordered === memoized)
     val k5 = Corpus.bm25TopK(docs, "doc_id", "text", k = 5)
       .collect().toSet
-    val k5FromDepth20 = Corpus.bm25TopK(docs, "doc_id", "text", k = 20,
-      totalOrder = false).filter(col("rank") <= 5).collect().toSet
+    val k5FromDepth20 = memoized.filter(_.getAs[Int]("rank") <= 5)
     assert(k5 === k5FromDepth20)
   }
 
-  test("knnGraphLshDet(totalOrder=false) matches the ordered graph " +
-      "as a set") {
+  test("knnGraphLshDet behind the memo is the ordered graph as a set") {
     val bits = Ann.autoBitsExact(150L)
     val ordered = Ann.knnGraphLshDet(embs, "vec_id", "embedding",
       k = 3, bits = bits).collect().toSet
-    val unordered = Ann.knnGraphLshDet(embs, "vec_id", "embedding",
-      k = 3, bits = bits, totalOrder = false).collect().toSet
-    assert(ordered === unordered)
+    val memoized = viaMemo("knn")(Ann.knnGraphLshDet(embs, "vec_id",
+      "embedding", k = 3, bits = bits))
+    assert(ordered === memoized)
     assert(ordered.nonEmpty)
   }
 
