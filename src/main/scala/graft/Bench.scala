@@ -114,10 +114,10 @@ object Bench {
     // larger corpus the bench total would be dominated by oracle cost
     // rather than the registered scale paths the record is meant to
     // track. Gate: above the largest corpus these oracles have been
-    // sized against (50k documents / 20k embeddings, the ScaleTrend
-    // envelope) they are skipped, and the skip is PRINTED (never a
-    // silent cap). SPARK_GRAFT_BENCH_QUAD_GATE=0 force-runs them,
-    // =1 force-skips.
+    // sized against (50k documents, the docs50k rung of
+    // tools/GenRungs; 20k embeddings) they are skipped, and the skip
+    // is PRINTED (never a silent cap). SPARK_GRAFT_BENCH_QUAD_GATE=0
+    // force-runs them, =1 force-skips.
     val quadraticOracles = Set(
       "ann_brute_topk", "ann_hard_negatives", "ann_knn_graph_exact",
       "ann_margin_bitext", "ann_recall_eval", "ann_knn_classify",

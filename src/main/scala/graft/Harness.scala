@@ -1,14 +1,7 @@
 package graft
 
-/** Timing helpers shared by Bench, the scale ladders and StreamBench. */
+/** Record helpers shared by Bench and StreamBench. */
 object Harness {
-
-  /** Wall seconds of `f` plus its row count. */
-  def timed(f: => Long): (Double, Long) = {
-    val t0 = System.nanoTime()
-    val n = f
-    ((System.nanoTime() - t0) / 1e9, n)
-  }
 
   /** Three-decimal number for a JSON record. Locale.ROOT: the
     * f-interpolator uses the JVM default locale, and a comma-decimal

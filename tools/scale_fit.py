@@ -1,21 +1,25 @@
 #!/usr/bin/env python3
-"""Fit per-query runtime-vs-input-rows scaling exponents from three
-full-registry Bench runs and emit the round's SCALE_r{N}.md artifact.
+"""Fit per-query runtime-vs-input-rows scaling exponents from two or
+more Bench runs, one or more per rung, and emit a SCALE_*.md artifact.
 
 Usage:
-  python3 tools/scale_fit.py <bench_sf0.001.json> <bench_sf0.01.json> \
-      <bench_sf0.1.json> <out.md>
+  python3 tools/scale_fit.py <bench_rung1.json> <bench_rung2.json> \
+      [<bench_rung3.json> ...] <out.md>
+
+A rung is the sf dir a Bench run read (its JSON's "sf"): a driver sf
+dir or a tools/GenRungs rung dir. Runs may hold the whole registry or
+a SPARK_GRAFT_ONLY subset; a query's points are the runs that timed it.
 
 Method: each registered query is assigned its primary input table
 (documents / embeddings / events / a TPC-H fact); the exponent is the
-least-squares slope of ln(seconds) on ln(input rows) across the scale
-factors where the query timed successfully. Caveats the table header
-repeats: per-query JVM/planning overhead (~0.1-0.3 s) DEFLATES slopes
-for fast queries, so sub-second rows are labelled noise-bounded rather
-than trusted; documents only grow on the 0.01->0.1 rung (500->5,000)
-and embeddings 500->2,000, so those families' slopes come from a single
-10x / 4x step; facts (lineitem, orders, events, part, customer,
-supplier) grow ~10x per rung.
+least-squares slope of ln(seconds) on ln(input rows) across the rungs
+where the query timed successfully. Caveats the table header repeats:
+per-query JVM/planning overhead (~0.1-0.3 s) DEFLATES slopes for fast
+queries, so sub-second rows are labelled noise-bounded rather than
+trusted; on the driver sf dirs documents only grow on the 0.01->0.1
+step (500->5,000) and embeddings 500->2,000, so those families' slopes
+need rung dirs for more than a single step; facts (lineitem, orders,
+events, part, customer, supplier) grow ~10x per sf step.
 """
 import json
 import math
@@ -149,7 +153,9 @@ def run_floor(bench):
 
 
 def main():
-    b_paths, out = sys.argv[1:4], sys.argv[4]
+    if len(sys.argv) < 4:
+        sys.exit(__doc__.split("Method:")[0])
+    b_paths, out = sys.argv[1:-1], sys.argv[-1]
     benches = [json.load(open(p)) for p in b_paths]
     sf_dirs = [b["sf"] for b in benches]
     floors = [run_floor(b) for b in benches]
@@ -174,6 +180,7 @@ def main():
             trips.append((r, t, fl))
             pts.append((math.log(r), math.log(max(t, 1e-3))))
             pts_adj.append((math.log(r), math.log(max(t - fl, 1e-3))))
+        trips.sort()
         ladder = [(r, t) for r, t, _ in trips]
         if name in FIXED_INPUT:
             results.append((name, tab, ladder, None, "fixed input "
@@ -244,7 +251,7 @@ def main():
                     f"{b['value'] - fl * len(b['queries']):.1f}s"
                     for b, d, fl in zip(benches, sf_dirs, floors))
                 + "\n\n")
-        f.write("| query | input table | secs @ each SF | rows ladder | "
+        f.write("| query | input table | secs @ each rung | rows ladder | "
                 "exponent | verdict |\n|---|---|---|---|---:|---|\n")
         for name, tab, ladder, e, verdict in results:
             secs = " / ".join(f"{t:.2f}" for _, t in ladder)
