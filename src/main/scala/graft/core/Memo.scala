@@ -17,7 +17,7 @@ import org.apache.spark.sql.graft.shims
   * the registry. Re-deriving it per query is pure waste: the pair
   * relation is tiny (one row per near-dup pair) while the pipeline that
   * produces it scans and shuffles the whole shingle index. [[dataFrame]]
-  * materializes it once per (session, key) via `localCheckpoint` and
+  * materializes it once per (session, key) behind a [[Lineage.cut]] and
   * hands every later query the truncated-lineage handle. The same store
   * holds driver-side index metadata (the det-IVF plane kernel) and the
   * handles of one-time layout writes (bucketed and day-partitioned
@@ -36,12 +36,9 @@ import org.apache.spark.sql.graft.shims
   * acyclic dependency order, so they cannot deadlock. A build that
   * throws leaves no entry; the next call rebuilds.
   *
-  * 100 TB note: `localCheckpoint` stores blocks on the executors that
-  * computed them (lost on executor failure — Spark recomputes, which at
-  * that scale means re-running the pipeline). A production deployment
-  * would swap the storage call for a reliable checkpoint or a persisted
-  * intermediate table; the memo's structure — compute shared candidates
-  * once, fan out consumers — is exactly the shape that swap needs.
+  * The structure — compute shared candidates once, fan out consumers —
+  * is the shape a reliable checkpoint needs at 100 TB; see
+  * [[Lineage]]'s note on swapping the storage call.
   */
 object Memo {
 
@@ -50,7 +47,7 @@ object Memo {
     * memory without bound. Eviction drops the oldest-touched entry; the
     * checkpointed blocks behind a DataFrame handle are reclaimed
     * asynchronously by Spark's ContextCleaner once the RDD is
-    * unreferenced (there is no synchronous free for localCheckpoint
+    * unreferenced (there is no synchronous free for checkpointed
     * blocks). A full `graft.Verify` leaves 25 entries for its one
     * table dir (sf0.001 and sf0.01 alike), so 64 keeps two dirs'
     * working sets resident. */
@@ -88,21 +85,20 @@ object Memo {
     }
   }
 
-  /** [[value]] for a relation: materialized with a lazy
-    * `localCheckpoint`, the one memo boundary. A root global `Sort` is
-    * dropped first: inside a larger fused plan the optimizer removes a
-    * sort its consumer does not need, but a checkpoint EXECUTES it —
-    * the range-partition sampling pass recomputes the whole child.
+  /** [[value]] for a relation: materialized behind [[Lineage.cut]], the
+    * one memo boundary. A root global `Sort` is dropped first: inside
+    * a larger fused plan the optimizer removes a sort its consumer does
+    * not need, but a checkpoint EXECUTES it — the range-partition
+    * sampling pass recomputes the whole child.
     * Operators therefore always return their total order, and
     * order-sensitive memo consumers re-sort the (small) result. */
   def dataFrame(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     value(s, key) {
       val df = build
-      val unsorted = shims.analyzed(df) match {
+      Lineage.cut(shims.analyzed(df) match {
         case sort: Sort if sort.global => shims.ofRows(s, sort.child)
         case _ => df
-      }
-      unsorted.localCheckpoint(eager = false)
+      })
     }
 
   private[core] def liveEntries: Int = cells.synchronized(cells.size())

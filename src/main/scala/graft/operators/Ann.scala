@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.core.Lineage
 import graft.functions.{HashExprs, TextFunctions => TF}
 
 import scala.util.Random
@@ -214,18 +215,14 @@ object Ann {
   private def lshDetPairSims(v: DataFrame, bits: Int,
                              tables: Int): DataFrame = {
     // buckets carry the vector from the same one-pass kernel projection
-    // (no join-back): n·tables rows, one vector each. Lazily
-    // checkpointed: the self-join is planned as a BROADCAST join (one
-    // side a BroadcastExchange, so ReuseExchange cannot deduplicate the
-    // two sides) and each side re-ran the upstream projection + bucket
-    // kernel; steady-state A/B (min of 4 in one session):
-    // margin_bitext_lsh 3.34 → 3.18, media_near_dup_det 1.46 → 1.18,
-    // dedup_embedding_cosine 1.07 → 0.98 s with the boundary.
-    val buckets = v.filter(size(col("v")) > 0)
+    // (no join-back): n·tables rows, one vector each. Cut because the
+    // broadcast self-join cannot reuse one exchange for both sides
+    // (min of 4: margin_bitext_lsh 3.34 → 3.18, media_near_dup_det
+    // 1.46 → 1.18, dedup_embedding_cosine 1.07 → 0.98 s).
+    val buckets = Lineage.cut(v.filter(size(col("v")) > 0)
       .select(col("id"), col("v"),
         posexplode(HashExprs.det_lsh_buckets(col("v"), bits, tables))
-          .as(Seq("t", "bucket")))
-      .localCheckpoint(false)
+          .as(Seq("t", "bucket"))))
     buckets.as("a").join(buckets.as("b"), Seq("t", "bucket"))
       .filter(col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
@@ -302,11 +299,8 @@ object Ann {
     * ratio margin as one truncating integer division, mutual rank-1
     * filter. */
   private def marginScore(pairsIn: DataFrame, k: Int): DataFrame = {
-    // materialized once: the pair relation feeds THREE consumers
-    // (denA, denB, scored) — without the checkpoint each branch would
-    // re-execute the candidate subtree, tripling the similarity work;
-    // the materialized relation is 3 longs per pair
-    val pairs = pairsIn.localCheckpoint(true)
+    // three consumers (denA, denB, scored) read the candidate pairs
+    val pairs = Lineage.cut(pairsIn)
     val wa = Window.partitionBy("a_id")
       .orderBy(col("sim_bp").desc, col("b_id"))
     val wb = Window.partitionBy("b_id")
@@ -2044,8 +2038,8 @@ object Ann {
     * shape: one broadcast-probe scan builds the per-query pool (the only
     * corpus-sized work — swap in LSH/IVF/PQ candidates at 100 TB), then
     * the k−1 greedy steps run over the bounded nq × pool relation and
-    * its nq × pool² pair sims, localCheckpointed so the fold's lineage
-    * stays flat. Output: (query_id, pick_rank 1..k, cand_id, mmr). */
+    * its nq × pool² pair sims, cut so the fold's lineage stays flat
+    * ([[Lineage.rounds]]). Output: (query_id, pick_rank 1..k, cand_id, mmr). */
   def mmrTopK(candidates: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int = 5, pool: Int = 20): DataFrame = {
     val c = spread(candidates).select(col(idCol).as("cand_id"),
@@ -2054,34 +2048,27 @@ object Ann {
       col(vecCol).cast("array<double>").as("qv"))
     val wRel = Window.partitionBy("query_id")
       .orderBy(col("rel_bp").desc, col("cand_id").asc)
-    val rel = c.join(broadcast(q), col("query_id") =!= col("cand_id"))
+    val rel = Lineage.cut(c
+      .join(broadcast(q), col("query_id") =!= col("cand_id"))
       .withColumn("rel_bp",
         round(HashExprs.cosine_sim(col("qv"), col("cv")) * 10000)
           .cast("long"))
       .withColumn("rr", row_number().over(wRel))
       .filter(col("rr") <= pool)
-      .select(col("query_id"), col("cand_id"), col("rel_bp"), col("cv"))
-      // lazy checkpoints throughout the greedy loop (r15): fixed k-1
-      // rounds with no per-round action — materialization happens once
-      // when the final action runs, persisting each handle on first
-      // use, without a blocking job per checkpoint (the pagerankInt
-      // rationale)
-      .localCheckpoint(false)
-    val pairs = rel.select(col("query_id"), col("cand_id").as("a_id"),
-        col("cv").as("av"))
+      .select(col("query_id"), col("cand_id"), col("rel_bp"), col("cv")))
+    val pairs = Lineage.cut(rel
+      .select(col("query_id"), col("cand_id").as("a_id"), col("cv").as("av"))
       .join(rel.select(col("query_id"), col("cand_id").as("b_id"),
         col("cv").as("bv")), Seq("query_id"))
       .filter(col("a_id") =!= col("b_id"))
       .select(col("query_id"), col("a_id"), col("b_id"),
         round(HashExprs.cosine_sim(col("av"), col("bv")) * 10000)
-          .cast("long").as("pair_bp"))
-      .localCheckpoint(false)
-    val sel1 = rel.withColumn("rn", row_number().over(wRel))
+          .cast("long").as("pair_bp")))
+    val sel1 = Lineage.cut(rel.withColumn("rn", row_number().over(wRel))
       .filter(col("rn") === 1)
       .select(col("query_id"), lit(1L).as("pick_rank"), col("cand_id"),
-        (lit(7L) * col("rel_bp")).as("mmr"))
-      .localCheckpoint(false)
-    val selK = (2 to k).foldLeft(sel1) { (sel, i) =>
+        (lit(7L) * col("rel_bp")).as("mmr")))
+    val selK = Lineage.rounds(sel1, k - 1) { (sel, r) =>
       val selIds = sel.select(col("query_id"), col("cand_id"))
       val maxsim = pairs
         .join(selIds.withColumnRenamed("cand_id", "b_id"),
@@ -2098,9 +2085,9 @@ object Ann {
           lit(7L) * col("rel_bp") - lit(3L) * col("maxsim"))
         .withColumn("rn", row_number().over(wPick))
         .filter(col("rn") === 1)
-        .select(col("query_id"), lit(i.toLong).as("pick_rank"),
+        .select(col("query_id"), lit(r + 1L).as("pick_rank"),
           col("cand_id"), col("mmr"))
-      sel.unionByName(pick).localCheckpoint(false)
+      sel.unionByName(pick)
     }
     selK.orderBy("query_id", "pick_rank")
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
+import graft.core.Lineage
 import graft.functions.{HashExprs, TextFunctions => TF}
 
 /** Deduplication operators for the training-data pipeline. Four families:
@@ -245,14 +246,10 @@ object Dedup {
     val bandStructs = (0 until bands).map(b =>
       struct(lit(b).as("band"),
         hash(slice(col("sig"), b * rows + 1, rows)).as("bh")))
-    // lazy checkpoint: the bucket SELF-JOIN below otherwise recomputes
-    // the whole shingling+signature branch for each side (the 32-perm
-    // hash kernel over every posting, twice); the banded relation is
-    // docs x bands rows of (long, int, int) — cheap to materialize once
-    val banded = withSets.select(col("doc_id"),
+    // both sides of the bucket self-join read the 32-perm signatures
+    val banded = Lineage.cut(withSets.select(col("doc_id"),
         explode(array(bandStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band"), col("bk.bh"))
-      .localCheckpoint(false)
+      .select(col("doc_id"), col("bk.band"), col("bk.bh")))
     val candidates = banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
@@ -294,27 +291,8 @@ object Dedup {
       .map(_.select(col("doc_id"), col("shingle")))
       .getOrElse(spread(docs).select(col(idCol).as("doc_id"),
         explode(TF.shingles(col(textCol), n)).as("shingle")))
-    // lazy checkpoint: mh feeds the banding AND both sides of the
-    // estimate join (4 plan references) — without the boundary each one
-    // re-runs the numPerms-per-posting md5 kernel; the relation is
-    // docs x numPerms rows of (long, int, long)
-    val mh = sh
-      .select(col("doc_id"), col("shingle"),
-        explode(sequence(lit(0), lit(numPerms - 1))).as("p"))
-      .groupBy("doc_id", "p")
-      .agg(min(conv(substring(
-          md5(concat(col("p").cast("string"), lit(":"), col("shingle"))),
-          1, 15), 16, 10).cast("long")).as("mh"))
-      .localCheckpoint(false)
-    // same rationale for the band relation's self-join (2 references)
-    val bands = minhashBandsOf(mh, rowsPerBand).localCheckpoint(false)
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("bands_hit"))
-    cand
+    val (mh, bandHits) = minhashDetBandChain(sh, numPerms, rowsPerBand)
+    bandHits.groupBy("doc_a", "doc_b").agg(count(lit(1)).as("bands_hit"))
       .join(mh.select(col("doc_id").as("doc_a"), col("p"),
         col("mh").as("mha")), "doc_a")
       .join(mh.select(col("doc_id").as("doc_b"), col("p"),
@@ -399,42 +377,42 @@ object Dedup {
         (withSets.select(col("doc_id"), explode(col("sh")).as("shingle")),
           withSets.select("doc_id", "nsh"))
     }
-    val (_, candidates) = minhashDetBandChain(sh, numPerms, rowsPerBand)
+    val (_, bandHits) = minhashDetBandChain(sh, numPerms, rowsPerBand)
     val thresholdBp = math.round(threshold * 10000).toInt
-    verifyJaccard(candidates, sh, sizes, thresholdBp)
+    verifyJaccard(bandHits.distinct(), sh, sizes, thresholdBp)
   }
 
   /** The shared det-MinHash chain over an exploded (doc_id, shingle)
-    * relation: md5-permutation minhash values per (doc_id, p) and the
-    * banded candidate pair relation over them. [[minhashLshDetPairs]]
-    * and [[minhashBbitAudit]] BOTH consume this, so the sketch the
-    * banding produces and the sketch the audit measures cannot drift
-    * (the audit's contract is "over the SAME banded candidate
-    * pairs"). */
+    * relation: md5-permutation minhash values per (doc_id, p) and one
+    * (doc_a, doc_b) row per band a candidate pair shares.
+    * [[minhashDetPairs]], [[minhashLshDetPairs]] and [[minhashBbitAudit]]
+    * all consume this, so the sketch the banding produces and the
+    * sketch the audit measures cannot drift (the audit's contract is
+    * "over the SAME banded candidate pairs"). */
   private def minhashDetBandChain(sh: DataFrame, numPerms: Int,
                                   rowsPerBand: Int)
       : (DataFrame, DataFrame) = {
-    // lazy checkpoints, same rationale as [[minhashDetPairs]]: mh feeds
-    // the banding plus (in the bbit audit) both estimate-join sides, and
-    // bands is self-joined — without the boundaries each reference
-    // re-runs the md5 permutation kernel over every posting
-    val mh = sh
+    // mh feeds the banding and the estimate joins; bands is self-joined
+    val mh = Lineage.cut(minhashDetValues(sh, numPerms))
+    val bands = Lineage.cut(minhashBandsOf(mh, rowsPerBand))
+    (mh, bands.as("a")
+      .join(bands.as("b"),
+        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")))
+  }
+
+  /** md5-permutation minhash values (doc_id, p, mh) over an exploded
+    * (doc_id, shingle) relation: permutation p of a shingle is the
+    * first 15 hex digits of md5(p ":" shingle). */
+  private def minhashDetValues(sh: DataFrame, numPerms: Int): DataFrame =
+    sh
       .select(col("doc_id"), col("shingle"),
         explode(sequence(lit(0), lit(numPerms - 1))).as("p"))
       .groupBy("doc_id", "p")
       .agg(min(conv(substring(
           md5(concat(col("p").cast("string"), lit(":"), col("shingle"))),
           1, 15), 16, 10).cast("long")).as("mh"))
-      .localCheckpoint(false)
-    val bands = minhashBandsOf(mh, rowsPerBand).localCheckpoint(false)
-    val candidates = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    (mh, candidates)
-  }
 
   /** Band rows (doc_id, band, sig) over a (doc_id, p, mh) minhash
     * relation — the banding step of [[minhashDetBandChain]], shared
@@ -462,14 +440,7 @@ object Dedup {
     require(numPerms % rowsPerBand == 0, "rowsPerBand must divide numPerms")
     val sh = docs.select(col(idCol).as("doc_id"),
       explode(TF.shingles(col(textCol), n)).as("shingle"))
-    val mh = sh
-      .select(col("doc_id"), col("shingle"),
-        explode(sequence(lit(0), lit(numPerms - 1))).as("p"))
-      .groupBy("doc_id", "p")
-      .agg(min(conv(substring(
-          md5(concat(col("p").cast("string"), lit(":"), col("shingle"))),
-          1, 15), 16, 10).cast("long")).as("mh"))
-    minhashBandsOf(mh, rowsPerBand)
+    minhashBandsOf(minhashDetValues(sh, numPerms), rowsPerBand)
   }
 
   /** b-bit MinHash audit (Li & Konig 2010, "b-Bit Minwise Hashing"):
@@ -502,12 +473,12 @@ object Dedup {
           TF.shingles(col(textCol), n).as("shs"))
         .filter(size(col("shs")) > 0)
         .select(col("doc_id"), explode(col("shs")).as("shingle")))
-    val (mh, candidates) = minhashDetBandChain(sh, numPerms, rowsPerBand)
+    val (mh, bandHits) = minhashDetBandChain(sh, numPerms, rowsPerBand)
     val mha = mh.select(col("doc_id").as("doc_a"), col("p"),
       col("mh").as("mh_a"))
     val mhb = mh.select(col("doc_id").as("doc_b"), col("p"),
       col("mh").as("mh_b"))
-    candidates.join(mha, "doc_a").join(mhb, Seq("doc_b", "p"))
+    bandHits.distinct().join(mha, "doc_a").join(mhb, Seq("doc_b", "p"))
       .groupBy("doc_a", "doc_b")
       .agg(
         sum(when(col("mh_a") === col("mh_b"), 1L).otherwise(0L))
@@ -635,11 +606,10 @@ object Dedup {
       .select("g", "gram"))
 
   /** Shared tail: distinct (g, gram), then the inverted self-join. The
-    * distinct relation is lazily checkpointed — the self-join otherwise
-    * re-runs the whole upstream shingle pass once per side (guide
-    * §2.4). */
+    * distinct relation is cut — the self-join otherwise re-runs the
+    * whole upstream shingle pass once per side (guide §2.4). */
   private def overlapMatrixFrom(rows: DataFrame): DataFrame = {
-    val sh = rows.distinct().localCheckpoint(false)
+    val sh = Lineage.cut(rows.distinct())
     sh.select(col("g").as("src_a"), col("gram"))
       .join(sh.select(col("g").as("src_b"), col("gram")), "gram")
       .groupBy("src_a", "src_b").agg(count(lit(1)).as("n_shared"))
@@ -654,8 +624,7 @@ object Dedup {
     * doc_id in the cluster, which makes it the canonical representative a
     * dedup pipeline keeps.
     *
-    * Lineage is truncated each round (localCheckpoint), otherwise the
-    * iterative plan grows without bound.
+    * Rounds run under [[Lineage.untilStable]].
     *
     * Why min-label and not alternating large-star/small-star (Kiveris et
     * al. 2014): near-dup graphs are unions of near-cliques, so label
@@ -669,60 +638,45 @@ object Dedup {
     * consumers stay diameter-robust without caller changes. */
   def components(pairs: DataFrame, aCol: String, bCol: String,
                  maxIter: Int = 50): DataFrame = {
-    // materialize the pair relation ONCE before symmetrizing: `pairs` is
-    // typically an expensive pipeline (e.g. the full prefix-filter Jaccard
-    // join), and a union of two projections of the raw plan would compute
-    // it twice
-    val p = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .localCheckpoint(true)
-    // lazy union: a narrow recompute over the checkpointed pair relation
-    // (no shuffle), cheaper than materializing a second copy
+    // `pairs` is typically an expensive pipeline (the prefix-filter
+    // Jaccard join); both halves of the symmetrized union read it
+    val p = Lineage.cut(pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
     val edges = p
       .union(p.select(col("dst").as("src"), col("src").as("dst")))
     // seed comp = min(id, min direct neighbor): the first propagation
     // round fused into initialization — one groupBy replaces the
     // distinct-ids job plus a full join+agg+check round. Every node
     // appears as src in the symmetrized relation, so coverage is total.
-    var labels = edges.groupBy("src")
+    val seed = Lineage.cut(edges.groupBy("src")
       .agg(least(min(col("dst")), first(col("src"))).as("comp"))
-      .select(col("src").as("id"), col("comp"))
-      .localCheckpoint(true)
-    var i = 0
-    var converged = false
-    while (!converged && i < maxIter) {
+      .select(col("src").as("id"), col("comp")))
+    // each round carries old + new label in one frame: the convergence
+    // check is then a scan of materialized rows, not another join pass
+    Lineage.untilStable(seed, maxIter) { state =>
+      val labels = state.select("id", "comp")
       val neighborMin = edges
         .join(labels.select(col("id").as("dst"), col("comp").as("ncomp")), "dst")
         .groupBy(col("src").as("id"))
         .agg(min("ncomp").as("nmin"))
-      // carry old + new label in one checkpointed frame: the convergence
-      // check is then a scan of materialized rows, not another join pass
-      val merged = labels.join(neighborMin, Seq("id"), "left")
+      labels.join(neighborMin, Seq("id"), "left")
         .select(col("id"), col("comp").as("old"),
           least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
-        .localCheckpoint(true)
-      converged = merged.filter(col("comp") =!= col("old")).isEmpty
-      labels = merged.select("id", "comp")
-      i += 1
+    }((_, merged) => merged.filter(col("comp") =!= col("old"))) match {
+      case Some(labels) =>
+        labels.select(col("id").as("doc_id"), col("comp").as("component"))
+          .orderBy("doc_id")
+      case None =>
+        // clusters of diameter > maxIter: rather than return split
+        // components, hand the already-cut pair relation to the star
+        // contraction, whose round bound is logarithmic in n
+        System.err.println(
+          s"[components] min-label propagation did not converge in " +
+            s"$maxIter rounds (cluster diameter exceeds it) -- falling " +
+            "back to the O(log^2 n) two-star contraction")
+        // its OWN round budget: a caller's small propagation cap would
+        // make the fallback fail exactly where it exists to succeed
+        componentsTwoStar(p, "src", "dst", math.max(maxIter, 50))
     }
-    // an iteration-capped exit would return split components with no
-    // indication (propagation advances one hop/round, so this only
-    // triggers on clusters of diameter > maxIter); rather than failing,
-    // hand the ALREADY-CHECKPOINTED pair relation to the star
-    // contraction, whose round bound is logarithmic in n — the expensive
-    // upstream pair pipeline is not recomputed
-    if (!converged) {
-      System.err.println(
-        s"[components] min-label propagation did not converge in " +
-          s"$maxIter rounds (cluster diameter exceeds it) -- falling " +
-          "back to the O(log^2 n) two-star contraction")
-      // the fallback gets its OWN round budget (the two-star bound is
-      // logarithmic, so its default 50 covers any feasible graph) —
-      // reusing a caller's small propagation cap here would make the
-      // fallback fail exactly where it exists to succeed
-      return componentsTwoStar(p, "src", "dst", math.max(maxIter, 50))
-    }
-    labels.select(col("id").as("doc_id"), col("comp").as("component"))
-      .orderBy("doc_id")
   }
 
   /** Connected components by alternating large-star / small-star
@@ -744,68 +698,56 @@ object Dedup {
     * for.
     *
     * Each round shuffles (node, node) ids only — never payloads. The
-    * convergence test is two anti-joins (set equality of successive
-    * edge sets); a count-of-changes accumulator would be cheaper per
-    * round at extreme scale but set equality is exact and the round
-    * count is logarithmic, so the audit cost is bounded. */
+    * convergence test is the symmetric difference of successive edge
+    * sets; a count-of-changes accumulator would be cheaper per round at
+    * extreme scale but set equality is exact and the round count is
+    * logarithmic, so the audit cost is bounded. */
   def componentsTwoStar(pairs: DataFrame, aCol: String, bCol: String,
                         maxIter: Int = 50): DataFrame = {
-    val raw = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-      .localCheckpoint(true)
+    val raw = Lineage.cut(pairs.select(col(aCol).as("u"), col(bCol).as("v")))
     // every id in the input keeps a label even if its only pair is a
     // self-pair (dropped below as a self-loop) — parity with components()
-    val nodes = raw.select(col("u").as("id"))
-      .union(raw.select(col("v").as("id"))).distinct()
-      .localCheckpoint(true)
+    val nodes = Lineage.cut(raw.select(col("u").as("id"))
+      .union(raw.select(col("v").as("id"))).distinct())
     // canonical simple edges u < v
-    var edges = raw
+    val edges0 = Lineage.cut(raw
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(true)
-    var i = 0
-    var converged = edges.isEmpty
-    while (!converged && i < maxIter) {
+      .filter(col("u") =!= col("v")).distinct())
+    // both orientations of each edge, and each node's min(N(u)∪{u})
+    def sym(e: DataFrame) = e.union(e.select(col("v").as("u"), col("u").as("v")))
+    def starMin(e: DataFrame, as: String) =
+      sym(e).groupBy("u").agg(least(min(col("v")), first(col("u"))).as(as))
+    val stars = Lineage.untilStable(edges0, maxIter) { edges =>
       // large-star: every edge (u, v>u) rewires v to m(u) = min(N(u)∪{u}).
       // m(u) <= u < v, so the emitted (m, v) is already canonical.
-      val sym = edges
-        .union(edges.select(col("v").as("u"), col("u").as("v")))
-      val lsMin = sym.groupBy("u")
-        .agg(least(min(col("v")), first(col("u"))).as("m"))
-      val afterLarge = sym.filter(col("v") > col("u"))
+      val lsMin = starMin(edges, "m")
+      val afterLarge = Lineage.cut(sym(edges).filter(col("v") > col("u"))
         .join(lsMin, "u")
         .select(col("m").as("u"), col("v"))
-        .filter(col("u") =!= col("v")).distinct()
-        .localCheckpoint(true)
+        .filter(col("u") =!= col("v")).distinct())
       // small-star: group the canonical edges by their LARGER endpoint v;
       // m = min of v's smaller neighbors; rewire v and each smaller
       // neighbor to m. Emitted edges are (m, x) with m < x — canonical.
       val ssMin = afterLarge.groupBy("v").agg(min(col("u")).as("m"))
-      val afterSmall = afterLarge.join(ssMin, "v")
+      afterLarge.join(ssMin, "v")
         .select(col("m").as("u"), col("u").as("v"))
         .filter(col("u") =!= col("v"))
         .union(ssMin.select(col("m").as("u"), col("v")))
         .distinct()
-        .localCheckpoint(true)
+    } { (prev, next) =>
       // fixed point of both stars == the graph is a union of min-rooted
       // stars; set equality, not count equality (equal sizes can differ)
-      converged = afterSmall.except(edges).isEmpty &&
-        edges.except(afterSmall).isEmpty
-      edges = afterSmall
-      i += 1
-    }
-    if (!converged)
+      next.except(prev).union(prev.except(next))
+    }.getOrElse(
       throw new IllegalStateException(
         s"componentsTwoStar() did not converge in $maxIter rounds — " +
           "raise maxIter (the bound is logarithmic, so this indicates " +
-          "a bug, not a deep graph)")
+          "a bug, not a deep graph)"))
     // at convergence every node is a star endpoint: leaf label = its
     // root (only neighbor), root label = itself (< all leaves);
     // self-pair-only ids fall through the left join to themselves
-    val sym = edges
-      .union(edges.select(col("v").as("u"), col("u").as("v")))
-    val labels = sym.groupBy("u")
-      .agg(least(min(col("v")), first(col("u"))).as("component"))
+    val labels = starMin(stars, "component")
     nodes.join(labels, nodes("id") === labels("u"), "left")
       .select(col("id").as("doc_id"),
         coalesce(col("component"), col("id")).as("component"))
@@ -921,14 +863,11 @@ object Dedup {
     val cells = Ann.lshDetBuckets(v, bits, tables = 1)
       .select(col("id"), col("bucket").as("cell"))
     val withCell = v.join(cells, "id")
-    // lazy checkpoints (guide §2.4): dims feeds the centroid, vector-norm
-    // and dot branches (3 references), and ranked below feeds both sides
-    // of the drop self-join plus the final flag join — unboundaried, the
-    // explode/affinity pipelines re-run per reference
-    val dims = withCell
+    // dims feeds the centroid, norm and dot branches; ranked feeds both
+    // drop self-join sides and the flag join
+    val dims = Lineage.cut(withCell
       .select(col("id"), col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
-      .withColumn("xi", floor(col("x") * 1000000.0 + 0.5).cast("long"))
-      .localCheckpoint(false)
+      .withColumn("xi", floor(col("x") * 1000000.0 + 0.5).cast("long")))
     // order-free integer centroid + zero-norm guard — see
     // [[Ann.ivfDetTopK]]'s centroid comment (same recipe, same oracle)
     val cent = dims.groupBy("cell", "dim")
@@ -945,12 +884,11 @@ object Dedup {
           floor(lit(10000.0) * col("dot") /
             (sqrt(col("nv")) * sqrt(col("nc")))).cast("long"))
           .otherwise(0L).as("cent_sim_bp"))
-    val ranked = withCell.join(affinity, Seq("id", "cell"))
+    val ranked = Lineage.cut(withCell.join(affinity, Seq("id", "cell"))
       .withColumn("rnk", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy("cell")
-          .orderBy(col("cent_sim_bp").desc, col("id").asc)))
-      .localCheckpoint(false)
+          .orderBy(col("cent_sim_bp").desc, col("id").asc))))
     val epsBp = math.round(eps * 10000)
     val drops = ranked.as("a").join(ranked.as("b"),
         col("a.cell") === col("b.cell") && col("a.rnk") < col("b.rnk"))

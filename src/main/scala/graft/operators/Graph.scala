@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Lineage
+
 /** Graph operators over an edge-list relation — the reference's twitter
   * app processes a follower graph as bare edge lines (reference
   * `server/twitter.go:59-67`, "forms a directed graph" per cs425_mp4.pdf
@@ -67,8 +69,8 @@ object Graph {
     * rather than ~9e8, and non-ANSI Long wrap cannot silently corrupt
     * ranks at the scales this module advertises.
     *
-    * Scale shape: the edge relation is materialized once
-    * (localCheckpoint) and reused every round; each round shuffles only
+    * Scale shape: the edge relation is cut once ([[Lineage.cut]]) and
+    * reused every round; each round shuffles only
     * (node, long) pairs — join edges→ranks on src (partial-agg sum per
     * dst), then a left join back onto the node set. Rounds are a fixed
     * `iters` (deterministic plan, replayable oracle), not
@@ -93,50 +95,39 @@ object Graph {
         "(dangling mass in PPR returns to the seeds, a different model)")
     val scale = 1000000L
     val base = scale * (10000 - dampBp) / 10000
-    // one materialization; every round re-reads this, not the (possibly
-    // expensive) upstream plan that produced the edges
-    // LAZY checkpoints throughout (r15): the loop is a FIXED iteration
-    // count with no per-round convergence action, so nothing needs a
-    // blocking materialization job per round — the lazy checkpoint
-    // still hides each round's plan from Catalyst behind a LogicalRDD
-    // (bounded plan size) and still persists/truncates the RDD when the
-    // final action computes it, but the whole fixed point now executes
-    // as ONE job instead of 3 setup + iters materialization jobs
-    // (measured: the per-job scheduling overhead dominated these
-    // queries on the 25-node nation graph).
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().localCheckpoint(false)
+    val e = Lineage.cut(edges.select(col(srcCol).as("src"),
+      col(dstCol).as("dst")).distinct())
     val outD = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val withDeg = e.join(outD, "src").localCheckpoint(false)
+    val withDeg = Lineage.cut(e.join(outD, "src"))
     val nodesBase = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     // is_seed gates where restart mass lands: all nodes in the classic
     // model, only the seed set in the personalized one — with is_seed=1
     // everywhere the personalized arithmetic reduces bit-for-bit to the
     // classic form, so both models share this one implementation
-    val nodes = (seeds match {
+    val nodes = Lineage.cut(seeds match {
       case None => nodesBase.withColumn("is_seed", lit(1L))
       case Some(sd) => nodesBase
         .join(sd.select(col(sd.columns.head).as("node")).distinct()
           .withColumn("is_seed", lit(1L)), Seq("node"), "left")
         .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
-    }).localCheckpoint(false)
+    })
     val nNodes = nodes.agg(count(lit(1)).as("nn"))
     // the damping reduction, overflow-safe (see Overflow above), over an
     // arbitrary non-negative integer column expression
     def damped(csumTot: String) =
       expr(s"is_seed * $base") + expr(s"(($csumTot) DIV 10000) * $dampBp" +
         s" + ((($csumTot) % 10000) * $dampBp) DIV 10000")
-    var rank = nodes.select(col("node"), col("is_seed"),
+    val rank0 = nodes.select(col("node"), col("is_seed"),
       (col("is_seed") * scale).as("rank"))
-    for (_ <- 1 to iters) {
+    val rankN = Lineage.rounds(rank0, iters) { (rank, _) =>
       val contrib = withDeg
         .join(rank.select(col("node").as("src"), col("rank")), "src")
         .select(col("dst").as("node"),
           expr("rank DIV out_deg").as("c"))
         .groupBy("node").agg(sum("c").as("csum"))
       val joined = nodes.join(contrib, Seq("node"), "left")
-      rank = (if (!redistributeDangling) {
+      if (!redistributeDangling) {
         joined.select(col("node"), col("is_seed"),
           damped("coalesce(csum, CAST(0 AS BIGINT))").as("rank"))
       } else {
@@ -147,9 +138,9 @@ object Graph {
           .select(col("node"), col("is_seed"),
             damped("coalesce(csum, CAST(0 AS BIGINT)) + dsum DIV nn")
               .as("rank"))
-      }).localCheckpoint(false) // truncate the iterative lineage each round
+      }
     }
-    rank.select("node", "rank").orderBy("node")
+    rankN.select("node", "rank").orderBy("node")
   }
 
   /** Personalized PageRank (random walk with restart): identical integer
@@ -210,6 +201,10 @@ object Graph {
       .orderBy("a", "b", "c")
   }
 
+  private def longEdges(edges: DataFrame, srcCol: String, dstCol: String) =
+    edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"))
+
   /** Single-source shortest hop distances over the UNDIRECTED distinct
     * edge relation: (id, hops) for every node reachable from `source`
     * (unreachable nodes are absent). Frontier BFS — each round joins only
@@ -223,32 +218,25 @@ object Graph {
     * [[Dedup.components]]'s non-convergence guard). */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               source: Long, maxHops: Int = 20): DataFrame = {
-    val p = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .distinct().localCheckpoint(true)
+    val p = Lineage.cut(longEdges(edges, srcCol, dstCol).distinct())
     val und = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
-    var labels = p.sparkSession.range(1)
-      .select(lit(source).as("id"), lit(0L).as("hops"))
-      .localCheckpoint(true)
-    var frontier = labels
-    var i = 0
-    while (i < maxHops && !frontier.isEmpty) {
+    // visited set (id, hops, fresh); `fresh` marks the last round's finds
+    val start = p.sparkSession.range(1)
+      .select(lit(source).as("id"), lit(0L).as("hops"), lit(true).as("fresh"))
+    val labels = Lineage.untilStable(start, maxHops) { labels =>
       val next = und
-        .join(frontier.select(col("id").as("src"), col("hops")), "src")
+        .join(labels.filter(col("fresh"))
+          .select(col("id").as("src"), col("hops")), "src")
         .select(col("dst").as("id"), (col("hops") + 1L).as("hops"))
         .join(labels.select("id"), Seq("id"), "left_anti")
         .groupBy("id").agg(min("hops").as("hops"))
-        .localCheckpoint(true)
-      frontier = next
-      labels = labels.union(next).localCheckpoint(true)
-      i += 1
-    }
-    if (!frontier.isEmpty)
+      labels.select(col("id"), col("hops"), lit(false).as("fresh"))
+        .union(next.withColumn("fresh", lit(true)))
+    }((_, next) => next.filter(col("fresh"))).getOrElse(
       throw new IllegalStateException(
         s"bfsHops did not drain in $maxHops rounds — raise maxHops " +
-          "(graph diameter exceeds it)")
-    labels.orderBy("id")
+          "(graph diameter exceeds it)"))
+    labels.select("id", "hops").orderBy("id")
   }
 
   /** k-core: the maximal subgraph where every node keeps degree >= k,
@@ -260,27 +248,21 @@ object Graph {
     * same count either way). Input is symmetrized + deduped here, so
     * degree is a plain per-src count. Each round is two semi-joins on
     * the shrinking edge relation — edges only ever leave, so per-round
-    * cost falls, and lineage is truncated per round like the other
-    * iterative operators. Returns (node, deg) for core members, deg
-    * being the within-core degree. */
+    * cost falls; rounds are cut by [[Lineage.rounds]]. Returns (node,
+    * deg) for core members, deg being the within-core degree. */
   def kcoreFixed(edges: DataFrame, srcCol: String, dstCol: String,
                  k: Int, rounds: Int): DataFrame = {
-    val p = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-    var e = p
+    val p = longEdges(edges, srcCol, dstCol)
+    val und = Lineage.cut(p
       .union(p.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(true)
-    var i = 0
-    while (i < rounds) {
+      .distinct())
+    val core = Lineage.rounds(und, rounds) { (e, _) =>
       val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("src")
-      e = e.join(keep, Seq("src"), "left_semi")
+      e.join(keep, Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-        .localCheckpoint(true)
-      i += 1
     }
-    e.groupBy("src").agg(count(lit(1)).as("deg"))
+    core.groupBy("src").agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg"))
       .orderBy("node")
   }
@@ -299,36 +281,31 @@ object Graph {
     * Scale shape: each round is one (node, label) hash join onto the
     * undirected edge relation, a (node, label) count aggregate with
     * map-side combine, and an argmax window PARTITIONED BY NODE — no
-    * global window, no driver collect; lineage truncated per round.
+    * global window, no driver collect; rounds cut by [[Lineage.rounds]].
     *
     * Returns (node, community) ordered by node. */
   def lpaFixed(edges: DataFrame, srcCol: String, dstCol: String,
                rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 20, s"rounds out of range: $rounds")
-    val p = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
+    val p = longEdges(edges, srcCol, dstCol)
       .filter(col("src") =!= col("dst"))
-    val und = p
+    val und = Lineage.cut(p
       .union(p.select(col("dst").as("src"), col("src").as("dst")))
       .select(col("src").as("a"), col("dst").as("b"))
-      .distinct().localCheckpoint(true)
-    var labels = und.select(col("a").as("node")).distinct()
+      .distinct())
+    val labels0 = und.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
-    var i = 0
-    while (i < rounds) {
+    val labels = Lineage.rounds(labels0, rounds) { (labels, _) =>
       val byNeighbor = und
         .join(labels.withColumnRenamed("node", "b"), Seq("b"))
         .groupBy(col("a"), col("label"))
         .agg(count(lit(1)).as("c"))
       val w = Window.partitionBy("a")
         .orderBy(col("c").desc, col("label"))
-      labels = byNeighbor
+      byNeighbor
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") === 1)
         .select(col("a").as("node"), col("label"))
-        .localCheckpoint(true)
-      i += 1
     }
     labels.select(col("node"), col("label").as("community"))
       .orderBy("node")
@@ -345,7 +322,7 @@ object Graph {
     *
     * Scale shape: per round two (id, long) hash joins edge→score and two
     * one-row global sums broadcast back — the score relation, never edge
-    * payloads, crosses the shuffle; lineage is truncated per round.
+    * payloads, crosses the shuffle.
     * Overflow-safe: post-normalization scores sum to ≤ 1e6, so a raw sum
     * is ≤ 1e6 and raw*1e6 ≤ 1e12 (round 1: ≤ n*1e6*1e6, fine below
     * ~9e6 nodes; larger graphs would scale down the seed).
@@ -355,31 +332,29 @@ object Graph {
               iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
     val scale = 1000000L
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    def renorm(raw: DataFrame): DataFrame = {
+    val e = Lineage.cut(edges.select(col(srcCol).as("src"),
+      col(dstCol).as("dst")).distinct())
+    val nodes = Lineage.cut(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
+    // scores flow along the edges `from` -> `to`, then L1-renormalize
+    def flow(scores: DataFrame, from: String, to: String): DataFrame = {
+      val raw = e.join(scores.select(col("node").as(from), col("rank")), from)
+        .groupBy(col(to).as("node")).agg(sum("rank").as("raw"))
       val s = raw.agg(sum("raw").as("s"))
       nodes.join(raw, Seq("node"), "left")
         .crossJoin(broadcast(s))
         .select(col("node"),
           expr(s"(coalesce(raw, CAST(0 AS BIGINT)) * $scale) DIV s")
             .as("rank"))
-        .localCheckpoint(true)
     }
-    var hub = nodes.withColumn("rank", lit(scale))
-    var auth = hub
-    for (_ <- 1 to iters) {
-      auth = renorm(e
-        .join(hub.select(col("node").as("src"), col("rank")), "src")
-        .groupBy(col("dst").as("node")).agg(sum("rank").as("raw")))
-      hub = renorm(e
-        .join(auth.select(col("node").as("dst"), col("rank")), "dst")
-        .groupBy(col("src").as("node")).agg(sum("rank").as("raw")))
-    }
-    hub.select(col("node"), col("rank").as("hub"))
+    def authOf(hub: DataFrame) = Lineage.cut(flow(hub, "src", "dst"))
+    // every score relation is cut; the rounds carry the hub scores and
+    // the last round is unrolled to keep its authorities
+    val hubPrev = Lineage.rounds(nodes.withColumn("rank", lit(scale)),
+      iters - 1)((hub, _) => flow(authOf(hub), "dst", "src"))
+    val auth = authOf(hubPrev)
+    Lineage.cut(flow(auth, "dst", "src"))
+      .select(col("node"), col("rank").as("hub"))
       .join(auth.select(col("node"), col("rank").as("auth")), "node")
       .orderBy("node")
   }

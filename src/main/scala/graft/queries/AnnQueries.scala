@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Lineage, Tables}
 import graft.functions.HashExprs
 import graft.operators.Ann
 
@@ -777,20 +777,7 @@ object AnnQueries extends Registry {
       val seeds = emb.filter(col("vec_id") % 5 === 0)
         .select(col("vec_id"), col("label").cast("long").as("l"),
           lit(100000L).as("w"))
-      val wK = (1 to 3).foldLeft(seeds) { (w, _) =>
-        val diff = edges
-          .join(w.select(col("vec_id").as("u"), col("l"), col("w")),
-            col("dst") === col("u"))
-          .groupBy(col("src").as("vec_id"), col("l"))
-          .agg(sum(col("sim_bp") * col("w")).as("w"))
-        // acc is referenced twice (rescale + product) — truncate lineage
-        // per step, or the plan doubles per iteration
-        val acc = diff.unionByName(seeds)
-          .groupBy("vec_id", "l").agg(sum("w").as("w"))
-          // lazy (r15): the rescale aggregate and the next step are
-          // sequential consumers of the same marked RDD — one compute,
-          // no per-step blocking job (pagerankInt rationale)
-          .localCheckpoint(false)
+      def rescale(acc: org.apache.spark.sql.DataFrame) = {
         val scale = acc.agg(max(col("w")).as("m"))
           .select(expr(
             "CAST(greatest((m + 99999) DIV 100000, 1) AS BIGINT)").as("s"))
@@ -804,6 +791,18 @@ object AnnQueries extends Registry {
             expr("CASE WHEN w < 0 THEN -(CAST(abs(w) AS BIGINT) DIV s) " +
               "ELSE CAST(w DIV s AS BIGINT) END").as("w"))
       }
+      // rounds carry the accumulated weights; round 1 diffuses the seeds
+      val accK = Lineage.rounds(seeds, 3) { (acc, i) =>
+        val w = if (i == 1) acc else rescale(acc)
+        edges
+          .join(w.select(col("vec_id").as("u"), col("l"), col("w")),
+            col("dst") === col("u"))
+          .groupBy(col("src").as("vec_id"), col("l"))
+          .agg(sum(col("sim_bp") * col("w")).as("w"))
+          .unionByName(seeds)
+          .groupBy("vec_id", "l").agg(sum("w").as("w"))
+      }
+      val wK = rescale(accK)
       val truth = emb.select(col("vec_id"),
         col("label").cast("long").as("true_label"))
       val win = Window.partitionBy("vec_id")

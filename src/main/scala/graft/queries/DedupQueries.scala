@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{abs, col, concat, count, explode,
   expr, lit, max, substring, sum, when}
 
-import graft.core.{Memo, Tables}
+import graft.core.{Lineage, Memo, Tables}
 import graft.operators.Dedup
 
 /** Dedup queries over documents/embeddings (see operators.Dedup for the
@@ -502,11 +502,8 @@ object DedupQueries extends Registry {
           .distinct()
       def survival(name: String, orig0: DataFrame,
                    ed: DataFrame): DataFrame = {
-        // lazy checkpoint: orig feeds BOTH the n_chunks count and the
-        // survival semi-join — unboundaried, each chunker's full
-        // tokenize+chunk+fingerprint pipeline over the original corpus
-        // runs twice (guide §2.4); the relation is (doc_id, md5) rows
-        val orig = orig0.localCheckpoint(false)
+        // orig feeds both the n_chunks count and the survival semi-join
+        val orig = Lineage.cut(orig0)
         val surv = orig.join(ed, Seq("doc_id", "fp"), "left_semi")
         orig.agg(count(lit(1)).as("n_chunks"))
           .crossJoin(surv.agg(count(lit(1)).as("n_survive")))
@@ -648,22 +645,17 @@ object DedupQueries extends Registry {
           .as(Seq("pos", "h")))
       val w = Window.partitionBy("doc_id").orderBy("pos")
         .rowsBetween(0, W - 1)
-      // lazy checkpoints (guide §2.4): fps feeds the df filter AND (via
-      // kept) both self-join sides — unboundaried, the k-gram hash +
-      // window-min pipeline re-runs 3x; kept's boundary additionally
-      // stops the df-filter join re-running per self-join side. Both
-      // relations are fingerprint-sized (≤ ~2/(w+1) of the k-gram
-      // count), cheap to materialize once.
-      val fps = hashed
+      // fps feeds the df filter and (via kept) both self-join sides;
+      // both are fingerprint-sized (≤ ~2/(w+1) of the k-gram count)
+      val fps = Lineage.cut(hashed
         .withColumn("nsh",
           cnt(lit(1)).over(Window.partitionBy("doc_id")))
         .withColumn("wmin", min("h").over(w))
         .filter(col("pos") <= col("nsh") - W)
-        .select(col("doc_id"), col("wmin").as("fp")).distinct()
-        .localCheckpoint(false)
+        .select(col("doc_id"), col("wmin").as("fp")).distinct())
       val rare = fps.groupBy("fp").agg(cnt(lit(1)).as("df"))
         .filter(col("df") <= 64).select("fp")
-      val kept = fps.join(rare, "fp").localCheckpoint(false)
+      val kept = Lineage.cut(fps.join(rare, "fp"))
       kept.select(col("doc_id").as("doc_a"), col("fp"))
         .join(kept.select(col("doc_id").as("doc_b"), col("fp")), "fp")
         .filter(col("doc_a") < col("doc_b"))

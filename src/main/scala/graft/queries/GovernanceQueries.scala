@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Lineage, Tables}
 
 /** Data-governance and audit-statistics queries: k-anonymity profiling,
   * Benford first-digit conformance, time-weighted averages, SCD2 interval
@@ -562,13 +562,12 @@ object GovernanceQueries extends Registry {
       // (vocabulary-sized) count relation, total tokens = Σ exact, and
       // the top-20 ranks the same relation. The previous form re-ran
       // the tokenize+explode scan per branch (3 scans) and md5'd every
-      // occurrence x4; this one hashes each distinct term x4. The
-      // checkpoint is vocabulary-sized (guide §2.3/§2.4).
-      val counts = Tables.documents(s, d)
+      // occurrence x4; this one hashes each distinct term x4 over a
+      // vocabulary-sized cut.
+      val counts = Lineage.cut(Tables.documents(s, d)
         .select(explode(graft.functions.TextFunctions.tokens(col("text")))
           .as("term"))
-        .groupBy("term").agg(count(lit(1)).as("exact"))
-        .localCheckpoint(false)
+        .groupBy("term").agg(count(lit(1)).as("exact")))
       val bucketed = counts
         .withColumn("r", explode(sequence(lit(0L), lit(3L))))
         .withColumn("b",

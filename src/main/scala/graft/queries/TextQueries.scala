@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Lineage, Tables}
 import graft.functions.{TextFunctions => TF}
 import graft.operators.Corpus
 
@@ -381,27 +381,21 @@ object TextQueries extends Registry {
     // (ceil ranks as (n+2) DIV 3, (2n+2) DIV 3), thresholds broadcast
     // back as one row. No global sort of docs anywhere.
     "corpus_perplexity_buckets" -> ((s, d) => {
-      // lazy checkpoints (guide §2.4): pairs feeds the vocabulary AND
-      // the per-doc scoring join, perDoc feeds the tercile histogram
-      // AND the final bucket join — unboundaried, the tokenize+count
-      // pipeline re-ran ~6x within one plan (20 parquet scans in the
-      // before dump). Both relations are bounded: (doc, term, tf) and
-      // one row per doc.
-      val pairs = Tables.documents(s, d)
+      // pairs feeds the vocabulary and the scoring join, perDoc the
+      // histogram and the bucket join (uncut: 20 parquet scans)
+      val pairs = Lineage.cut(Tables.documents(s, d)
         .select(col("doc_id"), explode(TF.tokens(col("text"))).as("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(false)
+        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
       val vocab = pairs.groupBy("term").agg(sum("tf").as("ctf"))
       val total = vocab.agg(sum("ctf").as("n_total"))
-      val perDoc = pairs.join(vocab, "term")
+      val perDoc = Lineage.cut(pairs.join(vocab, "term")
         .crossJoin(broadcast(total))
         .withColumn("bits",
           (length(bin(expr("n_total DIV ctf"))) - 1).cast("long"))
         .groupBy("doc_id")
         .agg(sum(col("tf") * col("bits")).as("sum_bits"),
           sum("tf").as("ntok"))
-        .withColumn("cb", expr("(100 * sum_bits) DIV ntok"))
-        .localCheckpoint(false)
+        .withColumn("cb", expr("(100 * sum_bits) DIV ntok")))
       val hist = perDoc.groupBy("cb").agg(count(lit(1)).as("nk"))
       val wc = org.apache.spark.sql.expressions.Window.orderBy("cb")
         .rowsBetween(org.apache.spark.sql.expressions.Window

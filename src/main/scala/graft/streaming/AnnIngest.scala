@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
+import graft.core.Lineage
 import graft.operators.Ann.CentroidCell
 
 /** Streaming ANN ingest: incremental det-IVF cell assignment of
@@ -75,15 +76,13 @@ object AnnIngest {
     // stream-static join re-executes the static side every micro-batch,
     // and the home-cell derivation is a multi-stage windowed DAG —
     // recomputing it per batch made retrieval batch-planning-bound
-    // (measured ~5x on the StreamBench band). localCheckpoint truncates
-    // the lineage to the materialized blocks, exactly the Memo pattern.
+    // (measured ~5x on the StreamBench band)
     val e = corpus.select(col(idCol).cast("long").as("cand_id"),
       col(vecCol).cast("array<double>").as("cv"))
-    val home = graft.operators.Ann
+    val home = Lineage.pin(graft.operators.Ann
       .ivfDetHomeCells(corpus, idCol, vecCol, labelCol)
       .select(col(idCol).cast("long").as("cand_id"), col("cell"))
-      .join(e, "cand_id")
-      .localCheckpoint(eager = true)
+      .join(e, "cand_id"))
     probeTopKFrom(queries, home, plane, k, nprobe, windowLen, lateness)
   }
 

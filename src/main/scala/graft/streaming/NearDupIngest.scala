@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.Lineage
 import graft.operators.Dedup
 import graft.sources.VersionedStore
 
@@ -50,10 +51,9 @@ object NearDupIngest {
                           idCol: String, textCol: String, n: Int,
                           numPerms: Int, rowsPerBand: Int)
       : (DataFrame, DataFrame) = {
-    val newBands = Dedup.minhashBandRelation(batch, idCol, textCol, n,
-      numPerms, rowsPerBand)
-      // consumed 3x below (persisted join, in-batch self-join, append)
-      .localCheckpoint(true)
+    // consumed 3x below (persisted join, in-batch self-join, append)
+    val newBands = Lineage.pin(Dedup.minhashBandRelation(batch, idCol,
+      textCol, n, numPerms, rowsPerBand))
     // collide vs the PERSISTED index (offline corpus + earlier triggers)
     val hitPersisted = persisted.fold(newBands.limit(0)) { p =>
       newBands.join(p.select("band", "sig").distinct(), Seq("band", "sig"))

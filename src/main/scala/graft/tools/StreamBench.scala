@@ -416,14 +416,13 @@ object StreamBench {
         val loaded = graft.sources.AnnIndexStore.load(spark, store, "ivf")
         val servePlane = graft.operators.Ann
           .detIvfCentroidPlaneOf(loaded.centroids)
-        val home = loaded.home
+        val home = graft.core.Lineage.pin(loaded.home
           .select(org.apache.spark.sql.functions.col("id").as("cand_id"),
             org.apache.spark.sql.functions.col("cell"))
           .join(emb01.select(
             org.apache.spark.sql.functions.col("vec_id").as("cand_id"),
             org.apache.spark.sql.functions.col("embedding")
-              .cast("array<double>").as("cv")), "cand_id")
-          .localCheckpoint(true)
+              .cast("array<double>").as("cv")), "cand_id"))
         val qIn = MemoryStream[graft.streaming.AnnIngest.VecIn]
         val qOut = graft.streaming.AnnIngest.probeTopKFrom(qIn.toDS(),
           home, servePlane, k = 5, lateness = "1 minute")

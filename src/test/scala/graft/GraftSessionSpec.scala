@@ -50,4 +50,15 @@ class GraftSessionSpec extends SparkSpec {
       }.toSeq
     hits shouldBe empty
   }
+
+  test("src/main cuts lineage through graft.core.Lineage alone") {
+    // one module decides eager vs lazy and owns the storage call, so
+    // swapping localCheckpoint for a reliable checkpoint is one edit
+    val cutters = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains("localCheckpoint"))
+      .map(p => Paths.get("src/main/scala").relativize(p).toString)
+      .toSeq
+    cutters shouldBe Seq("graft/core/Lineage.scala")
+  }
 }

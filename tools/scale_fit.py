@@ -107,6 +107,10 @@ NOISE_SECS = 0.5
 # floor-subtracted times instead of being written off as noise-bounded;
 # below it the residual is within the floor estimate's own scatter
 ADJ_NOISE_SECS = 0.20
+# fewest timed queries a run needs for its low quartile to be a session
+# floor: a SPARK_GRAFT_ONLY run of a handful of queries has no
+# near-zero-work majority, and its "floor" would be its own queries
+MIN_FLOOR_QUERIES = 20
 
 
 def rows(sf_dir, table):
@@ -144,12 +148,13 @@ def run_floor(bench):
     sf0.001), so a low quartile of the distribution tracks the
     session's fixed planning/trigger floor; the handful of memoized
     sub-floor reads below it keep the estimate conservative rather
-    than letting one anomalous 0.0 define it."""
+    than letting one anomalous 0.0 define it. None when the run timed
+    fewer than MIN_FLOOR_QUERIES queries."""
     ts = sorted(t for t in bench["queries"].values()
                 if t is not None and t > 0)
-    if not ts:
-        return 0.0
-    return ts[min(len(ts) - 1, max(0, int(0.25 * len(ts))))]
+    if len(ts) < MIN_FLOOR_QUERIES:
+        return None
+    return ts[int(0.25 * len(ts))]
 
 
 def main():
@@ -179,7 +184,8 @@ def main():
             r = nrows[d][tab]
             trips.append((r, t, fl))
             pts.append((math.log(r), math.log(max(t, 1e-3))))
-            pts_adj.append((math.log(r), math.log(max(t - fl, 1e-3))))
+            if fl is not None:
+                pts_adj.append((math.log(r), math.log(max(t - fl, 1e-3))))
         trips.sort()
         ladder = [(r, t) for r, t, _ in trips]
         if name in FIXED_INPUT:
@@ -187,9 +193,12 @@ def main():
                 "(checked-in log fixture; sf dir irrelevant by design)"))
             continue
         e = slope(pts) if len(pts) >= 2 else None
-        e_adj = slope(pts_adj) if len(pts_adj) >= 2 else None
+        # net of floor only when every point has one
+        e_adj = (slope(pts_adj)
+                 if len(pts_adj) == len(pts) and len(pts) >= 2 else None)
         tmax = max((t for _, t in ladder), default=0.0)
-        tmax_adj = max((t - fl for _, t, fl in trips), default=0.0)
+        tmax_adj = max((t - fl for _, t, fl in trips if fl is not None),
+                       default=0.0)
         if e is None:
             verdict = "unmeasurable"
         elif tmax < NOISE_SECS:
@@ -240,17 +249,20 @@ def main():
         f.write("Estimated per-query session floors (25th percentile of "
                 "each run's times; subtracted for the net-of-floor fits "
                 "that rescue sub-second rows from the noise-bounded "
-                "bucket): " + ", ".join(
-                    f"{d.rsplit('/', 1)[-1]} = {fl:.2f}s"
-                    for d, fl in zip(sf_dirs, floors)) + "\n\n")
-        f.write("Net-of-floor totals (total minus floor x query count — "
-                "the data-work the run actually did, the honest "
-                "cross-round comparison when the registry grows): "
-                + ", ".join(
+                "bucket; n/a below "
+                f"{MIN_FLOOR_QUERIES} timed queries): " + ", ".join(
                     f"{d.rsplit('/', 1)[-1]} = "
-                    f"{b['value'] - fl * len(b['queries']):.1f}s"
-                    for b, d, fl in zip(benches, sf_dirs, floors))
-                + "\n\n")
+                    + (f"{fl:.2f}s" if fl is not None else "n/a")
+                    for d, fl in zip(sf_dirs, floors)) + "\n\n")
+        nets = [f"{d.rsplit('/', 1)[-1]} = "
+                f"{b['value'] - fl * len(b['queries']):.1f}s"
+                for b, d, fl in zip(benches, sf_dirs, floors)
+                if fl is not None]
+        if nets:
+            f.write("Net-of-floor totals (total minus floor x query "
+                    "count — the data-work the run actually did, the "
+                    "honest cross-round comparison when the registry "
+                    "grows): " + ", ".join(nets) + "\n\n")
         f.write("| query | input table | secs @ each rung | rows ladder | "
                 "exponent | verdict |\n|---|---|---|---|---:|---|\n")
         for name, tab, ladder, e, verdict in results:
