@@ -442,12 +442,12 @@ object Corpus {
     val train = corpus
       .select(col(idCol).as("doc_id"),
         explode(TF.tokens(col(textCol))).as("term"))
-    // lazy checkpoint: tf feeds the doc-length roll-up, the document
-    // frequencies AND the contribution join (3 plan references) —
-    // unboundaried, the corpus tokenize+explode scan re-runs per
-    // reference (guide §2.4). dlen = Σ_term tf per doc is identical to
-    // counting the token stream directly (same doc set: a doc appears
-    // in tf iff it has ≥ 1 token).
+    // tf feeds the doc-length roll-up, the document frequencies AND
+    // the contribution join (3 plan references) with no lineage cut
+    // between them, so the corpus tokenize+explode scan runs once per
+    // reference. dlen = Σ_term tf per doc is identical to counting the
+    // token stream directly (same doc set: a doc appears in tf iff it
+    // has ≥ 1 token).
     val tf = train.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val dlen = tf.groupBy("doc_id").agg(sum("tf").as("len"))
     val dfr = tf.groupBy("term").agg(count(lit(1)).as("df"))

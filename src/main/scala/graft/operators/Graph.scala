@@ -206,12 +206,14 @@ object Graph {
       col(dstCol).cast("long").as("dst"))
 
   /** Single-source shortest hop distances over the UNDIRECTED distinct
-    * edge relation: (id, hops) for every node reachable from `source`
-    * (unreachable nodes are absent). Frontier BFS — each round joins only
-    * the NEW frontier against the edge list and anti-joins the visited
-    * set, so total work is O(edges × diameter-rounds) and every shuffle
-    * carries (id, hops) pairs; the visited set is node-sized, the same
-    * state bound label propagation carries. BFS frontier distances are
+    * edge relation: (id, hops) for `source` itself at hop 0 — always,
+    * even when `source` has no edge or is not in the graph at all — and
+    * every other node reachable from it (unreachable nodes are absent).
+    * Frontier BFS — each round joins only the NEW frontier against the
+    * edge list and anti-joins the visited set, so total work is
+    * O(edges × diameter-rounds) and every shuffle carries (id, hops)
+    * pairs; the visited set is node-sized, the same state bound label
+    * propagation carries. BFS frontier distances are
     * final the first time a node is seen (hop counts are unit weights),
     * so no relabeling round is needed — the loop ends when the frontier
     * empties or `maxHops` is hit (loud failure, mirroring

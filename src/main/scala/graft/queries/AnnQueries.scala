@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{Lineage, Tables}
 import graft.functions.HashExprs
 import graft.operators.Ann
+import graft.sources.AnnIndexStore.{Ivf, Pq, Sq8}
 
 /** Similarity-search queries over the embeddings table (operators.Ann).
   *
@@ -93,7 +94,7 @@ object AnnQueries extends Registry {
     *     return zero rows) — the pinned query proves version-0 reads
     *     ignore everything that lands after the pin
     *   - "ivf_delta": the routing table ingested as three per-batch
-    *     DELTA versions (foldBatchDelta), versions 0-1 compacted into
+    *     DELTA versions (Ivf.foldBatchDelta), versions 0-1 compacted into
     *     a snapshot, version 2 left as a trailing delta — the chain
     *     reader exercises snapshot ∪ delta reconstruction
     *
@@ -108,8 +109,8 @@ object AnnQueries extends Registry {
       val embs = Tables.embeddings(s, d)
       val built = Ann.buildDetIvfIndex(embs, "vec_id", "embedding",
         "label")
-      graft.sources.AnnIndexStore.persist(s, store, "ivf", built)
-      graft.sources.AnnIndexStore.prune(s, store, "ivf", keep = 3)
+      Ivf.persist(s, store, "ivf", built)
+      Ivf.prune(s, store, "ivf", keep = 3)
       // the √n-POLICY index ("ivf_nlist"): same machinery, coarse
       // cells refined per Ann.autoSubcellsExact so nlist ~ √n — the
       // quantizer sizing a 100 TB deployment uses (label-only cells
@@ -120,27 +121,23 @@ object AnnQueries extends Registry {
       val builtNlist = Ann.buildDetIvfIndex(embs, "vec_id", "embedding",
         "label", subcells = Ann.autoSubcellsExact(embs.count(),
           embs.select("label").distinct().count()))
-      graft.sources.AnnIndexStore.persist(s, store, "ivf_nlist",
-        builtNlist)
+      Ivf.persist(s, store, "ivf_nlist", builtNlist)
       val builtPq = Ann.buildDetIvfPqIndex(embs, "vec_id", "embedding",
         "label")
-      graft.sources.AnnIndexStore.persistPq(s, store, "ivfpq", builtPq)
-      graft.sources.AnnIndexStore.prunePq(s, store, "ivfpq", keep = 3)
+      Pq.persist(s, store, "ivfpq", builtPq)
+      Pq.prune(s, store, "ivfpq", keep = 3)
       val builtSq8 = Ann.buildSq8Index(embs, "vec_id", "embedding")
-      graft.sources.AnnIndexStore.persistSq8(s, store, "sq8", builtSq8)
-      graft.sources.AnnIndexStore.pruneSq8(s, store, "sq8", keep = 3)
-      graft.sources.AnnIndexStore.persistVersion(store, "ivf_pinned",
-        PinnedVersion, built)
-      graft.sources.AnnIndexStore.persistVersion(store, "ivf_pinned",
-        PinnedVersion + 1,
+      Sq8.persist(s, store, "sq8", builtSq8)
+      Sq8.prune(s, store, "sq8", keep = 3)
+      Ivf.persistVersion(store, "ivf_pinned", PinnedVersion, built)
+      Ivf.persistVersion(store, "ivf_pinned", PinnedVersion + 1,
         Ann.IvfIndexRelations(built.centroids, built.home.limit(0)))
       (0L until 3L).foreach { b =>
-        graft.sources.AnnIndexStore.foldBatchDelta(store, "ivf_delta",
-          built.centroids, baseVersion = -1L)(
+        Ivf.foldBatchDelta(store, "ivf_delta", -1L, built.centroids)(
           built.home.filter(col("id") % 3 === b)
             .select(col("id").as("vec_id"), col("cell")), b)
       }
-      graft.sources.AnnIndexStore.compact(s, store, "ivf_delta", upTo = 1L)
+      Ivf.compact(s, store, "ivf_delta", upTo = 1L)
       // the same three-trigger delta ingest + partial compaction for
       // the two COMPRESSED families — per-vector relations (routing
       // rows, code words) land as O(batch) deltas, the static quantizer
@@ -150,20 +147,17 @@ object AnnQueries extends Registry {
           col("id") === col("cid"))
         .select(col("id").as("vec_id"), col("cell"), col("codes"))
       (0L until 3L).foreach { b =>
-        graft.sources.AnnIndexStore.foldBatchDeltaPq(store, "ivfpq_delta",
-          builtPq.centroids, builtPq.codebook, baseVersion = -1L)(
+        Pq.foldBatchDelta(store, "ivfpq_delta", -1L, builtPq.codebook,
+          builtPq.centroids)(
           pqBatch.filter(col("vec_id") % 3 === b), b)
       }
-      graft.sources.AnnIndexStore.compactPq(s, store, "ivfpq_delta",
-        upTo = 1L)
+      Pq.compact(s, store, "ivfpq_delta", upTo = 1L)
       (0L until 3L).foreach { b =>
-        graft.sources.AnnIndexStore.foldBatchDeltaSq8(store, "sq8_delta",
-          builtSq8.ranges, baseVersion = -1L)(
+        Sq8.foldBatchDelta(store, "sq8_delta", -1L, builtSq8.ranges)(
           builtSq8.codes.filter(col("id") % 3 === b)
             .select(col("id").as("vec_id"), col("codes")), b)
       }
-      graft.sources.AnnIndexStore.compactSq8(s, store, "sq8_delta",
-        upTo = 1L)
+      Sq8.compact(s, store, "sq8_delta", upTo = 1L)
       store
     }
 
@@ -377,7 +371,7 @@ object AnnQueries extends Registry {
     // serve loses nothing. Retention keeps the 3 newest versions.
     "ann_ivf_served_topk" -> ((s, d) => {
       val store = ensureIvfStore(s, d)
-      val loaded = graft.sources.AnnIndexStore.load(s, store, "ivf")
+      val loaded = Ivf.load(s, store, "ivf")
       Ann.ivfIndexTopK(loaded, Tables.embeddings(s, d), "vec_id",
         "embedding", col("id") % 50 === 0 && col("id") < 2000, k = 5)
     }),
@@ -392,14 +386,13 @@ object AnnQueries extends Registry {
     // snapshot while ingest folds new versions concurrently.
     "ann_ivf_pinned_topk" -> ((s, d) => {
       val store = ensureIvfStore(s, d)
-      val pinned = graft.sources.AnnIndexStore
-        .loadVersion(s, store, "ivf_pinned", PinnedVersion)
+      val pinned = Ivf.loadVersion(s, store, "ivf_pinned", PinnedVersion)
       Ann.ivfIndexTopK(pinned, Tables.embeddings(s, d), "vec_id",
         "embedding", col("id") % 50 === 0 && col("id") < 2000, k = 5)
     }),
 
     // The DELTA-maintenance round trip: the setup ingests the routing
-    // table as three per-trigger DELTA versions (foldBatchDelta — each
+    // table as three per-trigger DELTA versions (Ivf.foldBatchDelta — each
     // write O(batch), not O(index)), compacts the first two into a
     // snapshot, and leaves the third as an uncompacted delta; the query
     // reconstructs the chain view (snapshot ∪ trailing delta) and
@@ -408,8 +401,7 @@ object AnnQueries extends Registry {
     // one-shot build.
     "ann_ivf_delta_served_topk" -> ((s, d) => {
       val store = ensureIvfStore(s, d)
-      val chain = graft.sources.AnnIndexStore
-        .loadChain(s, store, "ivf_delta")
+      val chain = Ivf.loadChain(s, store, "ivf_delta")
       Ann.ivfIndexTopK(chain, Tables.embeddings(s, d), "vec_id",
         "embedding", col("id") % 50 === 0 && col("id") < 2000, k = 5)
     }),
@@ -443,7 +435,7 @@ object AnnQueries extends Registry {
 
     "ann_ivf_nlist_served_topk" -> ((s, d) => {
       val store = ensureIvfStore(s, d)
-      val loaded = graft.sources.AnnIndexStore.load(s, store, "ivf_nlist")
+      val loaded = Ivf.load(s, store, "ivf_nlist")
       Ann.ivfIndexTopK(loaded, Tables.embeddings(s, d), "vec_id",
         "embedding", col("id") % 50 === 0 && col("id") < 2000, k = 5)
     }),
@@ -478,13 +470,13 @@ object AnnQueries extends Registry {
     // FAISS family too.
     "ann_sq8_served_topk" -> ((s, d) => {
       val store = ensureIvfStore(s, d)
-      val loaded = graft.sources.AnnIndexStore.loadSq8(s, store, "sq8")
+      val loaded = Sq8.load(s, store, "sq8")
       Ann.sq8IndexTopK(loaded, Tables.embeddings(s, d), "vec_id",
         "embedding", col("id") % 50 === 0 && col("id") < 2000, k = 5)
     }),
 
     // DELTA maintenance for the SQ8 family — the byte-code relation
-    // ingested as three O(batch) delta versions (foldBatchDeltaSq8),
+    // ingested as three O(batch) delta versions (Sq8.foldBatchDelta),
     // versions 0-1 compacted, version 2 left as a trailing delta; the
     // query reconstructs the chain view and serves from it. Hash-green
     // on ann_sq8_det_topk's oracle = delta ingestion + compaction +
@@ -492,8 +484,7 @@ object AnnQueries extends Registry {
     // either.
     "ann_sq8_delta_served_topk" -> ((s, d) => {
       val store = ensureIvfStore(s, d)
-      val chain = graft.sources.AnnIndexStore
-        .loadChainSq8(s, store, "sq8_delta")
+      val chain = Sq8.loadChain(s, store, "sq8_delta")
       Ann.sq8IndexTopK(chain, Tables.embeddings(s, d), "vec_id",
         "embedding", col("id") % 50 === 0 && col("id") < 2000, k = 5)
     }),
@@ -549,14 +540,14 @@ object AnnQueries extends Registry {
     // oracle: the hash proves the round trip loses nothing.
     "ann_ivf_pq_served_topk" -> ((s, d) => {
       val store = ensureIvfStore(s, d)
-      val loaded = graft.sources.AnnIndexStore.loadPq(s, store, "ivfpq")
+      val loaded = Pq.load(s, store, "ivfpq")
       Ann.ivfPqIndexTopK(loaded, Tables.embeddings(s, d), "vec_id",
         "embedding", col("id") % 50 === 0 && col("id") < 2000, k = 5)
     }),
 
     // DELTA maintenance for the flagship compressed family: BOTH
     // per-vector relations (routing rows AND PQ code words) ingested as
-    // three O(batch) delta versions (foldBatchDeltaPq), versions 0-1
+    // three O(batch) delta versions (Pq.foldBatchDelta), versions 0-1
     // compacted into full snapshots, version 2 left as a trailing
     // delta on each chain; the query reconstructs both chains plus the
     // static quantizer pair and serves. Hash-green on
@@ -564,8 +555,7 @@ object AnnQueries extends Registry {
     // extends to IVF-PQ with nothing lost.
     "ann_ivf_pq_delta_served_topk" -> ((s, d) => {
       val store = ensureIvfStore(s, d)
-      val chain = graft.sources.AnnIndexStore
-        .loadChainPq(s, store, "ivfpq_delta")
+      val chain = Pq.loadChain(s, store, "ivfpq_delta")
       Ann.ivfPqIndexTopK(chain, Tables.embeddings(s, d), "vec_id",
         "embedding", col("id") % 50 === 0 && col("id") < 2000, k = 5)
     }),

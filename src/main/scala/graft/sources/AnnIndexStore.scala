@@ -12,263 +12,278 @@ import graft.operators.Ann.{IvfIndexRelations, IvfPqIndexRelations, Sq8IndexRela
   * quantizer (the SDFS versioned-blob contract, sdfs.go:276-283,
   * applied to index artifacts instead of raw files).
   *
-  * An index version is two parquet relations written under one version
-  * number: `<name>_centroids/version=<v>` (the coarse quantizer —
-  * cell, dim, ci in integer micro-units) and `<name>_home/version=<v>`
-  * (the inverted-file routing table — id, cell). Each version is
-  * SELF-CONTAINED (the centroid relation is carried into every
-  * version, a few thousand rows of longs), so a reader pins one
-  * version number and gets a consistent snapshot with no delta
-  * reconstruction — the property that lets serve and ingest proceed
-  * concurrently. Versions are immutable once written; [[prune]] is the
-  * retention knob.
+  * One implementation serves the three index families ([[Ivf]],
+  * [[Pq]], [[Sq8]]); a [[Family]] only names its relations. An index
+  * version is the family's relations written under one version number
+  * as `<name>_<relation>/version=<v>`: the PER-VECTOR relations (one
+  * row per vector: routing cell, code words) first, then the STATIC
+  * quantizer relations, the last of which is the completeness marker.
+  * Each version is SELF-CONTAINED (the quantizer is carried into every
+  * version, a few thousand rows of longs), so a reader pins one version
+  * number and gets a consistent snapshot — the property that lets serve
+  * and ingest proceed concurrently. Versions are immutable once
+  * written; [[Family.prune]] is the retention knob.
   *
-  * Scale note on [[foldBatch]]: each trigger snapshots the FULL routing
-  * table (previous rows ∪ new assignments). At 1B vectors that is a
-  * ~16 GB parquet rewrite per version — the snapshot trade (serve
-  * reads exactly one version, zero reconstruction) over a delta log
-  * (cheaper writes, compaction machinery). For trigger intervals in
-  * minutes the snapshot write amortizes; a sub-second-trigger
-  * deployment would layer delta versions + periodic compaction on the
-  * same store contract.
+  * Two maintenance modes converge on that contract. [[Family.foldBatch]]
+  * snapshots the FULL per-vector relations every trigger (previous rows
+  * ∪ new rows): at 1B vectors a ~16 GB parquet rewrite per version,
+  * which amortizes at minute-scale triggers. [[Family.foldBatchDelta]]
+  * writes O(batch) instead — each per-vector relation lands only the
+  * trigger's rows under `<name>_<relation>_delta` — and
+  * [[Family.compact]] folds the delta chain into a snapshot AT THE SAME
+  * version number ([[DeltaChain]]), so after compaction a reader's view
+  * is identical to what the snapshot fold would have produced.
+  *
+  * Family-distinct names (r15; FORMAT BREAK): the PQ and SQ8 code
+  * relations are `_pqcodes` and `_sq8codes` (and their `_delta`
+  * chains), so one index name serving both families never intersects
+  * one family's version set with the other's codes. A store persisted
+  * before r15 under the shared "<name>_codes" would need a one-time
+  * rename; no loader fallback is kept, so a legacy layout fails loudly
+  * as "no complete versions" instead of serving the wrong codes.
   */
 object AnnIndexStore {
 
-  private def centName(name: String) = s"${name}_centroids"
-  private def homeName(name: String) = s"${name}_home"
+  /** One index family's persisted layout. `perVector` maps each
+    * per-vector relation's name suffix to its payload column (the
+    * column carried next to `vec_id` in a fold's batch); `static` lists
+    * the quantizer relations in write order, the last one the
+    * completeness marker. `parts` and `of` convert the family's
+    * relations value to and from its relations in `perVector ++
+    * static` order. Every fold takes the quantizer relations in
+    * `static` order. */
+  final class Family[R](perVector: Seq[(String, String)],
+                        static: Seq[String],
+                        parts: R => Seq[DataFrame],
+                        of: Seq[DataFrame] => R) {
 
-  /** Versions COMMITTED for BOTH relations, ascending — a version
-    * missing either half (e.g. a writer died between the two puts) is
-    * invisible to readers, which is what makes the two-file commit
-    * safe: the routing table is written first, the centroid half last,
-    * so a version becomes visible only complete. Each half's own
-    * visibility is the store's per-version commit marker (written
-    * after the parquet job commits), so a concurrent reader can never
-    * list a half whose part files are still in flight. */
-  def versions(spark: SparkSession, store: VersionedStore,
-               name: String): Seq[Long] =
-    store.versions(spark, centName(name))
-      .intersect(store.versions(spark, homeName(name)))
+    private def rels(name: String, suffixes: Seq[String]) =
+      suffixes.map(s => s"${name}_$s")
+    private def vecRels(name: String) = rels(name, perVector.map(_._1))
+    private def deltaRels(name: String) =
+      rels(name, perVector.map(_._1 + "_delta"))
+    private def staticRels(name: String) = rels(name, static)
+    /** A full version's relations in write order. */
+    private def fullRels(name: String) = vecRels(name) ++ staticRels(name)
 
-  /** Persist `index` as the next version; returns the version written.
-    * Write order: home first, centroids second (see [[versions]]). */
-  def persist(spark: SparkSession, store: VersionedStore, name: String,
-              index: IvfIndexRelations): Long = {
-    val v = versions(spark, store, name).lastOption.fold(0L)(_ + 1)
-    persistVersion(store, name, v, index)
-    v
-  }
+    private def complete(spark: SparkSession, store: VersionedStore,
+                         names: Seq[String]): Seq[Long] =
+      names.map(store.versions(spark, _)).reduce(_ intersect _)
 
-  /** Persist at an EXPLICIT version — idempotent per version (a
-    * replayed writer overwrites its own version), the exactly-once
-    * contract streaming folds rely on. */
-  def persistVersion(store: VersionedStore, name: String, v: Long,
-                     index: IvfIndexRelations): Unit = {
-    store.putVersion(homeName(name), v, index.home)
-    store.putVersion(centName(name), v, index.centroids)
-  }
-
-  /** Load the newest complete version. */
-  def load(spark: SparkSession, store: VersionedStore,
-           name: String): IvfIndexRelations = {
-    val vs = versions(spark, store, name)
-    require(vs.nonEmpty, s"no complete versions of index $name")
-    loadVersion(spark, store, name, vs.last)
-  }
-
-  /** Load one pinned version — consistent-snapshot reads while newer
-    * versions land. */
-  def loadVersion(spark: SparkSession, store: VersionedStore,
-                  name: String, v: Long): IvfIndexRelations =
-    IvfIndexRelations(
-      store.getVersion(spark, centName(name), v),
-      store.getVersion(spark, homeName(name), v))
-
-  /** Retention: keep the newest `keep` complete versions, delete the
-    * rest (both halves). */
-  def prune(spark: SparkSession, store: VersionedStore, name: String,
-            keep: Int): Unit =
-    versions(spark, store, name).dropRight(keep).foreach { v =>
-      // centroid half first: a reader lists complete versions only, so
-      // deleting in reverse write order keeps every surviving version
-      // complete at all times
-      store.deleteVersion(spark, centName(name), v)
-      store.deleteVersion(spark, homeName(name), v)
+    /** Write `dfs` at version `v`, in order — per-vector halves first,
+      * the completeness marker last, so a version becomes visible only
+      * complete. */
+    private def write(store: VersionedStore, names: Seq[String], v: Long,
+                      dfs: Seq[DataFrame]): Unit = {
+      require(names.length == dfs.length,
+        s"expected ${names.length} relations for ${names.mkString(", ")}")
+      names.zip(dfs).foreach { case (n, df) => store.putVersion(n, v, df) }
     }
 
-  // ---- IVF-PQ (four relations per version; same commit contract:
-  // centroids written LAST as the completeness marker, so a version is
-  // visible only with all four halves present) ----
+    /** One row per id and per-vector relation: (id, payload). */
+    private def batchRows(batch: DataFrame): Seq[DataFrame] =
+      perVector.map { case (_, c) =>
+        batch.select(col("vec_id").as("id"), col(c)).distinct() }
 
-  // FAMILY-DISTINCT base names (r15; FORMAT BREAK): the PQ and SQ8 code
-  // snapshots both used "${name}_codes", so one index name serving both
-  // families cross-contaminated version sets through compacted
-  // snapshots and full versions — the same collision the r14 delta
-  // suffix split (_pqcodes_delta / _sq8codes_delta) fixed for deltas.
-  // Any store persisted before r15 under the old shared suffix (none
-  // exist in this repo — stores are built per session under /tmp) would
-  // need a one-time rename of "<name>_codes" to the family-specific
-  // name; no loader fallback is kept deliberately, so a legacy layout
-  // fails loudly as "no complete versions" instead of serving the wrong
-  // family's codes.
-  private def codesName(name: String) = s"${name}_pqcodes"
-  private def cbName(name: String) = s"${name}_codebook"
-
-  /** Versions complete across all four IVF-PQ relations, ascending. */
-  def versionsPq(spark: SparkSession, store: VersionedStore,
+    /** Versions COMMITTED for every relation, ascending — a version
+      * missing any half (a writer died between two puts) is invisible
+      * to readers. Each half's own visibility is the store's per-version
+      * commit marker, so a concurrent reader never lists a half whose
+      * part files are still in flight. */
+    def versions(spark: SparkSession, store: VersionedStore,
                  name: String): Seq[Long] =
-    Seq(homeName(name), codesName(name), cbName(name), centName(name))
-      .map(store.versions(spark, _))
-      .reduce(_ intersect _)
+      complete(spark, store, fullRels(name))
 
-  /** Persist a full IVF-PQ index as the next version. */
-  def persistPq(spark: SparkSession, store: VersionedStore, name: String,
-                index: IvfPqIndexRelations): Long = {
-    val v = versionsPq(spark, store, name).lastOption.fold(0L)(_ + 1)
-    store.putVersion(homeName(name), v, index.home)
-    store.putVersion(codesName(name), v, index.codes)
-    store.putVersion(cbName(name), v, index.codebook)
-    store.putVersion(centName(name), v, index.centroids)
-    v
-  }
+    /** Persist `index` as the next version; returns the version written. */
+    def persist(spark: SparkSession, store: VersionedStore, name: String,
+                index: R): Long = {
+      val v = versions(spark, store, name).lastOption.fold(0L)(_ + 1)
+      persistVersion(store, name, v, index)
+      v
+    }
 
-  /** Load the newest complete IVF-PQ version. */
-  def loadPq(spark: SparkSession, store: VersionedStore,
-             name: String): IvfPqIndexRelations = {
-    val vs = versionsPq(spark, store, name)
-    require(vs.nonEmpty, s"no complete IVF-PQ versions of index $name")
-    val v = vs.last
-    IvfPqIndexRelations(
-      store.getVersion(spark, centName(name), v),
-      store.getVersion(spark, homeName(name), v),
-      store.getVersion(spark, cbName(name), v),
-      store.getVersion(spark, codesName(name), v))
-  }
+    /** Persist at an EXPLICIT version — idempotent per version (a
+      * replayed writer overwrites its own version), the exactly-once
+      * contract streaming folds rely on. */
+    def persistVersion(store: VersionedStore, name: String, v: Long,
+                       index: R): Unit =
+      write(store, fullRels(name), v, parts(index))
 
-  /** Retention for IVF-PQ versions: keep the newest `keep`. */
-  def prunePq(spark: SparkSession, store: VersionedStore, name: String,
+    /** Load the newest complete version. */
+    def load(spark: SparkSession, store: VersionedStore, name: String): R = {
+      val vs = versions(spark, store, name)
+      require(vs.nonEmpty, s"no complete versions of index $name")
+      loadVersion(spark, store, name, vs.last)
+    }
+
+    /** Load one pinned version — consistent-snapshot reads while newer
+      * versions land. */
+    def loadVersion(spark: SparkSession, store: VersionedStore,
+                    name: String, v: Long): R =
+      of(fullRels(name).map(store.getVersion(spark, _, v)))
+
+    /** Retention: keep the newest `keep` complete versions, delete the
+      * rest in REVERSE write order (marker first), so every surviving
+      * version stays complete at all times. */
+    def prune(spark: SparkSession, store: VersionedStore, name: String,
               keep: Int): Unit =
-    versionsPq(spark, store, name).dropRight(keep).foreach { v =>
-      // completeness marker first (see prune)
-      store.deleteVersion(spark, centName(name), v)
-      store.deleteVersion(spark, cbName(name), v)
-      store.deleteVersion(spark, codesName(name), v)
-      store.deleteVersion(spark, homeName(name), v)
+      versions(spark, store, name).dropRight(keep).foreach { v =>
+        fullRels(name).reverse.foreach(store.deleteVersion(spark, _, v))
+      }
+
+    /** foreachBatch body for SNAPSHOT maintenance: micro-batch `b` folds
+      * into version `baseVersion + 1 + b` = (previous version's rows ∪
+      * this batch's rows, quantizer carried forward). `batch` carries
+      * `vec_id` plus each per-vector payload column (e.g.
+      * [[graft.streaming.AnnIngest.assignCells]] output for IVF). Version
+      * arithmetic follows Spark's checkpointed batchId, so a replayed
+      * batch recomputes FROM VERSIONS BEFORE ITS OWN and overwrites
+      * itself — exactly-once versions on at-least-once delivery.
+      *
+      * The merge is LATEST-WINS ([[latestById]]), not distinct-over-
+      * union: an id RE-INGESTED with a changed payload (legal beyond the
+      * lateness horizon) must keep only the batch's row. */
+    def foldBatch(store: VersionedStore, name: String, baseVersion: Long,
+                  quantizer: DataFrame*)
+                 (batch: DataFrame, batchId: Long): Unit = {
+      val spark = batch.sparkSession
+      val v = baseVersion + 1 + batchId
+      val fresh = batchRows(batch)
+      val merged = versions(spark, store, name).filter(_ < v).lastOption
+        .fold(fresh) { pv =>
+          vecRels(name).zip(fresh).map { case (n, df) =>
+            latestById(Seq((pv, store.getVersion(spark, n, pv)), (v, df)))
+          }
+        }
+      write(store, fullRels(name), v, merged ++ quantizer)
     }
 
-  // ---- SQ8 (two relations per version; same commit contract: the
-  // ranges half — the trained quantizer — is written LAST as the
-  // completeness marker, so a version is visible only with both
-  // halves present) ----
+    /** Complete DELTA versions (every delta half + every static half),
+      * ascending. */
+    def deltaVersions(spark: SparkSession, store: VersionedStore,
+                      name: String): Seq[Long] =
+      complete(spark, store, deltaRels(name) ++ staticRels(name))
 
-  // family-distinct base name — see codesName's format-break note
-  private def sq8CodesName(name: String) = s"${name}_sq8codes"
-  private def sq8RangesName(name: String) = s"${name}_ranges"
+    /** Every version a delta-chain reader may pin: full snapshots plus
+      * uncompacted deltas, ascending. (Tighter than
+      * [[DeltaChain.versions]]: a pinnable version here also needs its
+      * static halves.) */
+    def chainVersions(spark: SparkSession, store: VersionedStore,
+                      name: String): Seq[Long] =
+      (versions(spark, store, name) ++ deltaVersions(spark, store, name))
+        .distinct.sorted
 
-  /** Versions complete across both SQ8 relations, ascending. */
-  def versionsSq8(spark: SparkSession, store: VersionedStore,
-                  name: String): Seq[Long] =
-    store.versions(spark, sq8CodesName(name))
-      .intersect(store.versions(spark, sq8RangesName(name)))
+    /** foreachBatch body for DELTA maintenance — [[foldBatch]]'s O(batch)
+      * twin: same version arithmetic, same commit order (delta halves
+      * first, the marker last). Exactly-once is stronger here: a delta is
+      * a pure function of its own batch against the static quantizer, so
+      * a replayed batch rewrites an identical delta without reading prior
+      * state. */
+    def foldBatchDelta(store: VersionedStore, name: String,
+                       baseVersion: Long, quantizer: DataFrame*)
+                      (batch: DataFrame, batchId: Long): Unit =
+      write(store, deltaRels(name) ++ staticRels(name),
+        baseVersion + 1 + batchId, batchRows(batch) ++ quantizer)
 
-  /** Persist a full SQ8 index as the next version. */
-  def persistSq8(spark: SparkSession, store: VersionedStore,
-                 name: String, index: Sq8IndexRelations): Long = {
-    val v = versionsSq8(spark, store, name).lastOption.fold(0L)(_ + 1)
-    store.putVersion(sq8CodesName(name), v, index.codes)
-    store.putVersion(sq8RangesName(name), v, index.ranges)
-    v
-  }
-
-  /** Load the newest complete SQ8 version. */
-  def loadSq8(spark: SparkSession, store: VersionedStore,
-              name: String): Sq8IndexRelations = {
-    val vs = versionsSq8(spark, store, name)
-    require(vs.nonEmpty, s"no complete SQ8 versions of index $name")
-    val v = vs.last
-    Sq8IndexRelations(
-      store.getVersion(spark, sq8RangesName(name), v),
-      store.getVersion(spark, sq8CodesName(name), v))
-  }
-
-  /** Retention for SQ8 versions: keep the newest `keep`. */
-  def pruneSq8(spark: SparkSession, store: VersionedStore, name: String,
-               keep: Int): Unit =
-    versionsSq8(spark, store, name).dropRight(keep).foreach { v =>
-      // completeness marker first (see prune)
-      store.deleteVersion(spark, sq8RangesName(name), v)
-      store.deleteVersion(spark, sq8CodesName(name), v)
+    /** [[foldBatchDelta]] with PERIODIC COMPACTION — the long-running
+      * ingest form (NearDupIngest.startDelta's contract, mirrored): every
+      * `compactEvery` triggers the covered deltas fold into a snapshot at
+      * the newest version, so a reader's reconstruction fan-in stays at
+      * 1 snapshot + at most `compactEvery` trailing deltas however long
+      * the ingest runs. Retention of old snapshots stays [[prune]]'s job. */
+    def foldBatchDeltaCompacting(store: VersionedStore, name: String,
+                                 baseVersion: Long, compactEvery: Int,
+                                 quantizer: DataFrame*)
+                                (batch: DataFrame, batchId: Long): Unit = {
+      // skip EMPTY batches (watermark-advance triggers emit them between
+      // every data batch) — a 1-second-trigger ingest would otherwise
+      // double its version count with empty deltas
+      if (!batch.isEmpty)
+        foldBatchDelta(store, name, baseVersion, quantizer: _*)(batch, batchId)
+      if ((batchId + 1) % compactEvery == 0) {
+        // compact at the newest COMPLETE chain version, not at this
+        // batchId — empty batches leave version-number gaps, and a
+        // snapshot at a version with no static halves would be invisible
+        // to chain readers
+        val spark = batch.sparkSession
+        chainVersions(spark, store, name).lastOption
+          .foreach(compact(spark, store, name, _))
+      }
     }
 
-  /** foreachBatch body for STREAMING index maintenance: micro-batch `b`
-    * of [[graft.streaming.AnnIngest.assignCells]] output folds into
-    * index version `baseVersion + 1 + b` = (previous routing rows ∪
-    * this batch's assignments, quantizer carried forward). Version
-    * arithmetic is driven by Spark's checkpointed batchId, so a
-    * replayed batch recomputes FROM VERSIONS BEFORE ITS OWN and
-    * overwrites itself — exactly-once index versions on top of
-    * at-least-once batch delivery. `centroids` is the static quantizer
-    * the assignments were routed against (the plane's relation form).
-    *
-    *   AnnIngest.assignCells(vecs, plane, lateness).toDF()
-    *     .writeStream.foreachBatch(
-    *        AnnIndexStore.foldBatch(store, "ivf", centRel, v0) _)
-    */
-  def foldBatch(store: VersionedStore, name: String,
-                centroids: DataFrame, baseVersion: Long)
-               (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val v = baseVersion + 1 + batchId
-    val newHome = batch.select(col("vec_id").as("id"), col("cell"))
-      .distinct()
-    val prev = versions(spark, store, name).filter(_ < v).lastOption
-    val merged = prev match {
-      // LATEST-WINS merge, not distinct-over-union: a vector
-      // re-delivered across versions routes identically against the
-      // static plane and collapses either way, but an id RE-INGESTED
-      // with a changed payload (legal beyond the lateness horizon)
-      // must keep only the batch's row — distinct() kept both, the
-      // same stale-duplicate defect latestById fixes for delta chains,
-      // so the two maintenance modes really do converge on the same
-      // persisted contract
-      case Some(pv) =>
-        latestById(Seq(
-          (pv, store.getVersion(spark, homeName(name), pv)),
-          (v, newHome)))
-      case None => newHome
+    /** Reconstruct the view at pinned chain version `v`: each per-vector
+      * relation is the newest snapshot at or below `v` ∪ the deltas
+      * after it, deduped by [[latestById]]; the static halves read
+      * directly at `v`. */
+    def loadDeltaChain(spark: SparkSession, store: VersionedStore,
+                       name: String, v: Long): R = {
+      require(chainVersions(spark, store, name).contains(v),
+        s"no complete chain version $v of index $name")
+      of(vecRels(name).zip(deltaRels(name)).map { case (b, d) =>
+        latestById(DeltaChain.readParts(spark, store, b, d, v))
+      } ++ staticRels(name).map(store.getVersion(spark, _, v)))
     }
-    persistVersion(store, name, v, IvfIndexRelations(centroids, merged))
+
+    /** Load the newest chain version. */
+    def loadChain(spark: SparkSession, store: VersionedStore,
+                  name: String): R = {
+      val vs = chainVersions(spark, store, name)
+      require(vs.nonEmpty, s"no chain versions of index $name")
+      loadDeltaChain(spark, store, name, vs.last)
+    }
+
+    /** Fold every delta at or below `upTo` into a full snapshot AT
+      * version `upTo` (readers at `upTo` switch from chain reconstruction
+      * to snapshot reads with no visible change), then delete the covered
+      * deltas. Each snapshot commits BEFORE any delta it covers is
+      * deleted, and the static halves at `upTo` are never touched. The
+      * per-vector chains carry identical version sets (the delta fold
+      * writes them together). Static halves of covered delta-only
+      * versions below `upTo` are dropped, marker first: compaction
+      * collapses pinnable history at or below its high-water mark, the
+      * retention semantics [[prune]] established. */
+    def compact(spark: SparkSession, store: VersionedStore, name: String,
+                upTo: Long): Unit = {
+      val covered = vecRels(name).zip(deltaRels(name)).map { case (b, d) =>
+        DeltaChain.compactParts(spark, store, b, d, upTo, latestById)
+      }.head
+      val bases = versions(spark, store, name).toSet
+      covered.filter(dv => dv != upTo && !bases.contains(dv)).foreach { dv =>
+        staticRels(name).reverse.foreach(store.deleteVersion(spark, _, dv))
+      }
+    }
   }
 
-  // ---- Delta versions + periodic compaction: the scale path for
-  // sub-minute triggers. [[foldBatch]] rewrites O(index) per trigger —
-  // the right trade at minute-scale intervals, ruinous below them (a
-  // 1B-vector routing table is a ~16 GB rewrite per trigger).
-  // [[foldBatchDelta]] writes O(batch) instead: each trigger lands ONLY
-  // its own assignments as a DELTA version; [[compact]] periodically
-  // folds the delta chain into a full snapshot AT THE SAME version
-  // number under the snapshot name, so after compaction a reader's view
-  // is byte-identical to what [[foldBatch]] would have produced — the
-  // two maintenance modes converge on the same persisted contract.
-  // Exactly-once is STRONGER here than in the snapshot fold: a delta's
-  // content is a pure function of its own batch (assignments against
-  // the static quantizer), independent of every previous version, so a
-  // replayed batch rewrites an identical delta with no read of prior
-  // state at all. ----
+  /** Det-IVF: routing table `home` (id, cell); quantizer `centroids`. */
+  val Ivf = new Family[IvfIndexRelations](
+    Seq("home" -> "cell"), Seq("centroids"),
+    r => Seq(r.home, r.centroids),
+    { case Seq(home, centroids) => IvfIndexRelations(centroids, home) })
 
-  private def deltaName(name: String) = s"${name}_home_delta"
+  /** IVF-PQ: routing table and code words per vector; quantizer
+    * `codebook`, then `centroids`. */
+  val Pq = new Family[IvfPqIndexRelations](
+    Seq("home" -> "cell", "pqcodes" -> "codes"),
+    Seq("codebook", "centroids"),
+    r => Seq(r.home, r.codes, r.codebook, r.centroids),
+    { case Seq(home, codes, codebook, centroids) =>
+      IvfPqIndexRelations(centroids, home, codebook, codes) })
 
-  /** Enforce the one-row-per-id invariant at the CHAIN-READ boundary
-    * with LATEST-VERSION-WINS: an id re-ingested with a CHANGED
-    * payload (legal beyond the streaming lateness horizon — the
-    * watermark dedup only suppresses replays inside it) lands rows in
-    * multiple delta versions, and a distinct() would keep BOTH — a
-    * stale routing/code row then duplicates (query, cand) pairs and
-    * lets one candidate occupy two TopK slots. Dedup by id, newest
-    * chain version wins; ties within a version break by payload max
-    * (deterministic — within-version rows are already distinct at
-    * write). One partial-agg shuffle over the per-vector relation,
-    * the same cost class as the distinct() it replaces. */
+  /** SQ8: byte codes per vector; the trained `ranges` quantizer. */
+  val Sq8 = new Family[Sq8IndexRelations](
+    Seq("sq8codes" -> "codes"), Seq("ranges"),
+    r => Seq(r.codes, r.ranges),
+    { case Seq(codes, ranges) => Sq8IndexRelations(ranges, codes) })
+
+  /** Enforce one row per id with LATEST-VERSION-WINS: an id re-ingested
+    * with a CHANGED payload (legal beyond the streaming lateness horizon
+    * — the watermark dedup only suppresses replays inside it) lands rows
+    * in several versions, and a distinct() would keep BOTH — a stale
+    * routing/code row then duplicates (query, cand) pairs and lets one
+    * candidate occupy two TopK slots. Ties within a version break by
+    * payload max (deterministic — within-version rows are already
+    * distinct at write). One partial-agg shuffle over the per-vector
+    * relation, the same cost class as a distinct(). */
   private def latestById(parts: Seq[(Long, DataFrame)]): DataFrame = {
     val tagged = parts
       .map { case (v, df) => df.withColumn("_chain_v", lit(v)) }
@@ -279,366 +294,5 @@ object AnnIndexStore {
       .agg(max(struct((col("_chain_v") +: payload.map(col)): _*))
         .as("_s"))
       .select(col("id") +: payload.map(c => col(s"_s.$c").as(c)): _*)
-  }
-
-  /** Complete DELTA versions (delta routing half + its centroid half),
-    * ascending. */
-  def deltaVersions(spark: SparkSession, store: VersionedStore,
-                    name: String): Seq[Long] =
-    store.versions(spark, deltaName(name))
-      .intersect(store.versions(spark, centName(name)))
-
-  /** Every version a delta-chain reader may pin: compacted/full
-    * snapshots plus uncompacted deltas, ascending. (Tighter than
-    * [[DeltaChain.versions]]: a pinnable version here also needs its
-    * centroid half.) */
-  def chainVersions(spark: SparkSession, store: VersionedStore,
-                    name: String): Seq[Long] =
-    (versions(spark, store, name) ++ deltaVersions(spark, store, name))
-      .distinct.sorted
-
-  /** foreachBatch body for DELTA index maintenance — the
-    * per-trigger-cost-scales-with-the-batch twin of [[foldBatch]], same
-    * version arithmetic (baseVersion + 1 + batchId), same commit order
-    * (routing half first, centroid half as the completeness marker). */
-  def foldBatchDelta(store: VersionedStore, name: String,
-                     centroids: DataFrame, baseVersion: Long)
-                    (batch: DataFrame, batchId: Long): Unit = {
-    val v = baseVersion + 1 + batchId
-    store.putVersion(deltaName(name), v,
-      batch.select(col("vec_id").as("id"), col("cell")).distinct())
-    store.putVersion(centName(name), v, centroids)
-  }
-
-  /** [[foldBatchDelta]] with PERIODIC COMPACTION — the long-running-
-    * ingest form (NearDupIngest.startDelta's contract, mirrored):
-    * every `compactEvery` triggers the covered deltas fold into a
-    * snapshot at the newest version, so the reconstruction fan-in a
-    * reader pays is bounded at 1 snapshot + at most `compactEvery`
-    * trailing deltas no matter how long the ingest runs. Compaction is
-    * invisible to readers (the snapshot commits before any covered
-    * delta is deleted — DeltaChain.compactParts); retention of OLD
-    * snapshots stays [[prune]]'s job. */
-  def foldBatchDeltaCompacting(store: VersionedStore, name: String,
-                               centroids: DataFrame, baseVersion: Long,
-                               compactEvery: Int)
-                              (batch: DataFrame, batchId: Long): Unit = {
-    // skip EMPTY batches (watermark-advance triggers emit them between
-    // every data batch) — a 1-second-trigger ingest would otherwise
-    // double its version count with empty deltas
-    if (!batch.isEmpty)
-      foldBatchDelta(store, name, centroids, baseVersion)(batch, batchId)
-    if ((batchId + 1) % compactEvery == 0) {
-      // compact at the newest COMPLETE chain version, not at this
-      // batchId — empty batches leave version-number gaps, and a
-      // snapshot at a version with no centroid half would be invisible
-      // to chain readers
-      val spark = batch.sparkSession
-      val vs = chainVersions(spark, store, name)
-      if (vs.nonEmpty) compact(spark, store, name, upTo = vs.last)
-    }
-  }
-
-  /** Snapshot-mode fold for IVF-PQ — [[foldBatch]]'s four-relation
-    * twin: each trigger rewrites the FULL routing and code relations
-    * (previous rows ∪ this batch), quantizer halves carried forward.
-    * `batch` carries (vec_id, cell, codes) — assignments AND code words
-    * encoded map-side against the broadcast codebook. O(index) per
-    * trigger; [[foldBatchDeltaPq]] is the sub-minute-trigger path. */
-  def foldBatchPq(store: VersionedStore, name: String,
-                  centroids: DataFrame, codebook: DataFrame,
-                  baseVersion: Long)
-                 (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val v = baseVersion + 1 + batchId
-    val newHome = batch.select(col("vec_id").as("id"), col("cell"))
-      .distinct()
-    val newCodes = batch.select(col("vec_id").as("id"), col("codes"))
-      .distinct()
-    val prev = versionsPq(spark, store, name).filter(_ < v).lastOption
-    // latest-wins per relation — see foldBatch's re-ingest note
-    val (home, codes) = prev match {
-      case Some(pv) =>
-        (latestById(Seq(
-           (pv, store.getVersion(spark, homeName(name), pv)),
-           (v, newHome))),
-         latestById(Seq(
-           (pv, store.getVersion(spark, codesName(name), pv)),
-           (v, newCodes))))
-      case None => (newHome, newCodes)
-    }
-    store.putVersion(homeName(name), v, home)
-    store.putVersion(codesName(name), v, codes)
-    store.putVersion(cbName(name), v, codebook)
-    store.putVersion(centName(name), v, centroids)
-  }
-
-  /** Snapshot-mode fold for SQ8 — [[foldBatch]]'s two-relation twin:
-    * each trigger rewrites the FULL code relation, trained ranges
-    * carried forward. `batch` carries (vec_id, codes) — byte codes
-    * encoded map-side against the broadcast ranges. O(index) per
-    * trigger; [[foldBatchDeltaSq8]] is the sub-minute-trigger path. */
-  def foldBatchSq8(store: VersionedStore, name: String,
-                   ranges: DataFrame, baseVersion: Long)
-                  (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val v = baseVersion + 1 + batchId
-    val newCodes = batch.select(col("vec_id").as("id"), col("codes"))
-      .distinct()
-    val prev = versionsSq8(spark, store, name).filter(_ < v).lastOption
-    // latest-wins — see foldBatch's re-ingest note
-    val codes = prev match {
-      case Some(pv) =>
-        latestById(Seq(
-          (pv, store.getVersion(spark, sq8CodesName(name), pv)),
-          (v, newCodes)))
-      case None => newCodes
-    }
-    store.putVersion(sq8CodesName(name), v, codes)
-    store.putVersion(sq8RangesName(name), v, ranges)
-  }
-
-  /** Reconstruct the routing view at pinned version `v`: the newest
-    * full snapshot at or below `v` (if any) unioned with every delta in
-    * between, deduped by id with latest-version-wins ([[latestById]] —
-    * a re-delivered vector's row is identical against the static
-    * plane and collapses either way; a RE-INGESTED id's changed row
-    * supersedes the stale one). */
-  def loadDeltaChain(spark: SparkSession, store: VersionedStore,
-                     name: String, v: Long): IvfIndexRelations = {
-    require(chainVersions(spark, store, name).contains(v),
-      s"no complete chain version $v of index $name")
-    IvfIndexRelations(
-      store.getVersion(spark, centName(name), v),
-      latestById(DeltaChain.readParts(spark, store, homeName(name),
-        deltaName(name), v)))
-  }
-
-  /** Load the newest chain version. */
-  def loadChain(spark: SparkSession, store: VersionedStore,
-                name: String): IvfIndexRelations = {
-    val vs = chainVersions(spark, store, name)
-    require(vs.nonEmpty, s"no chain versions of index $name")
-    loadDeltaChain(spark, store, name, vs.last)
-  }
-
-  /** Fold every delta at or below `upTo` into a full snapshot AT
-    * version `upTo` (under the snapshot name — readers at `upTo`
-    * switch from chain reconstruction to a single-relation read with
-    * no visible change), then delete the covered deltas. Write order
-    * keeps every reader consistent throughout: the snapshot commits
-    * BEFORE any delta it covers is deleted, and the shared centroid
-    * half at `upTo` is never touched. Centroid halves of delta-only
-    * versions below `upTo` are dropped with their deltas — compaction
-    * collapses pinnable history at or below its high-water mark, the
-    * retention semantics [[prune]] already established. */
-  def compact(spark: SparkSession, store: VersionedStore, name: String,
-              upTo: Long): Unit = {
-    val covered = DeltaChain.compactParts(spark, store, homeName(name),
-      deltaName(name), upTo, latestById)
-    val bases = versions(spark, store, name).toSet
-    // drop centroid halves of fully-covered delta-only versions —
-    // compaction collapses pinnable history at or below its high-water
-    // mark, the retention semantics prune already established
-    covered.foreach { dv =>
-      if (dv != upTo && !bases.contains(dv))
-        store.deleteVersion(spark, centName(name), dv)
-    }
-  }
-
-  // ---- IVF-PQ delta maintenance: the same O(batch) contract extended
-  // to the compressed flagship family. TWO per-vector relations move
-  // per trigger (routing rows AND code words — both are per-vector
-  // payload, both would be O(index) rewrites under foldBatchPq), so a
-  // delta version is two delta halves plus the two static quantizer
-  // halves; the centroid half stays the completeness marker (written
-  // LAST). Exactly-once is the strong delta form again: a delta's
-  // content is a pure function of its own batch (assignments + codes
-  // against the static quantizer pair), so a replayed batch rewrites an
-  // identical delta without reading prior state. ----
-
-  // family-distinct delta suffix: the IVF-PQ and SQ8 code chains must
-  // never share a relation name — with both at "_codes_delta", one
-  // index name serving two families would silently intersect SQ8
-  // version sets with PQ code deltas
-  private def pqHomeDeltaName(name: String) = s"${name}_home_delta"
-  private def pqCodesDeltaName(name: String) = s"${name}_pqcodes_delta"
-
-  /** Complete IVF-PQ DELTA versions (both delta halves + both static
-    * halves), ascending. */
-  def deltaVersionsPq(spark: SparkSession, store: VersionedStore,
-                      name: String): Seq[Long] =
-    Seq(pqHomeDeltaName(name), pqCodesDeltaName(name), cbName(name),
-        centName(name))
-      .map(store.versions(spark, _))
-      .reduce(_ intersect _)
-
-  /** Every version an IVF-PQ delta-chain reader may pin:
-    * compacted/full snapshots plus uncompacted deltas, ascending. */
-  def chainVersionsPq(spark: SparkSession, store: VersionedStore,
-                      name: String): Seq[Long] =
-    (versionsPq(spark, store, name) ++
-      deltaVersionsPq(spark, store, name)).distinct.sorted
-
-  /** foreachBatch body for IVF-PQ DELTA maintenance — per-trigger cost
-    * scales with the batch, not the index. `batch` carries (vec_id,
-    * cell, codes); commit order: per-vector delta halves first,
-    * codebook, centroid half last as the completeness marker. */
-  def foldBatchDeltaPq(store: VersionedStore, name: String,
-                       centroids: DataFrame, codebook: DataFrame,
-                       baseVersion: Long)
-                      (batch: DataFrame, batchId: Long): Unit = {
-    val v = baseVersion + 1 + batchId
-    store.putVersion(pqHomeDeltaName(name), v,
-      batch.select(col("vec_id").as("id"), col("cell")).distinct())
-    store.putVersion(pqCodesDeltaName(name), v,
-      batch.select(col("vec_id").as("id"), col("codes")).distinct())
-    store.putVersion(cbName(name), v, codebook)
-    store.putVersion(centName(name), v, centroids)
-  }
-
-  /** [[foldBatchDeltaPq]] with periodic compaction — see
-    * [[foldBatchDeltaCompacting]]. */
-  def foldBatchDeltaPqCompacting(store: VersionedStore, name: String,
-                                 centroids: DataFrame,
-                                 codebook: DataFrame, baseVersion: Long,
-                                 compactEvery: Int)
-                                (batch: DataFrame,
-                                 batchId: Long): Unit = {
-    if (!batch.isEmpty)
-      foldBatchDeltaPq(store, name, centroids, codebook, baseVersion)(
-        batch, batchId)
-    if ((batchId + 1) % compactEvery == 0) {
-      val spark = batch.sparkSession
-      val vs = chainVersionsPq(spark, store, name)
-      if (vs.nonEmpty) compactPq(spark, store, name, upTo = vs.last)
-    }
-  }
-
-  /** Reconstruct the IVF-PQ view at pinned chain version `v`: each
-    * per-vector relation is its own snapshot ∪ deltas chain; the
-    * static quantizer halves read directly at `v`. */
-  def loadDeltaChainPq(spark: SparkSession, store: VersionedStore,
-                       name: String, v: Long): IvfPqIndexRelations = {
-    require(chainVersionsPq(spark, store, name).contains(v),
-      s"no complete IVF-PQ chain version $v of index $name")
-    IvfPqIndexRelations(
-      store.getVersion(spark, centName(name), v),
-      latestById(DeltaChain.readParts(spark, store, homeName(name),
-        pqHomeDeltaName(name), v)),
-      store.getVersion(spark, cbName(name), v),
-      latestById(DeltaChain.readParts(spark, store, codesName(name),
-        pqCodesDeltaName(name), v)))
-  }
-
-  /** Load the newest IVF-PQ chain version. */
-  def loadChainPq(spark: SparkSession, store: VersionedStore,
-                  name: String): IvfPqIndexRelations = {
-    val vs = chainVersionsPq(spark, store, name)
-    require(vs.nonEmpty, s"no IVF-PQ chain versions of index $name")
-    loadDeltaChainPq(spark, store, name, vs.last)
-  }
-
-  /** Compact the IVF-PQ delta chains at or below `upTo` into full
-    * snapshots AT `upTo` — both per-vector chains fold (they carry
-    * identical version sets: [[foldBatchDeltaPq]] writes them
-    * together), then static halves of fully-covered delta-only
-    * versions are dropped with their deltas. After compaction `upTo`
-    * is a complete FULL version ([[versionsPq]] lists it) — the two
-    * maintenance modes converge on the same persisted contract. */
-  def compactPq(spark: SparkSession, store: VersionedStore,
-                name: String, upTo: Long): Unit = {
-    val covered = DeltaChain.compactParts(spark, store, homeName(name),
-      pqHomeDeltaName(name), upTo, latestById)
-    DeltaChain.compactParts(spark, store, codesName(name),
-      pqCodesDeltaName(name), upTo, latestById)
-    val bases = versionsPq(spark, store, name).toSet
-    covered.foreach { dv =>
-      if (dv != upTo && !bases.contains(dv)) {
-        // completeness marker first (see prune)
-        store.deleteVersion(spark, centName(name), dv)
-        store.deleteVersion(spark, cbName(name), dv)
-      }
-    }
-  }
-
-  // ---- SQ8 delta maintenance: one per-vector relation (byte codes),
-  // the trained ranges as the static half and completeness marker. ----
-
-  // family-distinct suffix — see pqCodesDeltaName's collision note
-  private def sq8CodesDeltaName(name: String) = s"${name}_sq8codes_delta"
-
-  /** Complete SQ8 DELTA versions (code delta + ranges), ascending. */
-  def deltaVersionsSq8(spark: SparkSession, store: VersionedStore,
-                       name: String): Seq[Long] =
-    store.versions(spark, sq8CodesDeltaName(name))
-      .intersect(store.versions(spark, sq8RangesName(name)))
-
-  /** Every version an SQ8 delta-chain reader may pin. */
-  def chainVersionsSq8(spark: SparkSession, store: VersionedStore,
-                       name: String): Seq[Long] =
-    (versionsSq8(spark, store, name) ++
-      deltaVersionsSq8(spark, store, name)).distinct.sorted
-
-  /** foreachBatch body for SQ8 DELTA maintenance — O(batch) per
-    * trigger. `batch` carries (vec_id, codes); commit order: code
-    * delta first, ranges last as the completeness marker. */
-  def foldBatchDeltaSq8(store: VersionedStore, name: String,
-                        ranges: DataFrame, baseVersion: Long)
-                       (batch: DataFrame, batchId: Long): Unit = {
-    val v = baseVersion + 1 + batchId
-    store.putVersion(sq8CodesDeltaName(name), v,
-      batch.select(col("vec_id").as("id"), col("codes")).distinct())
-    store.putVersion(sq8RangesName(name), v, ranges)
-  }
-
-  /** [[foldBatchDeltaSq8]] with periodic compaction — see
-    * [[foldBatchDeltaCompacting]]. */
-  def foldBatchDeltaSq8Compacting(store: VersionedStore, name: String,
-                                  ranges: DataFrame, baseVersion: Long,
-                                  compactEvery: Int)
-                                 (batch: DataFrame,
-                                  batchId: Long): Unit = {
-    if (!batch.isEmpty)
-      foldBatchDeltaSq8(store, name, ranges, baseVersion)(batch, batchId)
-    if ((batchId + 1) % compactEvery == 0) {
-      val spark = batch.sparkSession
-      val vs = chainVersionsSq8(spark, store, name)
-      if (vs.nonEmpty) compactSq8(spark, store, name, upTo = vs.last)
-    }
-  }
-
-  /** Reconstruct the SQ8 view at pinned chain version `v`. */
-  def loadDeltaChainSq8(spark: SparkSession, store: VersionedStore,
-                        name: String, v: Long): Sq8IndexRelations = {
-    require(chainVersionsSq8(spark, store, name).contains(v),
-      s"no complete SQ8 chain version $v of index $name")
-    Sq8IndexRelations(
-      store.getVersion(spark, sq8RangesName(name), v),
-      latestById(DeltaChain.readParts(spark, store, sq8CodesName(name),
-        sq8CodesDeltaName(name), v)))
-  }
-
-  /** Load the newest SQ8 chain version. */
-  def loadChainSq8(spark: SparkSession, store: VersionedStore,
-                   name: String): Sq8IndexRelations = {
-    val vs = chainVersionsSq8(spark, store, name)
-    require(vs.nonEmpty, s"no SQ8 chain versions of index $name")
-    loadDeltaChainSq8(spark, store, name, vs.last)
-  }
-
-  /** Compact the SQ8 delta chain at or below `upTo` into a full
-    * snapshot AT `upTo`; ranges halves of fully-covered delta-only
-    * versions are dropped with their deltas. After compaction `upTo`
-    * is a complete FULL version ([[versionsSq8]] lists it). */
-  def compactSq8(spark: SparkSession, store: VersionedStore,
-                 name: String, upTo: Long): Unit = {
-    val covered = DeltaChain.compactParts(spark, store,
-      sq8CodesName(name), sq8CodesDeltaName(name), upTo, latestById)
-    val bases = versionsSq8(spark, store, name).toSet
-    covered.foreach { dv =>
-      if (dv != upTo && !bases.contains(dv))
-        store.deleteVersion(spark, sq8RangesName(name), dv)
-    }
   }
 }

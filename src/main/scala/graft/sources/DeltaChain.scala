@@ -10,17 +10,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *     (newest base snapshot at or below v) ∪ (deltas after it, up to v)
   *
-  * [[compact]] folds covered deltas into a snapshot AT the same version
-  * number, so a reader's view never changes across a compaction — only
-  * how many relations produce it. Per-trigger WRITE cost is what the
+  * [[compactParts]] folds covered deltas into a snapshot AT the same
+  * version number, so a reader's view never changes across a
+  * compaction — only how many relations produce it. Per-trigger WRITE cost is what the
   * split buys: a delta write is O(batch) where a snapshot rewrite is
   * O(index) — the difference between minute-scale and sub-second
   * triggers at a 1B-row index (AnnIndexStore's scale note).
   *
   * Content policy (duplicates across versions, tie rules) belongs to
-  * the caller: [[read]] unions verbatim and [[compact]] accepts a
-  * `canonicalize` hook (e.g. AnnIndexStore passes distinct — a
-  * re-delivered vector's routing row is identical and collapses).
+  * the caller: [[read]] unions verbatim and [[compactParts]] takes the
+  * fold over the version-tagged parts (AnnIndexStore passes its
+  * latest-version-wins `latestById`; NearDupIngest keeps the verbatim
+  * union).
   */
 object DeltaChain {
 
@@ -53,8 +54,10 @@ object DeltaChain {
   /** The chain view at pinned version `v`. */
   def read(spark: SparkSession, store: VersionedStore,
            base: String, delta: String, v: Long): DataFrame =
-    readParts(spark, store, base, delta, v).map(_._2)
-      .reduce(_ unionByName _)
+    union(readParts(spark, store, base, delta, v))
+
+  private def union(parts: Seq[(Long, DataFrame)]): DataFrame =
+    parts.map(_._2).reduce(_ unionByName _)
 
   /** The chain view at the newest version. */
   def readNewest(spark: SparkSession, store: VersionedStore,
@@ -65,25 +68,19 @@ object DeltaChain {
   }
 
   /** Fold every delta at or below `upTo` into a snapshot at `upTo`,
-    * then delete the covered deltas. The snapshot commits BEFORE any
-    * covered delta is deleted, so concurrent readers reconstruct a
-    * consistent view throughout. No-op when nothing is covered (also
-    * the guard against overwriting a snapshot from a plan that reads
-    * it). */
-  def compact(spark: SparkSession, store: VersionedStore,
-              base: String, delta: String, upTo: Long,
-              canonicalize: DataFrame => DataFrame = identity): Seq[Long] =
-    compactParts(spark, store, base, delta, upTo,
-      parts => canonicalize(parts.map(_._2).reduce(_ unionByName _)))
-
-  /** [[compact]] with a VERSION-AWARE fold: `fold` receives the
-    * version-tagged parts ([[readParts]]) so a content policy that
-    * depends on version order (latest-version-wins) survives
-    * compaction — a plain canonicalize over the untagged union could
-    * not tell a stale routing row from the row that superseded it. */
+    * then delete the covered deltas; returns the covered versions. The
+    * snapshot commits BEFORE any covered delta is deleted, so concurrent
+    * readers reconstruct a consistent view throughout. No-op when
+    * nothing is covered (also the guard against overwriting a snapshot
+    * from a plan that reads it). `fold` receives the version-tagged
+    * parts ([[readParts]]), so a content policy that depends on version
+    * order (latest-version-wins) survives compaction — a fold over the
+    * untagged union could not tell a stale row from the row that
+    * superseded it. The default keeps the verbatim union ([[read]]). */
   def compactParts(spark: SparkSession, store: VersionedStore,
                    base: String, delta: String, upTo: Long,
-                   fold: Seq[(Long, DataFrame)] => DataFrame): Seq[Long] = {
+                   fold: Seq[(Long, DataFrame)] => DataFrame = union)
+      : Seq[Long] = {
     val b = store.versions(spark, base).filter(_ <= upTo).lastOption
     val covered = store.versions(spark, delta)
       .filter(dv => dv <= upTo && b.forall(dv > _))

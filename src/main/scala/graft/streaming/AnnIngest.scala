@@ -76,7 +76,6 @@ object AnnIngest {
     // stream-static join re-executes the static side every micro-batch,
     // and the home-cell derivation is a multi-stage windowed DAG —
     // recomputing it per batch made retrieval batch-planning-bound
-    // (measured ~5x on the StreamBench band)
     val e = corpus.select(col(idCol).cast("long").as("cand_id"),
       col(vecCol).cast("array<double>").as("cv"))
     val home = Lineage.pin(graft.operators.Ann
@@ -222,7 +221,7 @@ object AnnIngest {
     * routing + per-trigger DELTA index maintenance + periodic chain
     * compaction — [[NearDupIngest.startDelta]]'s contract on the
     * vector index. Each micro-batch lands as an O(batch) delta version
-    * (AnnIndexStore.foldBatchDelta); every `compactEvery` triggers the
+    * (AnnIndexStore.Ivf.foldBatchDelta); every `compactEvery` triggers the
     * covered deltas fold into a snapshot, so an UNBOUNDED ingest keeps
     * a BOUNDED reconstruction fan-in (1 snapshot + < compactEvery
     * trailing deltas) — without this, a week of 1-second triggers
@@ -240,8 +239,8 @@ object AnnIngest {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.AnnIndexStore.foldBatchDeltaCompacting(store,
-          name, centroids, baseVersion, compactEvery)(batch, batchId)
+        graft.sources.AnnIndexStore.Ivf.foldBatchDeltaCompacting(store,
+          name, baseVersion, compactEvery, centroids)(batch, batchId)
       }
       .start()
 }

@@ -22,7 +22,7 @@ import graft.sources.VersionedStore
   * micro-batch id (version = 1 + batchId; the offline corpus's bands
   * seed version 0), and a replayed batch recomputes from versions
   * BEFORE its own and overwrites itself — the same idempotent-version
-  * contract as AnnIndexStore.foldBatch. One stream (one checkpoint)
+  * contract as AnnIndexStore.Family.foldBatch. One stream (one checkpoint)
   * owns a store name.
   *
   * Scale shape: per trigger the new docs' band rows (docs × bands,
@@ -147,7 +147,7 @@ object NearDupIngest {
     * same rows before and after. */
   def compactBands(spark: SparkSession, store: VersionedStore,
                    name: String, upTo: Long): Unit = {
-    graft.sources.DeltaChain.compact(spark, store, bandsName(name),
+    graft.sources.DeltaChain.compactParts(spark, store, bandsName(name),
       bandsDeltaName(name), upTo)
     ()
   }

@@ -23,10 +23,21 @@ import graft.{GraftSession, SparkEntry}
   * only. */
 object PlanDump extends AdaptiveSparkPlanHelper {
 
-  private def mask(s: String) =
-    s.replaceAll("#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
+  /** Masks what differs between two runs of one plan: expression and
+    * plan ids, RDD ids, lambda class and object identity-hash suffixes,
+    * the process and session nonces in store and table paths
+    * (`graft_ann_store_p<pid>_<dir hash>`, `<table>_p<pid>_s<session>`)
+    * and the checkout directory. */
+  private def mask(s: String) = s
+    .replaceAll("#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
+    .replaceAll("RDD\\[\\d+\\]", "RDD[x]")
+    .replaceAll("\\$\\$Lambda[$\\w]*(/0x\\p{XDigit}+)?", "\\$\\$Lambda")
+    .replaceAll("(?<=[\\w$])@\\p{XDigit}+\\b", "@x")
+    .replaceAll("_p\\d+_s\\p{XDigit}{32}", "_p<pid>_s<session>")
+    .replaceAll("_p\\d+_(?=\\p{XDigit}{12})", "_p<pid>_")
+    .replace(System.getProperty("user.dir"), "<checkout>")
 
-  /** The formatted plan with expression and plan ids masked and each
+  /** The formatted plan [[mask]]ed, with each
     * multi-distinct Expand in a canonical order: the optimizer orders
     * the distinct groups by a hash over expression ids, so the Expand's
     * columns and projections, the `gid` numbers and the key lists

@@ -31,4 +31,23 @@ class PlanDumpSpec extends SparkSpec {
     dumps should have size 1
     dumps.head should include("gid#x = 4")
   }
+
+  test("two builds of one plan render identically: RDD ids, lambdas, " +
+      "identity hashes, path nonces and the checkout directory masked") {
+    import spark.implicits._
+    val checkout = System.getProperty("user.dir")
+    val pid = ProcessHandle.current().pid()
+    val dir = s"$checkout/target/plandump_p${pid}_0123456789ab"
+    spark.range(4).write.mode("overwrite").parquet(dir)
+    // a fresh checkpointed RDD and a fresh lambda instance per build
+    def build() = spark.read.parquet(dir).as[Long].map(_ + 1).toDF("v")
+      .join(spark.range(4).toDF("v").localCheckpoint(), "v")
+    val first = PlanDump.render(build())
+    first should include("<checkout>/target/plandump_p<pid>_0123456789ab")
+    first should include("RDD[x]")
+    first should include("$$Lambda")
+    first should not include checkout
+    first should not include regex("RDD\\[\\d|Lambda[$/]|@\\p{XDigit}{6}")
+    PlanDump.render(build()) shouldBe first
+  }
 }
