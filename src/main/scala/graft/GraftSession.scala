@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.LocalFs
+
 /** The one place graft configures Spark: every main (Verify, Bench, the
   * scale ladders, the stream benchmarks, the fixture generators, the plan
   * dumper) and the shared test session get their session here, so they
@@ -39,6 +41,9 @@ object GraftSession {
       // up new static confs once a context exists in the JVM.
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.ui.enabled", "false")
+      // every Hadoop filesystem call on file: goes through LocalFs, which
+      // forks no chmod/readlink process where libhadoop is missing
+      .config(LocalFs.routing.map { case (k, v) => s"spark.hadoop.$k" -> v })
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

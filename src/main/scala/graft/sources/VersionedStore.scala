@@ -23,8 +23,10 @@ import org.apache.spark.sql.functions._
   */
 final case class VersionedStore(root: String) {
 
+  /** `file:` roots go through [[LocalFs]] (here and in `putVersion`'s
+    * write), whichever session the caller holds. */
   private def fs(spark: SparkSession): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(root).getFileSystem(LocalFs.conf(spark.sparkContext.hadoopConfiguration))
 
   private def namePath(name: String) = new Path(s"$root/$name")
   private def versionPath(name: String, v: Long) =
@@ -59,7 +61,8 @@ final case class VersionedStore(root: String) {
     * window), then the marker is created only after the parquet job
     * commits — a reader can never list a version whose data is partial. */
   def putVersion(name: String, version: Long, df: DataFrame): Unit = {
-    df.write.mode("overwrite")
+    // write options reach the committer and the write tasks' Hadoop conf
+    df.write.options(LocalFs.routing).mode("overwrite")
       .parquet(versionPath(name, version).toString)
     fs(df.sparkSession)
       .create(markerPath(name, version), true).close()

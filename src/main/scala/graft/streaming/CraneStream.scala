@@ -2,9 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 
-import graft.sources.VersionedStore
+import graft.sources.{LocalFs, VersionedStore}
 
 /** End-to-end streaming lifecycle: source → app transform → running
   * aggregate → periodic versioned top-K snapshot. This is the Spark
@@ -42,37 +43,54 @@ object CraneStream {
   /** Pin the session's streaming state store to RocksDB (see
     * [[RocksDbProvider]]); applies to queries STARTED after this call. */
   def useRocksDbStateStore(spark: SparkSession): Unit =
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
+    spark.conf.set(ProviderKey, RocksDbProvider)
 
-  /** Start a query under the RocksDB provider WITHOUT leaking the
-    * session-global conf to queries started later: the provider class
-    * is one of the confs Spark captures into the query's offset
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+
+  /** Start a query with `conf` set on its session WITHOUT leaking it to
+    * queries started later: Spark clones the session when the query is
+    * created inside `start`, so the query, its checkpoint logs, its
+    * sources and its state store keep `conf` for life while the session
+    * reverts for everyone else. Every entry point routes `file:` through
+    * [[graft.sources.LocalFs]]; the stateful ones also pin the RocksDB
+    * provider, one of the confs Spark captures into the query's offset
     * metadata at first start (and reapplies on every restart from that
-    * checkpoint), so the started query keeps RocksDB for life while
-    * the session conf reverts for everyone else.
+    * checkpoint).
     *
     * The set/start/restore window mutates SESSION-global state, so
     * concurrent `start`s on the same session could capture the wrong
     * provider into a checkpoint for life; the lock serializes every
-    * graft entry point that starts a stateful query. (A query started
+    * graft entry point that starts a query. (A query started
     * concurrently by code OUTSIDE this object during the window is
     * still exposed — callers sharing a session with foreign streaming
     * code should pin the provider explicitly via
     * [[useRocksDbStateStore]] instead.) */
   private val startLock = new Object
-  private def startOnRocksDb(spark: SparkSession)
-                            (start: => StreamingQuery): StreamingQuery =
+  private def startWith(spark: SparkSession, conf: Map[String, String])
+                       (start: => StreamingQuery): StreamingQuery =
     startLock.synchronized {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prior = spark.conf.getOption(key)
-      spark.conf.set(key, RocksDbProvider)
-      try start
-      finally prior match {
-        case Some(p) => spark.conf.set(key, p)
-        case None => spark.conf.unset(key)
+      val prior = conf.keys.map(k => k -> spark.conf.getOption(k))
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val q = start
+        // the query's thread builds its sources (the file source and its
+        // `sources/` log) from the CALLER's session, after `start`
+        // returns: keep `conf` set until it has
+        q match {
+          case w: StreamingQueryWrapper =>
+            try w.streamingQuery.awaitInitialization(Long.MaxValue)
+            catch { case _: StreamingQueryException => } // q reports it
+          case _ =>
+        }
+        q
+      } finally prior.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
     }
+
+  private val onRocksDb: Map[String, String] =
+    LocalFs.routing + (ProviderKey -> RocksDbProvider)
 
   /** Unbounded line stream from files appearing under `dir`
     * (the spout's file source, S1). */
@@ -121,6 +139,7 @@ object CraneStream {
             checkpointDir: String, k: Int = 5,
             period: String = "10 seconds"): StreamingQuery = {
     val counts = StreamApps.apps(app)(lines)
+    startWith(lines.sparkSession, LocalFs.routing) {
     counts.writeStream
       .outputMode("complete")
       .option("checkpointLocation", checkpointDir)
@@ -131,6 +150,7 @@ object CraneStream {
         ()
       }
       .start()
+    }
   }
 
   /** The scale path for large key spaces (SURVEY.md §7.5): complete mode
@@ -155,7 +175,7 @@ object CraneStream {
     val name = s"${app}_counts"
     // update mode exists FOR high-cardinality key spaces — pair it with
     // the disk-backed store or the state itself becomes the memory bound
-    startOnRocksDb(lines.sparkSession) {
+    startWith(lines.sparkSession, onRocksDb) {
     counts.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
@@ -227,7 +247,7 @@ object CraneStream {
           state.update(n)
           (word, n)
       }
-    startOnRocksDb(spark0) {
+    startWith(spark0, onRocksDb) {
     updates.toDF(key, "count").writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)

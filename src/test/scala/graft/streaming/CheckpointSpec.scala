@@ -2,8 +2,11 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
 import graft.SparkSpec
-import graft.sources.VersionedStore
+import graft.sources.{LocalFs, LocalFsSpec, VersionedStore}
 
 /** Exactly-once across restart: the rebuild's answer to the reference's
   * kill-a-VM fault injection (cs425_mp4.pdf Fig. 2B). Crane replays
@@ -19,6 +22,12 @@ class CheckpointSpec extends SparkSpec {
     Files.move(tmp, dir.resolve(name))
   }
 
+  /** The session confs the entry points set around `start`: none may
+    * outlive it. */
+  private def startConfs: Seq[(String, Option[String])] =
+    (LocalFs.routing.keys.toSeq :+ "spark.sql.streaming.stateStore.providerClass")
+      .map(k => k -> spark.conf.getOption(k))
+
   test("wordCount counts survive stop + restart without double counting") {
     val root = Files.createTempDirectory("ckpt")
     val inDir = Files.createDirectory(root.resolve("in"))
@@ -30,8 +39,12 @@ class CheckpointSpec extends SparkSpec {
       checkpointDir = ckpt, k = 10, period = "0 seconds")
 
     writeFile(inDir, "part1.txt", Seq("a a b", "c"))
+    val priorConfs = startConfs
     val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
+    try {
+      q1.processAllAvailable()
+      startConfs shouldBe priorConfs
+    } finally q1.stop()
 
     // "failure": the query is gone; new data arrives while it is down
     writeFile(inDir, "part2.txt", Seq("a b b", "c c"))
@@ -44,6 +57,58 @@ class CheckpointSpec extends SparkSpec {
       counts shouldBe Map("a" -> 3L, "b" -> 3L, "c" -> 3L)
     } finally q2.stop()
   }
+
+  /** `CraneStream.start`'s wordCount query with Hadoop's stock local
+    * filesystem on `file:`, which forks `chmod` and `readlink` through
+    * Hadoop's `Shell` where `libhadoop` is missing: the checkpoint
+    * format before `LocalFs`. */
+  private def startStock(inDir: String, store: VersionedStore,
+                         ckpt: String): StreamingQuery = {
+    val stock = spark.newSession()
+    stock.conf.set("fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
+    stock.conf.set("fs.AbstractFileSystem.file.impl",
+      "org.apache.hadoop.fs.local.LocalFs")
+    StreamApps.apps("wordCount")(CraneStream.fileLines(stock, inDir))
+      .writeStream
+      .outputMode("complete")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime("0 seconds"))
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        store.putVersion("wordCount_result", batchId, StreamApps.topK(batch, 10))
+        ()
+      }
+      .start()
+  }
+
+  for (stockFirst <- Seq(true, false))
+    test(s"a checkpoint written under ${if (stockFirst) "stock Hadoop" else "LocalFs"} " +
+         s"resumes exactly once under ${if (stockFirst) "LocalFs" else "stock Hadoop"}") {
+      val root = Files.createTempDirectory("ckpt-x")
+      val inDir = Files.createDirectory(root.resolve("in"))
+      val store = VersionedStore(root.resolve("store").toString)
+      val ckpt = root.resolve("ckpt").toString
+      def run(stock: Boolean): Unit = {
+        val (_, starts) = LocalFsSpec.processStarts {
+          val q =
+            if (stock) startStock(inDir.toString, store, ckpt)
+            else CraneStream.start(CraneStream.fileLines(spark, inDir.toString),
+              "wordCount", store, checkpointDir = ckpt, k = 10, period = "0 seconds")
+          try q.processAllAvailable() finally q.stop()
+        }
+        // the stock side really ran stock Hadoop, the other side did not
+        starts.exists(_.fromShell) shouldBe stock
+      }
+
+      writeFile(inDir, "part1.txt", Seq("a a b", "c"))
+      run(stock = stockFirst)
+      writeFile(inDir, "part2.txt", Seq("a b b", "c c"))
+      run(stock = !stockFirst)
+      // one batch per part: the restart neither re-ran nor skipped part1
+      store.versions(spark, "wordCount_result") shouldBe Seq(0L, 1L)
+      store.get(spark, "wordCount_result").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe
+        Map("a" -> 3L, "b" -> 3L, "c" -> 3L)
+    }
 
   test("bounded top-K (mapGroupsWithState) resumes exactly across stop + restart") {
     // the kill-and-restart assertion for the third state/output mode
@@ -62,8 +127,12 @@ class CheckpointSpec extends SparkSpec {
       checkpointDir = ckpt, k = 2, period = "0 seconds")
 
     writeFile(inDir, "part1.txt", Seq("a a b", "c a"))
+    val priorConfs = startConfs
     val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
+    try {
+      q1.processAllAvailable()
+      startConfs shouldBe priorConfs
+    } finally q1.stop()
 
     writeFile(inDir, "part2.txt", Seq("b b b c", "c c"))
     val q2 = start()
@@ -101,15 +170,15 @@ class CheckpointSpec extends SparkSpec {
       checkpointDir = ckpt, period = "0 seconds")
 
     writeFile(inDir, "part1.txt", Seq("a a b", "c"))
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val priorConf = spark.conf.getOption(confKey)
+    val priorConfs = startConfs
     val q1 = start()
     try {
       q1.processAllAvailable()
       assert(ranOnRocksDb(q1), "expected RocksDB state store metrics")
-      // the provider is pinned PER QUERY (captured into its offset
-      // metadata), not leaked into the session conf for later queries
-      spark.conf.getOption(confKey) shouldBe priorConf
+      // the provider and the file: routing are pinned PER QUERY (the
+      // provider captured into its offset metadata), not leaked into the
+      // session conf for later queries
+      startConfs shouldBe priorConfs
     } finally q1.stop()
 
     writeFile(inDir, "part2.txt", Seq("a b b", "c c"))
