@@ -30,43 +30,6 @@ object CraneAggregators {
     override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
 
-  /** Bounded top-k accumulator: BUF holds at most k (score, id) pairs,
-    * kept sorted by (score desc, id asc). The scale-right alternative to
-    * `row_number().over(Window...)` + filter for per-group top-k: the
-    * window form SORTS every row of every group (full shuffle + sort of
-    * the fact table), while this buffer crosses the shuffle with at most
-    * k rows per (group, map partition) — the same partial/merge shape as
-    * min/max, with k-bounded state. Integer scores keep every engine's
-    * comparison exact.
-    *
-    * k is a constructor parameter; instances must be wrapped with
-    * `functions.udaf(...)` per k. */
-  final case class TopKBuf(items: Seq[(Long, Long)])
-
-  final class TopKByScore(k: Int)
-      extends Aggregator[(Long, Long), TopKBuf, Seq[(Long, Long)]] {
-    require(k > 0, "k must be positive")
-    private def trim(s: Seq[(Long, Long)]): Seq[(Long, Long)] =
-      s.sortBy { case (score, id) => (-score, id) }.take(k)
-    override def zero: TopKBuf = TopKBuf(Seq.empty)
-    override def reduce(b: TopKBuf, in: (Long, Long)): TopKBuf =
-      // items is kept sorted by trim, so its last entry is the cutoff:
-      // a row that can't displace it is rejected without re-sorting —
-      // the overwhelmingly common case once the buffer fills (measured
-      // ~2x on the 4M-edge kNN-graph reduction)
-      if (b.items.length >= k && {
-          val (ls, li) = b.items.last
-          in._1 < ls || (in._1 == ls && in._2 >= li)
-        }) b
-      else TopKBuf(trim(b.items :+ in))
-    override def merge(a: TopKBuf, b: TopKBuf): TopKBuf =
-      TopKBuf(trim(a.items ++ b.items))
-    override def finish(b: TopKBuf): Seq[(Long, Long)] = trim(b.items)
-    override def bufferEncoder: Encoder[TopKBuf] = Encoders.product
-    override def outputEncoder: Encoder[Seq[(Long, Long)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  }
-
   /** Misra-Gries heavy-hitters summary with k counters: after one pass,
     * every key whose true frequency exceeds n/(k+1) is guaranteed to be
     * among the surviving counters (the sketch may also retain lighter

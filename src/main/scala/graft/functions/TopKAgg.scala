@@ -9,28 +9,27 @@ import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-/** Native top-k-by-(score DESC, id ASC) aggregate — the Catalyst
-  * `TypedImperativeAggregate` twin of
-  * [[CraneAggregators.TopKByScore]] for the HOT pair streams.
+/** Per-group top-k by (score DESC, id ASC), k-bounded, as a native
+  * Catalyst `TypedImperativeAggregate` — graft's one bounded top-k
+  * aggregate. The scale-right alternative to `row_number().over(
+  * Window...)` + filter: the window form SORTS every row of every group
+  * (full shuffle + sort of the fact table), while this buffer crosses
+  * the shuffle with at most k rows per (group, map partition) — the same
+  * partial/merge shape as min/max, with k-bounded state. Integer scores
+  * keep every engine's comparison exact.
   *
-  * The udaf(Aggregator) form pays an ExpressionEncoder round trip per
-  * input row (InternalRow → boxed (Long, Long) tuple → buffer
-  * case-class re-wrap): measured 15-30 µs CPU per row on the deep
-  * rung's ~160M-pair chain-serve scan — the encoder, not the
-  * arithmetic, was >90% of the serve tail's cost. This form reads the
-  * two child expressions straight off the InternalRow and keeps the
-  * buffer as two primitive long arrays, so per-row work is a couple of
-  * boxed evals and an insertion-sort step against the cutoff — the
-  * same selection semantics ((score DESC, id ASC), k-bounded, partial
-  * aggregation with map-side combine) at ~100× less per-row overhead.
-  * Output matches the udaf's shape exactly: array<struct<_1 score,
-  * _2 id>> sorted best-first, so call sites and oracles are
-  * unchanged.
+  * It reads the two child expressions straight off the InternalRow and
+  * keeps the buffer as two primitive long arrays, so per-row work is a
+  * couple of boxed evals and an insertion-sort step against the cutoff.
+  * A typed udaf(Aggregator) with the same selection paid an
+  * ExpressionEncoder round trip per input row (InternalRow → boxed
+  * (Long, Long) tuple → buffer case-class re-wrap): measured 15-30 µs
+  * CPU per row on the deep rung's ~160M-pair chain-serve scan, ~100×
+  * this form's per-row overhead.
   *
-  * The [[CraneAggregators.TopKByScore]] Aggregator stays as the
-  * user-facing typed-Aggregator surface (SURVEY §2 A2's custom-agg
-  * example) and as the semantics reference this class is spec-checked
-  * against.
+  * A row whose score or id is null is skipped. Output is
+  * array<struct<_1 score, _2 id>> sorted best-first; TopKAggSpec pins
+  * it against a `row_number()` window reference.
   */
 object TopKAgg {
 
@@ -144,8 +143,7 @@ object TopKAgg {
 
   /** groupBy-agg column: top-`k` (score, id) pairs per group by
     * (score DESC, id ASC), as array<struct<_1 score, _2 id>>
-    * best-first — [[CraneAggregators.TopKByScore]]'s output shape at
-    * native per-row cost. */
+    * best-first. Both inputs must be bigint. */
   def topk_longs(score: Column, id: Column, k: Int): Column =
     column(TopKLongs(expression(score), expression(id), k)
       .toAggregateExpression())

@@ -59,7 +59,7 @@ object Ann {
     * unordered pair computed in exactly one task, shuffle n·B rows), each
     * pair fans out to its two directed ends in the SAME task, and the
     * per-node reduction is the k-bounded [[graft.functions
-    * .CraneAggregators.TopKByScore]] partial aggregate — at most k
+    * .TopKAgg.topk_longs]] partial aggregate — at most k
     * entries per (node, map partition) cross the aggregation shuffle,
     * never the n² similarity relation. Compute is inherently Ω(n²) (this
     * is the exact baseline; the scale path is LSH/IVF candidates into
@@ -82,7 +82,7 @@ object Ann {
     * into its two directed ends IN THE SAME TASK (a union of two
     * selects would recompute the candidate-pair relation twice), then
     * reduce each source to its k best neighbors with the k-bounded
-    * [[graft.functions.CraneAggregators.TopKByScore]] partial
+    * [[graft.functions.TopKAgg.topk_longs]] partial
     * aggregate — at most k entries per (node, map partition) cross the
     * aggregation shuffle, never the pair relation itself. */
   private def mirroredTopK(pairs: DataFrame, k: Int): DataFrame = {
@@ -1497,7 +1497,7 @@ object Ann {
   private def adcColumn: Column =
     HashExprs.adc_i64(col("codes"), col("lut"))
 
-  /** k-bounded ADC shortlist: TopKByScore partial-aggregates per
+  /** k-bounded ADC shortlist: topk_longs partial-aggregates per
     * (query, map partition), so only `shortlist` rows per partition —
     * not the q×n ADC relation — cross the one shuffle. Selection is
     * identical to ORDER BY adc ASC, cand_id ASC LIMIT shortlist. */
@@ -1652,7 +1652,7 @@ object Ann {
     * similarity per (query, candidate) pair — candidates carry their
     * micro-unit arrays + per-prefix norms, the fixed eval panel is
     * broadcast, and all rankings reduce through k-bounded
-    * [[graft.functions.CraneAggregators.TopKByScore]] partial aggs in
+    * [[graft.functions.TopKAgg.topk_longs]] partial aggs in
     * the SAME groupBy (the q×n relation never crosses a shuffle, and
     * the corpus is scanned once, not once per prefix). queryPred
     * should select a CONSTANT-sized panel so the scan stays linear in
@@ -1736,7 +1736,7 @@ object Ann {
     * replays in SQL. Execution shape: candidates carry ONLY their
     * m-wide prefix (the bandwidth saving is structural, not an
     * annotation), the panel is broadcast, and the shortlist reduces
-    * through the k-bounded TopKByScore partial agg — the q×n prefix
+    * through the k-bounded topk_longs partial agg — the q×n prefix
     * scan never crosses a shuffle. */
   def matryoshkaFunnelTopK(embs: DataFrame, idCol: String,
                            vecCol: String, queryPred: Column, k: Int,

@@ -31,9 +31,13 @@ object TextOps {
     * text-analysis tokenization cannot drift apart. */
   def tokens(text: Column): Column = graft.functions.TextFunctions.tokens(text)
 
+  /** T1: one `word` row per token of `textCol`. */
+  def words(df: DataFrame, textCol: String): DataFrame =
+    df.select(explode(tokens(col(textCol))).as("word"))
+
   /** T1+A1/A2: tokenize `textCol`, count per word. */
   def wordCount(df: DataFrame, textCol: String): DataFrame =
-    df.select(explode(tokens(col(textCol))).as("word"))
+    words(df, textCol)
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.functions.TopKAgg.topk_longs
 import graft.operators.Sampling
 
 /** Event-pipeline queries over the events table: JSON property
@@ -102,7 +103,7 @@ object EventQueries extends Registry {
     // events_approx_distinct can only be flag-checked (Spark's HLL
     // internals aren't portable). Scale shape: the distinct pass is the
     // same shuffle countDistinct pays; the k minima come from the
-    // TopKByScore PARTIAL aggregate (score = -hash), so at most k rows
+    // topk_longs PARTIAL aggregate (score = -hash), so at most k rows
     // per (group, partition) reach the reducer and per-group final
     // state is 64 longs — no per-group sort of the full hash set. The
     // numerator 63·2^60 overflows Int64, so the division runs in
@@ -116,10 +117,9 @@ object EventQueries extends Registry {
           conv(substring(md5(col("user_id").cast("string")), 1, 15),
             16, 10).cast("long").as("h"))
         .distinct()
-      val topk = udaf(new graft.functions.CraneAggregators.TopKByScore(k))
       val sk = h.groupBy("event_type")
         .agg(count(lit(1)).as("n_hashes"),
-          topk(-col("h"), col("h")).as("mins"))
+          topk_longs(-col("h"), col("h"), k).as("mins"))
         // mins is sorted by score desc = hash asc; element k is h_(k).
         // greatest(·,1): a hash of exactly 0 (p = 2^-60 per key) must
         // not crash either engine's division
@@ -193,7 +193,6 @@ object EventQueries extends Registry {
     // estimator degrades to exact, identically in both engines.
     "events_kmv_weekly_union" -> ((s, d) => {
       val k = 64
-      val topk = udaf(new graft.functions.CraneAggregators.TopKByScore(k))
       val ev = Tables.events(s, d)
       val h = ev.select(
           to_date(date_trunc("week", col("ts"))).as("week"),
@@ -202,7 +201,7 @@ object EventQueries extends Registry {
             16, 10).cast("long").as("h"))
         .distinct()
       val daily = h.groupBy("week", "day")
-        .agg(topk(-col("h"), col("h")).as("mins"))
+        .agg(topk_longs(-col("h"), col("h"), k).as("mins"))
       val nDays = daily.groupBy("week").agg(count(lit(1)).as("n_days"))
       val unioned = daily
         .select(col("week"), explode(col("mins")).as("m"))
@@ -210,7 +209,7 @@ object EventQueries extends Registry {
         .distinct() // same user on several days = same hash in >1 sketch
       val wk = unioned.groupBy("week")
         .agg(count(lit(1)).as("n_union"),
-          topk(-col("h"), col("h")).as("mins"))
+          topk_longs(-col("h"), col("h"), k).as("mins"))
         .withColumn("hk",
           greatest(try_element_at(col("mins"), lit(k))("_2"), lit(1L)))
       val exact = ev
@@ -536,8 +535,8 @@ object EventQueries extends Registry {
         .orderBy("user_id")
     }),
 
-    // Per-user top-3 events WITHOUT a window sort: the bounded TopK
-    // Aggregator crosses the shuffle with <= 3 rows per (user, map
+    // Per-user top-3 events WITHOUT a window sort: the bounded top-k
+    // aggregate crosses the shuffle with <= 3 rows per (user, map
     // partition) instead of sorting the whole fact table per group — at
     // 100 TB the window formulation (the oracle's) shuffles and sorts
     // everything; this one is partial-aggregated like min/max. Integer
@@ -545,13 +544,12 @@ object EventQueries extends Registry {
     // compute from identical parquet bits) keep comparisons exact; ties
     // break by event_id ascending on both sides.
     "events_topk_per_user" -> ((s, d) => {
-      val topk = udaf(new graft.functions.CraneAggregators.TopKByScore(3))
       Tables.events(s, d)
         .select(col("user_id"),
           floor(col("value") * 100).cast("long").as("score"),
           col("event_id"))
         .groupBy("user_id")
-        .agg(topk(col("score"), col("event_id")).as("top"))
+        .agg(topk_longs(col("score"), col("event_id"), 3).as("top"))
         .select(col("user_id"), posexplode(col("top")))
         .select(col("user_id"), (col("pos") + 1).cast("long").as("rank"),
           col("col._1").as("score_cents"), col("col._2").as("event_id"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.core.{Lineage, Tables}
 import graft.functions.{TextFunctions => TF}
+import graft.functions.TopKAgg.topk_longs
 import graft.operators.Corpus
 
 /** Text-analysis queries over the documents table: fingerprinting, token
@@ -745,14 +746,13 @@ object TextQueries extends Registry {
     }),
 
     "text_postings" -> ((s, d) => {
-      val mink = udaf(new graft.functions.CraneAggregators.TopKByScore(20))
       val pairs = Tables.documents(s, d)
         .select(col("doc_id"), explode(TF.tokens(col("text"))).as("term"))
         .groupBy("term", "doc_id")
         .agg(count(lit(1)).as("tfp"))
       pairs.groupBy("term")
         .agg(count(lit(1)).as("df"), sum("tfp").as("tf"),
-          mink(-col("doc_id"), col("doc_id")).as("top"))
+          topk_longs(-col("doc_id"), col("doc_id"), 20).as("top"))
         .select(col("term"), col("df"), col("tf"),
           concat_ws(",",
             transform(col("top"), x => x.getField("_2").cast("string")))

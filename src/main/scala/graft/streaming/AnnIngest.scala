@@ -49,7 +49,7 @@ object AnnIngest {
     * against the closure-captured plane, map-only), the probe rows join
     * the STATIC home-cell relation on cell — a stateless stream-static
     * hash join that Spark re-plans per micro-batch — and a
-    * watermark-windowed TopKByScore aggregation emits each query's
+    * watermark-windowed topk_longs aggregation emits each query's
     * exact-cosine top-k once its window closes. The query-side mirror
     * of [[assignCells]]; candidates, scoring (integer-bp cosine), and
     * selection (sim DESC, cand ASC, k-bounded) are identical to the
@@ -151,7 +151,7 @@ object AnnIngest {
           * 10000).cast("long").as("sim_bp"),
         col("cand_id"))
       // exactly-once on the QUERY side: a re-delivered query id would
-      // duplicate its (query, cand) pairs into the TopKByScore state,
+      // duplicate its (query, cand) pairs into the topk_longs state,
       // letting one candidate occupy several top-k slots and displace
       // the true k-th neighbor. Each candidate has exactly one home
       // cell and a query's probed cells are distinct, so (query_id,
@@ -235,12 +235,8 @@ object AnnIngest {
                      baseVersion: Long = -1L)
                     (implicit spark: SparkSession)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    assignCells(vecs, plane, lateness).toDF()
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.AnnIndexStore.Ivf.foldBatchDeltaCompacting(store,
-          name, baseVersion, compactEvery, centroids)(batch, batchId)
-      }
-      .start()
+    CraneStream.startBatches(assignCells(vecs, plane, lateness).toDF(),
+        checkpointDir)(graft.sources.AnnIndexStore.Ivf
+      .foldBatchDeltaCompacting(store, name, baseVersion, compactEvery,
+        centroids))
 }

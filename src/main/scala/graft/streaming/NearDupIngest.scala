@@ -170,15 +170,9 @@ object NearDupIngest {
             name: String, tsCol: String, idCol: String, textCol: String,
             checkpointDir: String, lateness: String, n: Int = 3,
             numPerms: Int = 32, rowsPerBand: Int = 4): StreamingQuery =
-    EventTimeOps.corpusIngestIncremental(docs, corpusFps, tsCol, textCol,
-        lateness)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(store, name, idCol, textCol, n, numPerms,
-          rowsPerBand)(batch, batchId)
-      }
-      .start()
+    CraneStream.startBatches(EventTimeOps.corpusIngestIncremental(docs,
+        corpusFps, tsCol, textCol, lateness), checkpointDir)(
+      ingestBatch(store, name, idCol, textCol, n, numPerms, rowsPerBand))
 
   /** [[start]] in delta-band mode ([[ingestBatchDelta]]), compacting
     * the chain every `compactEvery` triggers — the long-running-ingest
@@ -190,17 +184,14 @@ object NearDupIngest {
                  lateness: String, compactEvery: Int = 8, n: Int = 3,
                  numPerms: Int = 32,
                  rowsPerBand: Int = 4): StreamingQuery =
-    EventTimeOps.corpusIngestIncremental(docs, corpusFps, tsCol, textCol,
-        lateness)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    CraneStream.startBatches(EventTimeOps.corpusIngestIncremental(docs,
+        corpusFps, tsCol, textCol, lateness), checkpointDir) {
+      (batch, batchId) =>
         ingestBatchDelta(store, name, idCol, textCol, n, numPerms,
           rowsPerBand)(batch, batchId)
         if ((batchId + 1) % compactEvery == 0)
           compactBands(batch.sparkSession, store, name, 1L + batchId)
-      }
-      .start()
+    }
 
   /** Staleness audit over the maintained index: compare the newest
     * persisted band relation against a FRESH recompute over the given

@@ -242,7 +242,7 @@ object GenSeededTruth {
       cosine(byId(a), byId(b)).map(s => (a, b, round0(s * 10000)))
     }.toSeq
     // mirror into directed ends, top-5 per source by (sim_bp desc,
-    // neighbor asc) — the TopKByScore selection
+    // neighbor asc) — the topk_longs selection
     scored.flatMap { case (a, b, bp) => Seq((a, bp, b), (b, bp, a)) }
       .groupBy(_._1).toSeq.flatMap { case (src, es) =>
         es.sortBy { case (_, bp, dst) => (-bp, dst) }.take(5)

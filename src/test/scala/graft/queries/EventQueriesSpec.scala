@@ -72,8 +72,8 @@ class EventQueriesSpec extends SparkSpec {
     val rows = Seq((1L, 30L, 9L), (1L, 30L, 7L), (1L, 50L, 3L),
       (1L, 10L, 1L), (1L, 40L, 2L), (2L, 5L, 4L)).toDF("k", "s", "id")
       .repartition(4)
-    val topk = udaf(new graft.functions.CraneAggregators.TopKByScore(3))
-    val got = rows.groupBy("k").agg(topk(col("s"), col("id")).as("top"))
+    val got = rows.groupBy("k")
+      .agg(graft.functions.TopKAgg.topk_longs(col("s"), col("id"), 3).as("top"))
       .select(col("k"), posexplode(col("top")))
       .select(col("k"), col("pos"), col("col._1"), col("col._2"))
       .collect().map(r =>

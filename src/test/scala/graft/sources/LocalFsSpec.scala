@@ -4,6 +4,7 @@ import java.io.FileNotFoundException
 import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path => JPath}
+import java.sql.Timestamp
 import java.util.EnumSet
 
 import scala.jdk.CollectionConverters._
@@ -14,9 +15,12 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileAlreadyExistsException, FileContext,
   FileSystem, LocalFileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
-import graft.streaming.CraneStream
+import graft.functions.TextFunctions
+import graft.streaming.{CraneStream, NearDupIngest}
 
 /** [[LocalFs]] answers as Hadoop's stock local filesystem does, writes the
   * same files with the same modes, and forks no process for the streaming
@@ -169,6 +173,39 @@ class LocalFsSpec extends SparkSpec {
           new ProcessBuilder("true").start().waitFor()
         }
         // the recording sees process starts at all
+        starts.map(_.command) should contain("true")
+        starts.filter(_.fromShell).map(_.command) shouldBe empty
+      } finally q.stop()
+    }
+  }
+
+  test("NearDupIngest.startDelta triggers start no Hadoop Shell process") {
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val root = Files.createTempDirectory("forks-neardup")
+    val store = VersionedStore(root.resolve("store").toString)
+    def doc(i: Int) = s"the quick brown fox number $i jumps over the lazy dog " +
+      s"and then the fox $i runs all the way back home to the den"
+    val corpus = Seq((0L, doc(0))).toDF("doc_id", "text")
+    NearDupIngest.seed(spark, store, "corpus", corpus, "doc_id", "text")
+    val corpusFps = corpus.select(TextFunctions.fingerprint(col("text")).as("fp"))
+    val in = MemoryStream[(Long, Timestamp, String)]
+    // as for CraneStream.start: only the entry point's own routing counts
+    withoutContextRouting {
+      val q = NearDupIngest.startDelta(in.toDF().toDF("doc_id", "ts", "text"),
+        corpusFps, store, "corpus", "ts", "doc_id", "text",
+        root.resolve("ckpt").toString, lateness = "10 minutes", compactEvery = 2)
+      try {
+        def trigger(i: Int): Unit = {
+          in.addData((i.toLong, new Timestamp(86400000L + i * 1000L), doc(i)))
+          q.processAllAvailable()
+        }
+        trigger(1) // the first trigger pays JIT and class loading
+        val (_, starts) = processStarts {
+          (2 to 5).foreach(trigger)
+          NearDupIngest.acceptedDocs(spark, store, "corpus").collect()
+          new ProcessBuilder("true").start().waitFor()
+        }
         starts.map(_.command) should contain("true")
         starts.filter(_.fromShell).map(_.command) shouldBe empty
       } finally q.stop()

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.SparkSpec
+import graft.operators.TextOps
 import graft.sources.{LocalFs, LocalFsSpec, VersionedStore}
 
 /** Exactly-once across restart: the rebuild's answer to the reference's
@@ -68,13 +69,15 @@ class CheckpointSpec extends SparkSpec {
     stock.conf.set("fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
     stock.conf.set("fs.AbstractFileSystem.file.impl",
       "org.apache.hadoop.fs.local.LocalFs")
-    StreamApps.apps("wordCount")(CraneStream.fileLines(stock, inDir))
+    val key = CraneStream.apps("wordCount")._1
+    CraneStream.counts("wordCount", CraneStream.fileLines(stock, inDir))
       .writeStream
       .outputMode("complete")
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime("0 seconds"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.putVersion("wordCount_result", batchId, StreamApps.topK(batch, 10))
+        store.putVersion("wordCount_result", batchId,
+          TextOps.topK(batch, 10, "count", key))
         ()
       }
       .start()

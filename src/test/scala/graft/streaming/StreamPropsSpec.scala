@@ -3,6 +3,7 @@ package graft.streaming
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.SparkSpec
+import graft.operators.TextOps
 
 /** Property tests for the reference semantics (SURVEY.md §5 test plan):
   * running-count merge associativity (models Crane's mergeCache), top-K
@@ -18,7 +19,7 @@ class StreamPropsSpec extends SparkSpec {
 
   private def counts(lines: Seq[String]): Map[String, Long] = {
     import spark.implicits._
-    StreamApps.wordCount(lines.toDF("value")).collect()
+    CraneStream.counts("wordCount", lines.toDF("value")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 
@@ -41,7 +42,8 @@ class StreamPropsSpec extends SparkSpec {
       import spark.implicits._
       val shuffled = new scala.util.Random(seed).shuffle(lines)
       def top(ls: Seq[String]) =
-        StreamApps.topK(StreamApps.wordCount(ls.toDF("value")), 3)
+        TextOps.topK(CraneStream.counts("wordCount", ls.toDF("value")), 3,
+            "count", "word")
           .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       top(lines) == top(shuffled)
     })

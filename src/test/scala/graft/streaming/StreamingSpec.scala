@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
+import graft.operators.TextOps
 import graft.sources.VersionedStore
 
 /** Streaming parity tests for the three reference apps: running counts in
@@ -13,13 +14,12 @@ import graft.sources.VersionedStore
   * methodology, cs425_mp4.pdf §4). */
 class StreamingSpec extends SparkSpec {
 
-  private def runComplete(name: String,
-                          app: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+  private def runComplete(name: String, app: String,
                           batches: Seq[Seq[String]]): Map[String, Long] = {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val in = MemoryStream[String]
-    val q = app(in.toDF()).writeStream
+    val q = CraneStream.counts(app, in.toDF()).writeStream
       .outputMode("complete").format("memory").queryName(name).start()
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
@@ -29,13 +29,13 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("wordCount running counts accumulate across micro-batches") {
-    val got = runComplete("wc", StreamApps.wordCount,
+    val got = runComplete("wc", "wordCount",
       Seq(Seq("to be or not to be", "  to   be  "), Seq("or not")))
     got shouldBe Map("to" -> 3L, "be" -> 3L, "or" -> 2L, "not" -> 2L)
   }
 
   test("twitter keeps only well-formed edges and counts followees") {
-    val got = runComplete("tw", StreamApps.twitter,
+    val got = runComplete("tw", "twitter",
       Seq(Seq("1 5", "2 5", "malformed", "3 7", "1 5 9")))
     got shouldBe Map("5" -> 2L, "7" -> 1L)
   }
@@ -47,7 +47,7 @@ class StreamingSpec extends SparkSpec {
     val other = "remote - - [01/Jun/1995:00:01:00 -0600] \"GET /a.gif HTTP/1.0\" 200 50"
     val short = "a b 200"
     val no200 = "remote - - [01/Jun/1995:00:00:59 -0600] \"GET /index.html HTTP/1.0\" 404 1497"
-    val got = runComplete("hh", StreamApps.hothttp,
+    val got = runComplete("hh", "hothttp",
       Seq(Seq(ok, ok, other, short, no200)))
     got shouldBe Map("/index.html" -> 2L, "/a.gif" -> 1L)
   }
@@ -56,7 +56,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val in = MemoryStream[String]
-    val q = StreamApps.grep(in.toDF(), "err(or)? [0-9]+")
+    val q = TextOps.grep(in.toDF(), "value", "err(or)? [0-9]+")
       .writeStream.outputMode("append").format("memory")
       .queryName("grep").start()
     try {
@@ -72,7 +72,7 @@ class StreamingSpec extends SparkSpec {
     val lines = Seq("to be or not to be", "or not", "to be")
     // batch computation on the same lines is the oracle (the reference's
     // dual-implementation methodology)
-    val expected = StreamApps.wordCount(lines.toDF("value")).collect()
+    val expected = CraneStream.counts("wordCount", lines.toDF("value")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val server = new java.net.ServerSocket(
       0, 1, java.net.InetAddress.getLoopbackAddress)
@@ -87,7 +87,7 @@ class StreamingSpec extends SparkSpec {
     writer.start()
     val df = CraneStream.socketLines(spark,
       server.getInetAddress.getHostAddress, server.getLocalPort)
-    val q = StreamApps.wordCount(df).writeStream
+    val q = CraneStream.counts("wordCount", df).writeStream
       .outputMode("complete").format("memory").queryName("sock_wc").start()
     try {
       // the socket source delivers asynchronously: poll until the running
@@ -111,7 +111,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val counts = Seq(("b", 2L), ("a", 2L), ("c", 3L), ("d", 1L))
       .toDF("word", "count")
-    StreamApps.topK(counts, 3).collect().map(_.getString(0)).toSeq shouldBe
+    TextOps.topK(counts, 3, "count", "word").collect().map(_.getString(0)).toSeq shouldBe
       Seq("c", "a", "b")
   }
 
@@ -196,7 +196,7 @@ class StreamingSpec extends SparkSpec {
       vsB.zip(vsU).foreach { case (vb, vu) =>
         val got = snap(storeB, "wordCount_topk", vb)
           .collect().map(r => r.getString(0) -> r.getLong(1)).toSet
-        val want = StreamApps.topK(snap(storeU, "wordCount_counts", vu), 2)
+        val want = TextOps.topK(snap(storeU, "wordCount_counts", vu), 2, "count", "word")
           .collect().map(r => r.getString(0) -> r.getLong(1)).toSet
         got shouldBe want
       }
