@@ -19,9 +19,9 @@ import org.apache.spark.sql.graft.shims
   * produces it scans and shuffles the whole shingle index. [[dataFrame]]
   * materializes it once per (session, key) behind a [[Lineage.cut]] and
   * hands every later query the truncated-lineage handle. The same store
-  * holds driver-side index metadata (the det-IVF plane kernel) and the
-  * handles of one-time layout writes (bucketed and day-partitioned
-  * copies, the served ANN index store).
+  * holds the session's det ANN index builds and the handles of one-time
+  * layout writes (bucketed and day-partitioned copies, the served ANN
+  * index store).
   *
   * Keys embed every parameter the entry depends on (table dir, n,
   * threshold). The session part is Spark's session UUID, never reused,

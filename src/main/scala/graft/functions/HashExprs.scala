@@ -430,8 +430,8 @@ object HashExprs {
     * embedding against the collected coarse-quantizer plane, in rank
     * order — the integer affinity ranking bp = floor(10⁴·dot/(√nv·√nc))
     * with ties to the smallest cell and the zero-norm guard (bp = 0),
-    * bit-identical to the relational rank chain
-    * (detIvfCellRanksFrom: dims ⋈ centroids → dots → window) AND to
+    * bit-identical to the relational rank chain the det-IVF oracles
+    * replay (dims ⋈ centroids → dots → window) AND to
     * the streaming assignment (AnnIngest.assignCells — this is that
     * loop as a codegen'd expression). `cells` ascending (the scan
     * order IS the tie rule: a strictly-greater compare keeps the

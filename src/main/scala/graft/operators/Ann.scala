@@ -574,7 +574,7 @@ object Ann {
     * (the prefix centroids ARE [[detIvfCentroids]] restricted to
     * dim < log2(s)). Vectors with no prefix coordinates (empty
     * arrays) keep subkey 0 — they are filtered from home/probe sides
-    * downstream anyway (detIvfCandidates' empty-vector note). */
+    * downstream anyway (buildDetIvfIndex's empty-vector note). */
   private def detRefineLabels(e: DataFrame, subcells: Int): DataFrame =
     if (subcells <= 1) e
     else {
@@ -611,34 +611,13 @@ object Ann {
     * `subcells` > 1 applies the √n quantizer-sizing policy
     * ([[autoSubcellsExact]] / [[detRefineLabels]]): same machinery
     * over the refined label space, so probed-list length stays ~√n as
-    * the corpus grows instead of Θ(n/labels). */
+    * the corpus grows instead of Θ(n/labels). The inline twin IS the
+    * lifecycle: [[ivfIndexTopK]] serving [[buildDetIvfIndex]]. */
   def ivfDetTopK(embs: DataFrame, idCol: String, vecCol: String,
                  labelCol: String, queryPred: Column, k: Int,
-                 nprobe: Int = 2, subcells: Int = 1,
-                 prebuiltPlane: Option[PlaneKernel] = None): DataFrame = {
-    // a prebuilt plane (the session-memoized [[buildDetPlane]] at the
-    // SAME subcells) skips the per-query centroid aggregation+collect;
-    // labels only feed the quantizer, so the home/probe side needs no
-    // refinement pass either
-    val pk = prebuiltPlane.getOrElse {
-      val er = detRefineLabels(spread(embs).select(col(idCol).as("id"),
-        col(labelCol).cast("long").as("label"),
-        col(vecCol).cast("array<double>").as("v")), subcells)
-      planeKernelOf(detIvfCentroids(detDims(er))
-        .select(col("label").as("cell"), col("dim"), col("ci")))
-    }
-    val e = spread(embs).select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v"))
-    // empty-array vectors get no home and no probes — see
-    // detIvfCandidates' note
-    val homeV = e.filter(size(col("v")) > 0)
-      .select(col("id").as("cand_id"), col("v").as("cv"),
-        element_at(kernelCells(pk, col("v"), 1), 1).as("cell"))
-    val probesV = e.filter(queryPred && size(col("v")) > 0)
-      .select(col("id").as("query_id"), col("v").as("qv"),
-        explode(kernelCells(pk, col("v"), nprobe)).as("cell"))
-    ivfScoredTopKTail(probesV, homeV, k)
-  }
+                 nprobe: Int = 2, subcells: Int = 1): DataFrame =
+    ivfIndexTopK(buildDetIvfIndex(embs, idCol, vecCol, labelCol, subcells),
+      embs, idCol, vecCol, queryPred, k, nprobe)
 
   /** Shared exact tail of the IVF-Flat paths ([[ivfDetTopK]] and the
     * persisted-index [[ivfIndexTopK]]): the probe side rides in as a
@@ -689,12 +668,16 @@ object Ann {
     * load / streaming fold) lives in
     * [[graft.sources.AnnIndexStore]]. */
   final case class IvfIndexRelations(centroids: DataFrame,
-                                     home: DataFrame)
+                                     home: DataFrame) {
+    /** [[centroids]] collected into the ranking kernel once per index
+      * value, so every serve of one memoized index shares the collect. */
+    private[operators] lazy val plane: PlaneKernel = planeKernelOf(centroids)
+  }
 
   /** Build the det-IVF index relations once — the offline "train +
-    * add" step of the index lifecycle. Same integer arithmetic as
-    * [[ivfDetTopK]]'s inline chain, so an index built here and served
-    * by [[ivfIndexTopK]] reproduces the inline query bit-for-bit.
+    * add" step of the index lifecycle, and the one preamble of every
+    * det-IVF family ([[ivfDetTopK]], [[ivfDetHomeCells]],
+    * [[buildDetIvfPqIndex]], [[ivfPqResidualDetTopK]]).
     * Home assignment runs on the collected-plane kernel (one n·d
     * aggregation to train, one narrow map pass to add — the FAISS
     * train/add split), which is what keeps the add step O(n·nlist·d)
@@ -706,30 +689,44 @@ object Ann {
     val e = detRefineLabels(spread(embs).select(col(idCol).as("id"),
       col(labelCol).cast("long").as("label"),
       col(vecCol).cast("array<double>").as("v")), subcells)
+    // map-side cell ranking (HashExprs.DetIvfCellsI64 — the streaming
+    // assignCells loop as a codegen'd expression, bit-identical to the
+    // relational rank chain the oracles replay): the coarse quantizer is
+    // collected once (maxCells-guarded index metadata) and home cells
+    // are one narrow map pass — no n×nlist exploded dots shuffle or
+    // per-id rank window
     val pk = planeKernelOf(detIvfCentroids(detDims(e))
       .select(col("label").as("cell"), col("dim"), col("ci")))
+    // EMPTY-array vectors get no home (and, at serve, no probes) — the
+    // relational rank chain produced no dims rows (hence no rank rows)
+    // for them, while the kernel would rank every cell at affinity 0
+    // and home them to the smallest cell; the filter preserves the
+    // relational no-home contract (zero-NORM but non-empty vectors rank
+    // 0 in both forms and stay). One routing row per id, as the store's
+    // folds and chain reads keep it: every serve joins home back to the
+    // corpus by id, so a corpus row repeated under one id would
+    // otherwise multiply that candidate's pairs
     val home = e.filter(size(col("v")) > 0)
       .select(col("id"),
         element_at(kernelCells(pk, col("v"), 1), 1).as("cell"))
+      .distinct()
     IvfIndexRelations(planeRelationOf(e.sparkSession, pk), home)
   }
 
   /** Serve top-k from an ALREADY-BUILT index — the load-and-serve step:
-    * query vectors rank the LOADED centroid relation for their nprobe
-    * probe cells, probe rows join the LOADED routing table, and the
-    * exact rerank runs over the probed lists only. The quantizer is
-    * never rebuilt — the entire point of persisting it. Per-id probe
-    * ranks are independent, so ranking just the query set against the
-    * same centroids equals [[ivfDetTopK]]'s rank-all-then-filter
-    * bit-for-bit; output is identical by construction and shares the
-    * det chain's DuckDB oracle. */
+    * query vectors rank the index's centroid relation for their nprobe
+    * probe cells, probe rows join the routing table, and the exact
+    * rerank runs over the probed lists only. The quantizer is never
+    * rebuilt — the entire point of persisting it. Per-id probe ranks
+    * are independent, so ranking just the query set against the same
+    * centroids equals the oracle's rank-all-then-filter chain
+    * bit-for-bit; a freshly built, a memoized and a LOADED index all
+    * share the det chain's DuckDB oracle. */
   def ivfIndexTopK(index: IvfIndexRelations, embs: DataFrame,
                    idCol: String, vecCol: String, queryPred: Column,
                    k: Int, nprobe: Int = 2): DataFrame = {
     val e = spread(embs).select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
-    val pk = planeKernelOf(index.centroids
-      .select(col("cell"), col("dim"), col("ci")))
     // attach the vector to each routing row ONCE — a LINEAR id-keyed
     // join (n index rows against n corpus rows), never the pair
     // stream; then repartition so the broadcast-probe fan-out's
@@ -739,9 +736,10 @@ object Ann {
       .join(e.select(col("id").as("cand_id"), col("v").as("cv")),
         "cand_id")
       .repartition(e.sparkSession.sparkContext.defaultParallelism)
+    // empty-array vectors get no probes — see buildDetIvfIndex's note
     val probesV = e.filter(queryPred && size(col("v")) > 0)
       .select(col("id").as("query_id"), col("v").as("qv"),
-        explode(kernelCells(pk, col("v"), nprobe)).as("cell"))
+        explode(kernelCells(index.plane, col("v"), nprobe)).as("cell"))
     ivfScoredTopKTail(probesV, homeV, k)
   }
 
@@ -760,8 +758,6 @@ object Ann {
                          queryPred: Column, nprobe: Int): DataFrame = {
     val e = spread(embs).select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
-    val pk = planeKernelOf(index.centroids
-      .select(col("cell"), col("dim"), col("ci")))
     // spread the tiny probe relation BEFORE the candidate join: AQE
     // coalesces it to one partition (4k rows), and when the routing
     // table is small enough to broadcast, probes become the STREAM
@@ -770,7 +766,7 @@ object Ann {
     // one core until this)
     val probes = e.filter(queryPred && size(col("v")) > 0)
       .select(col("id").as("query_id"),
-        explode(kernelCells(pk, col("v"), nprobe)).as("cell"))
+        explode(kernelCells(index.plane, col("v"), nprobe)).as("cell"))
       .repartition(e.sparkSession.sparkContext.defaultParallelism)
     // candidate-join parallelism must come from the PLAN, not the file
     // layout: the routing table compresses to very few parquet files
@@ -783,9 +779,13 @@ object Ann {
     val home = index.home
       .select(col("id").as("cand_id"), col("cell"))
       .repartition(e.sparkSession.sparkContext.defaultParallelism)
-    // no distinct: see detIvfCandidates' pair-uniqueness note (home is
-    // one row per id after the chain read's distinct; probe cells are
-    // rank-distinct)
+    // NO distinct over the q×n pair stream: pairs are unique by
+    // construction — home holds exactly one (rk = 1) cell per id
+    // (builds and chain reads keep one row per id) and a query's probe
+    // cells are distinct (rank-filtered) — so a distinct here would
+    // hash/spill the whole fan-out (1.6B rows at the 2M deep rung) to
+    // remove nothing. The pair stream stays PIPELINED from the join
+    // into the k-bounded partial agg.
     probes.join(home, "cell")
       .filter(col("query_id") =!= col("cand_id"))
       .select("query_id", "cand_id")
@@ -800,71 +800,60 @@ object Ann {
   final case class IvfPqIndexRelations(centroids: DataFrame,
                                        home: DataFrame,
                                        codebook: DataFrame,
-                                       codes: DataFrame)
-
-  /** Build the det IVF-PQ index relations once (train + encode + add).
-    * Same integer arithmetic as [[ivfPqDetTopK]]'s inline chain; home
-    * assignment on the collected-plane kernel like
-    * [[buildDetIvfIndex]] (train once, add map-side). `subcells`
-    * applies the √n quantizer-sizing policy to the coarse level. */
-  def buildDetIvfPqIndex(embs: DataFrame, idCol: String, vecCol: String,
-                         labelCol: String, ks: Int = 16,
-                         subcells: Int = 1): IvfPqIndexRelations = {
-    val e = detRefineLabels(spread(embs).select(col(idCol).as("id"),
-      col(labelCol).cast("long").as("label"),
-      col(vecCol).cast("array<double>").as("v")), subcells)
-    val pk = planeKernelOf(detIvfCentroids(detDims(e))
-      .select(col("label").as("cell"), col("dim"), col("ci")))
-    val home = e.filter(size(col("v")) > 0)
-      .select(col("id"),
-        element_at(kernelCells(pk, col("v"), 1), 1).as("cell"))
-    val cb = detPqCodebook(e.select("id", "v"), ks)
-    val codes = detPqCodesKernel(e.select("id", "v"), cb)
-    IvfPqIndexRelations(planeRelationOf(e.sparkSession, pk), home, cb,
-      codes)
+                                       codes: DataFrame) {
+    /** The coarse level as one index value (and one plane collect). */
+    private[operators] lazy val ivf: IvfIndexRelations =
+      IvfIndexRelations(centroids, home)
   }
 
-  /** Serve IVF-PQ top-k from an ALREADY-BUILT index: probe cells from
-    * the loaded coarse quantizer, candidate codes from the loaded code
-    * relation, the query's ADC LUT from the loaded CODEBOOK (the only
-    * per-query quantizer work — ks × subspace distances), exact
-    * integer-bp rerank of the ADC shortlist. Output-identical to
-    * [[ivfPqDetTopK]] by construction — per-id probe ranks, code
-    * assignments, and LUT entries are all independent per id, so
-    * computing the query side alone against the persisted relations
-    * reproduces the inline rank-everything chain bit-for-bit. */
+  /** Build the det IVF-PQ index relations once (train + encode + add):
+    * [[buildDetIvfIndex]]'s coarse level plus [[addDetPq]]'s PQ half.
+    * `subcells` applies the √n quantizer-sizing policy to the coarse
+    * level. */
+  def buildDetIvfPqIndex(embs: DataFrame, idCol: String, vecCol: String,
+                         labelCol: String, ks: Int = 16,
+                         subcells: Int = 1): IvfPqIndexRelations =
+    addDetPq(buildDetIvfIndex(embs, idCol, vecCol, labelCol, subcells),
+      embs, idCol, vecCol, ks)
+
+  /** Train + encode the PQ half over an ALREADY-BUILT det-IVF index:
+    * the codebook and the codes do not depend on the coarse cells, so
+    * a registry adds them to its one memoized coarse build instead of
+    * training the coarse level again. */
+  def addDetPq(ivf: IvfIndexRelations, embs: DataFrame, idCol: String,
+               vecCol: String, ks: Int = 16): IvfPqIndexRelations = {
+    val e = spread(embs).select(col(idCol).as("id"),
+      col(vecCol).cast("array<double>").as("v"))
+    // the encode kernel's collect materializes the codebook; every later
+    // reader (query LUTs, persist) reads those blocks instead of
+    // re-ranking the corpus by md5
+    val cb = Lineage.cut(detPqCodebook(e, ks))
+    IvfPqIndexRelations(ivf.centroids, ivf.home, cb,
+      detPqCodesKernel(e, cb))
+  }
+
+  /** Serve IVF-PQ top-k from an ALREADY-BUILT index: probe cells and
+    * probed candidates from the coarse level ([[ivfIndexCandidates]]),
+    * candidate codes from the index's code relation, the query's ADC
+    * LUT from its CODEBOOK (the only per-query quantizer work — ks ×
+    * subspace distances), exact integer-bp rerank of the ADC
+    * shortlist. Per-id probe ranks, code assignments, and LUT entries
+    * are all independent per id, so computing the query side alone
+    * against the index relations reproduces the oracle's
+    * rank-everything chain bit-for-bit. */
   def ivfPqIndexTopK(index: IvfPqIndexRelations, embs: DataFrame,
                      idCol: String, vecCol: String, queryPred: Column,
                      k: Int, nprobe: Int = 2,
                      shortlist: Int = 32): DataFrame = {
     val e = spread(embs).select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
-    val q = e.filter(queryPred)
-    // probe cells from the LOADED quantizer via the collected-plane
-    // kernel — see ivfIndexCandidates (the relational rank chain
-    // shuffled q×nlist exploded rows, ruinous once nlist grows under
-    // the √n policy)
-    val pk = planeKernelOf(index.centroids
-      .select(col("cell"), col("dim"), col("ci")))
-    val probes = q.filter(size(col("v")) > 0)
-      .select(col("id").as("query_id"),
-        explode(kernelCells(pk, col("v"), nprobe)).as("cell"))
-      // see ivfIndexCandidates' probe-spreading note
-      .repartition(e.sparkSession.sparkContext.defaultParallelism)
-    // see ivfIndexTopK's layout note: fan-out parallelism from the
-    // plan, not the routing table's file count
-    // no distinct: see detIvfCandidates' pair-uniqueness note
-    val cand = probes
-      .join(index.home.select(col("id").as("cand_id"), col("cell"))
-          .repartition(e.sparkSession.sparkContext.defaultParallelism),
-        "cell")
-      .filter(col("query_id") =!= col("cand_id"))
-      .select("query_id", "cand_id")
-    val qlutW = detPqSsdFrom(detPqDims(q), index.codebook)
-      .groupBy("id")
-      .agg(expr("transform(array_sort(collect_list(struct(j, cw, ssd)))," +
-        " s -> s.ssd)").as("lut"))
-      .select(col("id").as("query_id"), col("lut"))
+    val cand = ivfIndexCandidates(index.ivf, embs, idCol, vecCol,
+      queryPred, nprobe)
+    val qlutW = detPqQueryLut(e.filter(queryPred), index.codebook)
+    // ADC only over IVF-probed candidates: the pair relation carries
+    // 8-codeword rows (codes join) + the broadcast per-query LUT, and
+    // the shortlist partial agg bounds the shuffle — ADC must never be
+    // a shuffled LUT-match join
     val pairsAdc = cand
       .join(index.codes.select(col("id").as("cand_id"), col("codes")),
         "cand_id")
@@ -875,64 +864,30 @@ object Ann {
 
   /** The det-IVF index's HOME-CELL relation, exposed as its own
     * operator: every vector's rank-1 cell under the integer-exact
-    * affinity ranking [[ivfDetTopK]] builds on. The relation a vector
-    * store materializes as its routing table, and the batch ground
-    * truth the STREAMING cell assignment
+    * affinity ranking [[ivfDetTopK]] builds on — [[buildDetIvfIndex]]'s
+    * routing table, ordered by id. The relation a vector store
+    * materializes as its routing table, and the batch ground truth the
+    * STREAMING cell assignment
     * ([[graft.streaming.AnnIngest.assignCells]]) must agree with. */
   def ivfDetHomeCells(embs: DataFrame, idCol: String, vecCol: String,
-                      labelCol: String,
-                      prebuiltPlane: Option[PlaneKernel] = None)
-      : DataFrame = {
-    // map-side assignment on the collected plane kernel (bit-identical
-    // to the relational detIvfCellRanks chain it replaces — the
-    // detIvfCandidates/buildDetIvfIndex precedent, already oracle-pinned
-    // via the served twins); empty-array vectors produced no rank rows
-    // relationally, so the size gate preserves the no-home contract
-    val pk = prebuiltPlane.getOrElse {
-      val er = spread(embs).select(col(idCol).as("id"),
-        col(labelCol).cast("long").as("label"),
-        col(vecCol).cast("array<double>").as("v"))
-      planeKernelOf(detIvfCentroids(detDims(er))
-        .select(col("label").as("cell"), col("dim"), col("ci")))
-    }
-    val e = spread(embs).select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v"))
-    e.filter(size(col("v")) > 0)
-      .select(col("id").as(idCol),
-        element_at(kernelCells(pk, col("v"), 1), 1).as("cell"))
+                      labelCol: String): DataFrame =
+    buildDetIvfIndex(embs, idCol, vecCol, labelCol).home
+      .select(col("id").as(idCol), col("cell"))
       .orderBy(idCol)
-  }
 
   /** One cell of the collected det-IVF coarse quantizer: integer
     * micro-unit centroid coordinates (dense by dim) + the precomputed
     * centroid norm Σci². */
   final case class CentroidCell(cell: Long, ci: Array[Long], nc: Long)
 
-  /** Collect the det-IVF integer centroid plane to the driver — the
-    * broadcastable coarse quantizer a STREAMING ingest assigns arriving
-    * vectors against. Cells × dims is index metadata, not corpus data
-    * (a 4096-cell × 1024-dim plane is ~32 MB of longs); `maxCells`
-    * is the hard cap that keeps the collect bounded no matter what
-    * label column it is pointed at. The centroid arithmetic is the
-    * SAME order-free integer expression [[ivfDetTopK]]'s cell ranking
-    * uses, so batch home cells and streaming assignments cannot
-    * drift. */
-  def detIvfCentroidPlane(embs: DataFrame, vecCol: String,
-                          labelCol: String,
-                          maxCells: Int = 65536): Array[CentroidCell] = {
-    val dims = embs
-      .select(col(labelCol).cast("long").as("label"),
-        posexplode(col(vecCol).cast("array<double>")).as(Seq("dim", "x")))
-      .withColumn("xi", floor(col("x") * 1000000.0 + 0.5).cast("long"))
-    detIvfCentroidPlaneOf(detIvfCentroids(dims)
-      .select(col("label").as("cell"), col("dim"), col("ci")), maxCells)
-  }
-
   /** Collect a centroid RELATION (cell, dim, ci) — freshly built or
     * LOADED from a persisted index version — into the broadcastable
     * plane. The path a long-running ingest takes: load the versioned
     * quantizer once, collect it here, ship it to every executor;
-    * arriving vectors never trigger a rebuild. */
+    * arriving vectors never trigger a rebuild. Cells × dims is index
+    * metadata, not corpus data (a 4096-cell × 1024-dim plane is ~32 MB
+    * of longs); `maxCells` is the hard cap that keeps the collect
+    * bounded no matter what label column the index was built over. */
   def detIvfCentroidPlaneOf(cent: DataFrame,
                             maxCells: Int = 65536): Array[CentroidCell] = {
     val rows = cent.groupBy("cell")
@@ -957,29 +912,13 @@ object Ann {
   /** The collected det-IVF coarse quantizer in the flat form the
     * [[graft.functions.HashExprs.DetIvfCellsI64]] kernel consumes —
     * cells in ascending order, centroid coordinates dense by dim, the
-    * precomputed Σci² norms. Built once per plan from a centroid
-    * RELATION (freshly aggregated or LOADED from a persisted index
-    * version) and fanned to every consumer: one collect, map-side
+    * precomputed Σci² norms. Built once per index value from a
+    * centroid RELATION (freshly aggregated or LOADED from a persisted
+    * index version) and fanned to every consumer: one collect, map-side
     * ranking everywhere. */
   final case class PlaneKernel(cells: Array[Long],
                                flat: Array[Long],
                                nc: Array[Long], dims: Int)
-
-  /** Build (aggregate + collect) the det-IVF coarse-quantizer kernel for
-    * `embs` under the label quantizer (optionally √n-refined via
-    * `subcells`) — the per-query preamble every det-IVF family ran for
-    * itself. Exposed so a registry can build it ONCE per (session, dir,
-    * subcells) and hand the collected kernel to every consumer
-    * ([[ivfDetTopK]], [[ivfDetHomeCells]], [[ivfPqDetTopK]],
-    * [[ivfPqResidualDetTopK]]) — index metadata, a few KB of longs. */
-  def buildDetPlane(embs: DataFrame, idCol: String, vecCol: String,
-                    labelCol: String, subcells: Int = 1): PlaneKernel = {
-    val e = detRefineLabels(spread(embs).select(col(idCol).as("id"),
-      col(labelCol).cast("long").as("label"),
-      col(vecCol).cast("array<double>").as("v")), subcells)
-    planeKernelOf(detIvfCentroids(detDims(e))
-      .select(col("label").as("cell"), col("dim"), col("ci")))
-  }
 
   private def planeKernelOf(cent: DataFrame,
                             maxCells: Int = 65536): PlaneKernel = {
@@ -1012,55 +951,6 @@ object Ann {
     HashExprs.det_ivf_cells_i64(v, pk.cells, pk.flat, pk.nc, pk.dims,
       nprobe)
 
-  /** Det-IVF probed candidate pairs over (id, label, v): homes every
-    * vector to its rk=1 cell, probes the query set's `nprobe` nearest
-    * cells, and joins the two on cell — the (query_id, cand_id)
-    * relation BOTH det-IVF families rerank. Factored so probe
-    * semantics (tie handling, self-exclusion, dedup) cannot drift
-    * between [[ivfDetTopK]] and [[ivfPqDetTopK]], whose oracles share
-    * the one DuckDB cell CTE chain. */
-  private def detIvfCandidates(e: DataFrame, queryPred: Column,
-                               nprobe: Int,
-                               prebuiltPlane: Option[PlaneKernel] = None)
-      : DataFrame = {
-    // map-side cell ranking (HashExprs.DetIvfCellsI64 — the streaming
-    // assignCells loop as a codegen'd expression, bit-identical to the
-    // relational detIvfCellRanks chain): the coarse quantizer is
-    // collected once (maxCells-guarded index metadata) and home/probe
-    // cells are one narrow map pass each, replacing the n×nlist
-    // exploded dots shuffle + per-id rank window that dominated the
-    // det-IVF families at the 500k ladder rung (43-52 s of which the
-    // ranking was most) once the encode/ADC kernels had removed the
-    // other interpreter costs
-    val pk = prebuiltPlane.getOrElse(
-      planeKernelOf(detIvfCentroids(detDims(e))
-        .select(col("label").as("cell"), col("dim"), col("ci"))))
-    // EMPTY-array vectors get no home and no probes — the relational
-    // rank chain produced no dims rows (hence no rank rows) for them,
-    // while the kernel would rank every cell at affinity 0 and home
-    // them to the smallest cell; the filter preserves the relational
-    // no-home contract (zero-NORM but non-empty vectors rank 0 in both
-    // forms and stay)
-    val home = e.filter(size(col("v")) > 0)
-      .select(col("id").as("cand_id"),
-        element_at(kernelCells(pk, col("v"), 1), 1).as("cell"))
-    val probes = e.filter(queryPred && size(col("v")) > 0)
-      .select(col("id").as("query_id"),
-        explode(kernelCells(pk, col("v"), nprobe)).as("cell"))
-    // NO distinct over the q×n pair stream: pairs are unique by
-    // construction — home holds exactly one (rk = 1) cell per id and a
-    // query's probe cells are distinct (rank-filtered) — so a distinct
-    // here would hash/spill the whole fan-out (1.6B rows at the 2M
-    // deep rung) to remove nothing. The pair stream stays PIPELINED
-    // from the join into the k-bounded TopK partial agg.
-    probes.join(home, "cell")
-      .filter(col("query_id") =!= col("cand_id"))
-      .select("query_id", "cand_id")
-  }
-
-  /** Det-IVF cell affinity ranking over (id, label, v) — shared by
-    * [[ivfDetTopK]] and [[ivfPqDetTopK]]. Returns (id, label, rk):
-    * rk 1 = the id's home cell, rk <= nprobe = its probe set. */
   /** Micro-unit coordinate explode shared by the det-IVF relations:
     * (id, label, dim, xi) with xi = floor(x·10⁶ + 0.5). */
   private def detDims(e: DataFrame): DataFrame = e
@@ -1080,41 +970,6 @@ object Ann {
       .agg(expr("CAST((2 * (sum(xi) + 2000000 * count(1)) + count(1))" +
         " DIV (2 * count(1)) - 2000000 AS BIGINT)").as("ci"))
 
-  private def detIvfCellRanks(e: DataFrame): DataFrame = {
-    val dims = detDims(e)
-    detIvfCellRanksFrom(dims, detIvfCentroids(dims))
-  }
-
-  /** [[detIvfCellRanks]] over ALREADY-BUILT dims/centroid relations —
-    * callers that also consume dims/cent themselves (the residual
-    * family) pass the shared subtrees in, so the heaviest shuffle (the
-    * per-(label, dim) centroid aggregation over n·d exploded rows) is
-    * constructed once instead of relying on ReuseExchange to
-    * deduplicate identical subtrees. */
-  private def detIvfCellRanksFrom(dims: DataFrame,
-                                  cent: DataFrame): DataFrame = {
-    val cn = cent.groupBy(col("label"))
-      .agg(sum(col("ci") * col("ci")).as("nc"))
-    val vn = dims.groupBy("id").agg(sum(col("xi") * col("xi")).as("nv"))
-    val dots = dims.select("id", "dim", "xi")
-      .join(broadcast(cent), "dim")
-      .groupBy("id", "label").agg(sum(col("xi") * col("ci")).as("dot"))
-    // zero-norm guard: affinity is DEFINED as 0 for a zero vector or
-    // all-zero centroid — Spark would cast the NaN silently to 0 while
-    // DuckDB raises on CAST(NaN AS BIGINT), so make the case explicit
-    // and identical in both engines
-    val sims = dots.join(broadcast(cn), "label").join(vn, "id")
-      .select(col("id"), col("label"),
-        when(col("nv") > 0 && col("nc") > 0,
-          floor(lit(10000.0) * col("dot") /
-            (sqrt(col("nv")) * sqrt(col("nc")))).cast("long"))
-          .otherwise(0L).as("cell_bp"))
-    val wCell = Window.partitionBy("id")
-      .orderBy(col("cell_bp").desc, col("label").asc)
-    sims.withColumn("rk", row_number().over(wCell))
-      .select("id", "label", "rk")
-  }
-
   /** [[ivfPqTopK]]'s oracle-checkable twin — the composition that closes
     * the last seeded-only index family: coarse cells from
     * [[ivfDetTopK]]'s per-label integer centroids (home = rank-1
@@ -1126,36 +981,13 @@ object Ann {
     * Every step is integer arithmetic over md5-deterministic structure,
     * so the full two-level index replays in SQL; the seeded
     * [[ivfPqTopK]] stays the library path with its AnnSpec recall
-    * bound. */
+    * bound. [[ivfPqIndexTopK]] serving [[buildDetIvfPqIndex]]. */
   def ivfPqDetTopK(embs: DataFrame, idCol: String, vecCol: String,
                    labelCol: String, queryPred: Column, k: Int,
                    nprobe: Int = 2, ks: Int = 16,
-                   shortlist: Int = 32,
-                   prebuiltPlane: Option[PlaneKernel] = None,
-                   prebuiltCodebook: Option[DataFrame] = None,
-                   prebuiltCodes: Option[DataFrame] = None): DataFrame = {
-    val e = spread(embs).select(col(idCol).as("id"),
-      col(labelCol).cast("long").as("label"),
-      col(vecCol).cast("array<double>").as("v"))
-    // prebuilts = the session-memoized shared preambles (plane kernel,
-    // PQ codebook, per-vector codes) — identical relations, built once
-    // per session instead of once per det-family query
-    val cand = detIvfCandidates(e, queryPred, nprobe, prebuiltPlane)
-    val cb = prebuiltCodebook.getOrElse(detPqCodebook(e.select("id", "v"),
-      ks))
-    val codesW = prebuiltCodes
-      .getOrElse(detPqCodesKernel(e.select("id", "v"), cb))
-      .select(col("id").as("cand_id"), col("codes"))
-    val qlutW = detPqQueryLut(e.filter(queryPred).select("id", "v"), cb)
-    // ADC only over IVF-probed candidates: the pair relation carries
-    // 8-codeword rows (codes join) + the broadcast per-query LUT, and
-    // the shortlist partial agg bounds the shuffle — see detPqWide's
-    // scaladoc for why ADC must never be a shuffled LUT-match join
-    val pairsAdc = cand.join(codesW, "cand_id")
-      .join(broadcast(qlutW), "query_id")
-      .select(col("query_id"), col("cand_id"), adcColumn.as("adc"))
-    exactCosineRerank(adcShortlist(pairsAdc, shortlist), e, k)
-  }
+                   shortlist: Int = 32): DataFrame =
+    ivfPqIndexTopK(buildDetIvfPqIndex(embs, idCol, vecCol, labelCol, ks),
+      embs, idCol, vecCol, queryPred, k, nprobe, shortlist)
 
   /** [[ivfPqDetTopK]] with RESIDUAL encoding — the actual FAISS IVF-PQ
     * construction: every vector is PQ-coded as its residual against its
@@ -1172,56 +1004,49 @@ object Ann {
     * broadcast like [[ivfPqDetTopK]]'s LUT), and ADC stays a map-side
     * scan of the probed lists. Tail identical to [[ivfPqDetTopK]]:
     * ADC shortlist, exact integer-bp cosine rerank, (sim DESC, cand
-    * ASC) ties. */
+    * ASC) ties. [[ivfPqResidualIndexTopK]] over [[buildDetIvfIndex]]. */
   def ivfPqResidualDetTopK(embs: DataFrame, idCol: String, vecCol: String,
                            labelCol: String, queryPred: Column, k: Int,
                            nprobe: Int = 2, ks: Int = 16,
-                           shortlist: Int = 32,
-                           prebuiltPlane: Option[PlaneKernel] = None)
+                           shortlist: Int = 32): DataFrame =
+    ivfPqResidualIndexTopK(
+      buildDetIvfIndex(embs, idCol, vecCol, labelCol), embs, idCol,
+      vecCol, queryPred, k, nprobe, ks, shortlist)
+
+  /** [[ivfPqResidualDetTopK]] over an ALREADY-BUILT coarse index: the
+    * residual codebook and codes are trained here against the index's
+    * centroids and routing table. */
+  def ivfPqResidualIndexTopK(index: IvfIndexRelations, embs: DataFrame,
+                             idCol: String, vecCol: String,
+                             queryPred: Column, k: Int, nprobe: Int = 2,
+                             ks: Int = 16, shortlist: Int = 32)
       : DataFrame = {
-    val spark = embs.sparkSession
     val e = spread(embs).select(col(idCol).as("id"),
-      col(labelCol).cast("long").as("label"),
       col(vecCol).cast("array<double>").as("v"))
-    // the coarse quantizer is collected ONCE (maxCells-guarded index
-    // metadata, the same plane a streaming ingest broadcasts) and
-    // every downstream consumer — the cell ranking, the residual
-    // joins, the seed codebook, the encode kernel — reads the
-    // COLLECTED values as a literal relation or reference object. The
-    // first kernel cut recomputed the full n·d centroid aggregation
-    // three times (two driver collects + the final plan), which cost
-    // more at the 50k rung than the fan-out it removed. A prebuilt
-    // plane (the session-memoized [[buildDetPlane]]) skips even the
-    // one remaining aggregation+collect.
-    val pk = prebuiltPlane.getOrElse(
-      planeKernelOf(detIvfCentroids(detDims(e))
-        .select(col("label").as("cell"), col("dim"), col("ci"))))
-    require(pk.cells.nonEmpty,
-      "det-IVF over an empty corpus: no centroid cells to rank")
+    // the coarse quantizer is the index's COLLECTED plane
+    // (maxCells-guarded index metadata, the same plane a streaming
+    // ingest broadcasts) and every downstream consumer — the cell
+    // ranking, the residual joins, the seed codebook, the encode
+    // kernel — reads the COLLECTED values as a literal relation or
+    // reference object. The first kernel cut recomputed the full n·d
+    // centroid aggregation three times (two driver collects + the
+    // final plan), which cost more at the 50k rung than the fan-out it
+    // removed.
+    val pk = index.plane
     val cells = pk.cells
     val dimsN = pk.dims
     val planeFlat = pk.flat
     val ncArr = pk.nc
-    val centRel = planeRelationOf(spark, pk)
-      .select(col("cell").as("label"), col("dim"), col("ci"))
     // rename the centroid keys once: both residual joins re-key on
     // (cell, dim) and an un-renamed join side makes `dim` ambiguous
-    val cent = centRel
-      .select(col("label").as("c_cell"), col("dim").as("c_dim"),
+    val cent = index.centroids
+      .select(col("cell").as("c_cell"), col("dim").as("c_dim"),
         col("ci"))
-    // home cells + residual encode in ONE narrow map pass
-    // (HashExprs.DetIvfCellsI64 — the streaming assignCells loop as a
-    // codegen'd expression, bit-identical to the relational rank
-    // chain): the first kernel cut kept detIvfCellRanksFrom's
-    // dots-shuffle (n×nlist exploded rows through a per-id window) for
-    // home/probes, which dominated the 50k rung once the encode
-    // fan-out was gone
-    // empty-array vectors get no home/probes — detIvfCandidates' note
-    val eHome = e.filter(size(col("v")) > 0)
-      .select(col("id"), col("v"),
-        element_at(HashExprs.det_ivf_cells_i64(col("v"), cells, planeFlat,
-          ncArr, dimsN, 1), 1).as("cell"))
-    val home = eHome.select(col("id"), col("cell"))
+    // every vector's home cell from the index's routing table (empty-
+    // array vectors have none — buildDetIvfIndex's note), joined to its
+    // vector once for the residual encode below
+    val home = index.home
+    val eHome = home.join(e, "id")
     // md5-ranked seed ids; the codebook is their residuals
     val seeds = e.select(col("id"))
       .withColumn("r", md5(concat(lit("pq:"), col("id").cast("string"))))
@@ -1232,7 +1057,7 @@ object Ann {
     // seed residuals ONLY (ks vectors exploded — index metadata, not
     // corpus); per-id home cells are independent, so restricting to
     // the seed rows equals rank-all-then-filter bit-for-bit
-    val sdims = detDims(e.join(broadcast(seeds.select("id")), "id"))
+    val sdims = detPqDims(e.join(broadcast(seeds.select("id")), "id"))
       .select("id", "dim", "xi")
     val seedHome = home.join(broadcast(seeds.select("id")), "id")
     val cb = sdims.join(seedHome, "id")
@@ -1244,20 +1069,12 @@ object Ann {
     // the residual codebook is collected once (ks × dims longs, ~1 KB
     // of index metadata) and feeds BOTH kernels below as a plan
     // reference object
-    val cbRows = cb.select(col("cw"), col("dim"), col("ci")).collect()
-    require(cbRows.nonEmpty, "empty residual PQ codebook")
-    val ksActual = cbRows.iterator.map(_.getLong(0)).max.toInt
-    val cbDimsN = cbRows.iterator.map(_.getInt(1)).max + 1
+    val (ksActual, cbDimsN, cbFlat) = codebookKernelOf(cb)
     require(cbDimsN == dimsN,
       s"codebook dims $cbDimsN != centroid plane dims $dimsN")
-    val cbFlat = new Array[Long](ksActual * cbDimsN)
-    cbRows.foreach { r =>
-      cbFlat((r.getLong(0).toInt - 1) * cbDimsN + r.getInt(1)) =
-        r.getLong(2)
-    }
     // candidate codes via the codegen'd residual-encode kernel
-    // (HashExprs.PqEncodeResidI64): the SAME map pass that homed the
-    // vector computes xi − ci against its home centroid and the
+    // (HashExprs.PqEncodeResidI64): one map pass over the homed vectors
+    // computes xi − ci against the home centroid and the
     // argmin-ssd codeword per subspace — bit-identical to the
     // relational dims ⋈ home ⋈ cent → ×ks codebook join → 64M-group
     // argmin window it replaces, which was the same n×dims×ks fan-out
@@ -1282,7 +1099,7 @@ object Ann {
     // (query, cand, cell) rows are unique by construction — home holds
     // exactly one (rk = 1) cell per id and a query's probe cells are
     // rank-distinct — so a distinct here would hash/spill the whole
-    // q×n fan-out to remove nothing (detIvfCandidates' note; this was
+    // q×n fan-out to remove nothing (ivfIndexCandidates' note; this was
     // the last pair stream still paying it)
     val cnd = probes
       .join(home.select(col("id").as("cand_id"), col("cell")),
@@ -1383,23 +1200,6 @@ object Ann {
     * `ks` corpus vectors with the smallest md5("pq:" id) rank — the
     * persistable quantizer half of the PQ index (ks × dims rows of
     * longs, pure index metadata). */
-  /** [[detPqCodebook]] over a raw (id, vec) table — the public builder a
-    * registry memoizes once per (session, dir, ks) and passes back into
-    * [[pqDetTopK]] / [[ivfPqDetTopK]] as `prebuiltCodebook`. */
-  def detPqCodebookOf(embs: DataFrame, idCol: String, vecCol: String,
-                      ks: Int): DataFrame =
-    detPqCodebook(spread(embs).select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v")), ks)
-
-  /** [[detPqCodesKernel]] over a raw (id, vec) table and a codebook
-    * relation — the public per-vector-codes builder, memoizable like
-    * [[detPqCodebookOf]] (2 registered consumers encode the full
-    * corpus). */
-  def detPqCodesOf(embs: DataFrame, idCol: String, vecCol: String,
-                   cb: DataFrame): DataFrame =
-    detPqCodesKernel(spread(embs).select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v")), cb)
-
   private[graft] def detPqCodebook(e: DataFrame, ks: Int): DataFrame = {
     val seeds = e.select(col("id"))
       .withColumn("r", md5(concat(lit("pq:"), col("id").cast("string"))))
@@ -1435,16 +1235,27 @@ object Ann {
     * per-(j, cw) distances themselves, and the query panel is
     * constant-sized. */
   private def detPqCodesKernel(e: DataFrame, cb: DataFrame): DataFrame = {
-    val rows = cb.select(col("cw"), col("dim"), col("ci")).collect()
-    require(rows.nonEmpty, "empty PQ codebook")
-    val ks = rows.iterator.map(_.getLong(0)).max.toInt
-    val cbDims = rows.iterator.map(_.getInt(1)).max + 1
-    val flat = new Array[Long](ks * cbDims)
-    rows.foreach { r =>
-      flat((r.getLong(0).toInt - 1) * cbDims + r.getInt(1)) = r.getLong(2)
-    }
+    val (ks, cbDims, flat) = codebookKernelOf(cb)
     e.select(col("id"),
       HashExprs.pq_encode_i64(col("v"), flat, ks, cbDims).as("codes"))
+  }
+
+  /** Collect a (cw, dim, ci) codebook into the encode kernels' flat
+    * form: (ks, dims, row-major coordinates). Codewords are numbered
+    * 1..ks in cw order, the order of the query LUTs' entries: a seed
+    * with an EMPTY vector has no rows (the oracles' codebook joins drop
+    * it), and numbering by raw cw would leave an all-zero codeword in
+    * its slot that the encode could pick and no LUT entry matches. */
+  private def codebookKernelOf(cb: DataFrame): (Int, Int, Array[Long]) = {
+    val rows = cb.select(col("cw"), col("dim"), col("ci")).collect()
+    require(rows.nonEmpty, "empty PQ codebook")
+    val slot = rows.map(_.getLong(0)).distinct.sorted.zipWithIndex.toMap
+    val dims = rows.iterator.map(_.getInt(1)).max + 1
+    val flat = new Array[Long](slot.size * dims)
+    rows.foreach { r =>
+      flat(slot(r.getLong(0)) * dims + r.getInt(1)) = r.getLong(2)
+    }
+    (slot.size, dims, flat)
   }
 
 
@@ -1512,18 +1323,25 @@ object Ann {
 
   def pqDetTopK(embs: DataFrame, idCol: String, vecCol: String,
                 queryPred: Column, k: Int, ks: Int = 16,
-                shortlist: Int = 32,
-                prebuiltCodebook: Option[DataFrame] = None,
-                prebuiltCodes: Option[DataFrame] = None): DataFrame = {
+                shortlist: Int = 32): DataFrame = {
     val e = spread(embs).select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
-    // prebuilt = the session-memoized [[detPqCodebookOf]] /
-    // [[detPqCodesOf]] relations at the same ks — identical by
-    // construction, shared across the det-PQ consumers
-    val cb = prebuiltCodebook.getOrElse(detPqCodebook(e, ks))
-    val codesW = prebuiltCodes.getOrElse(detPqCodesKernel(e, cb))
-      .select(col("id").as("cand_id"), col("codes"))
-    val qlutW = detPqQueryLut(e.filter(queryPred), cb)
+    val cb = detPqCodebook(e, ks)
+    pqIndexTopK(cb, detPqCodesKernel(e, cb), embs, idCol, vecCol,
+      queryPred, k, shortlist)
+  }
+
+  /** Flat det-PQ serve from an ALREADY-BUILT codebook and code relation
+    * (a built IVF-PQ index's PQ half; the coarse level is unused): the
+    * query LUTs from the codebook, the ADC scan over every code row,
+    * exact rerank of the shortlist. */
+  def pqIndexTopK(codebook: DataFrame, codes: DataFrame, embs: DataFrame,
+                  idCol: String, vecCol: String, queryPred: Column,
+                  k: Int, shortlist: Int = 32): DataFrame = {
+    val e = spread(embs).select(col(idCol).as("id"),
+      col(vecCol).cast("array<double>").as("v"))
+    val codesW = codes.select(col("id").as("cand_id"), col("codes"))
+    val qlutW = detPqQueryLut(e.filter(queryPred), codebook)
     // flat PQ: every query scans every candidate's codes — as a
     // broadcast nested-loop over the tiny LUT relation, pipelined into
     // the ADC expression and the k-bounded partial agg (no shuffle ever

@@ -1,8 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{abs, col, concat, count, explode,
-  expr, lit, max, substring, sum, when}
+import org.apache.spark.sql.functions.{abs, col, concat, count, expr,
+  lit, max, substring, sum, when}
 
 import graft.core.{Lineage, Memo, Tables}
 import graft.operators.Dedup
@@ -406,7 +406,7 @@ object DedupQueries extends Registry {
     // the per-shingle join fan-out (df_train x df_eval) at any corpus
     // scale — the inverted-index join stays linear in postings.
     "dedup_contamination_pairs" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{coalesce, expr, max}
+      import org.apache.spark.sql.functions.{expr, max}
       val inv = Memo.dataFrame(s, s"shingle_idx:$d:n=5") {
         Dedup.shingleIndex(Tables.documents(s, d), "doc_id", "text", n = 5)
       }

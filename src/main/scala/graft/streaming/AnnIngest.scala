@@ -71,7 +71,6 @@ object AnnIngest {
     require(plane.nonEmpty, "empty centroid plane")
     require(k > 0 && nprobe > 0, s"bad k=$k / nprobe=$nprobe")
     import org.apache.spark.sql.functions._
-    import spark.implicits._
     // materialize the static index ONCE at topology build: a
     // stream-static join re-executes the static side every micro-batch,
     // and the home-cell derivation is a multi-stage windowed DAG —

@@ -285,7 +285,6 @@ object GenSeededTruth {
     val cellOf = rows.map { case (id, v) =>
       id -> nearestIdx(v, cents) }.toMap
     val byCell = rows.groupBy { case (id, _) => cellOf(id) }
-    val byId = rows.toMap
     rows.filter(r => queryIds(r._1)).toSeq.flatMap { case (qid, qv) =>
       val cands = nearestCells(qv, cents, nprobe = 4)
         .flatMap(c => byCell.get(c).toSeq.flatten)

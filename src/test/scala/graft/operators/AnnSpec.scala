@@ -316,34 +316,57 @@ class AnnSpec extends SparkSpec {
     }
   }
 
-  test("ivfDetTopK edge contracts: an empty corpus fails with a named " +
-       "cause, and an empty-array vector gets no home and no probes " +
-       "(the relational no-home behavior)") {
-    import spark.implicits._
-    val empty = Seq.empty[(Long, Array[Double], Long)]
-      .toDF("vec_id", "embedding", "label")
-    val e = intercept[IllegalArgumentException] {
-      Ann.ivfDetTopK(empty, "vec_id", "embedding", "label",
-        col("id") % 2 === 0, k = 3).collect()
+  /** The det-IVF edge contracts every path over the one build shares:
+    * an empty corpus fails with a named cause, and an empty-array vector
+    * gets no home and no probes (the relational no-home behavior). */
+  private def edgeContracts(path: String)(
+      topK: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : Unit =
+    test(s"$path edge contracts: an empty corpus fails with a named " +
+         "cause, and an empty-array vector gets no home and no probes " +
+         "(the relational no-home behavior)") {
+      import spark.implicits._
+      val empty = Seq.empty[(Long, Array[Double], Long)]
+        .toDF("vec_id", "embedding", "label")
+      val e = intercept[IllegalArgumentException](topK(empty).collect())
+      e.getMessage should include("empty corpus")
+      // id 0 is a QUERY with an empty vector, id 4 a CANDIDATE with one:
+      // neither may appear in the output (no probes / no home) — before
+      // the guard the kernel homed both to the smallest cell at
+      // affinity 0 where the relational chain produced no row
+      val withEmpty = Seq(
+        (0L, Array.empty[Double], 0L),
+        (1L, Array(1.0, 0.1), 0L),
+        (2L, Array(0.9, 0.2), 0L),
+        (3L, Array(-1.0, 0.4), 1L),
+        (4L, Array.empty[Double], 1L),
+        (6L, Array(-0.8, 0.3), 1L))
+        .toDF("vec_id", "embedding", "label")
+      val rows = topK(withEmpty).collect()
+      rows.map(_.getLong(0)).toSet should not contain 0L
+      rows.map(_.getLong(2)).toSet should not contain 4L
+      assert(rows.nonEmpty) // ids 2/6 still query their non-empty cells
     }
-    e.getMessage should include("empty corpus")
-    // id 0 is a QUERY with an empty vector, id 4 a CANDIDATE with one:
-    // neither may appear in the output (no probes / no home) — before
-    // the guard the kernel homed both to the smallest cell at
-    // affinity 0 where the relational chain produced no row
-    val withEmpty = Seq(
-      (0L, Array.empty[Double], 0L),
-      (1L, Array(1.0, 0.1), 0L),
-      (2L, Array(0.9, 0.2), 0L),
-      (3L, Array(-1.0, 0.4), 1L),
-      (4L, Array.empty[Double], 1L),
-      (6L, Array(-0.8, 0.3), 1L))
-      .toDF("vec_id", "embedding", "label")
-    val rows = Ann.ivfDetTopK(withEmpty, "vec_id", "embedding", "label",
-      col("id") % 2 === 0, k = 3).collect()
-    rows.map(_.getLong(0)).toSet should not contain 0L
-    rows.map(_.getLong(2)).toSet should not contain 4L
-    assert(rows.nonEmpty) // ids 2/6 still query their non-empty cells
+
+  private val evenIds = col("id") % 2 === 0
+
+  edgeContracts("ivfDetTopK")(c => Ann.ivfDetTopK(c, "vec_id", "embedding",
+    "label", evenIds, k = 3))
+
+  edgeContracts("ivfPqDetTopK")(c => Ann.ivfPqDetTopK(c, "vec_id",
+    "embedding", "label", evenIds, k = 3))
+
+  edgeContracts("ivfPqResidualDetTopK")(c => Ann.ivfPqResidualDetTopK(c,
+    "vec_id", "embedding", "label", evenIds, k = 3))
+
+  edgeContracts("persisted-then-loaded ivfIndexTopK") { c =>
+    val store = graft.sources.VersionedStore(
+      java.nio.file.Files.createTempDirectory("ann_edge").toString)
+    val ivf = graft.sources.AnnIndexStore.Ivf
+    ivf.persist(spark, store, "edge",
+      Ann.buildDetIvfIndex(c, "vec_id", "embedding", "label"))
+    Ann.ivfIndexTopK(ivf.load(spark, store, "edge"), c, "vec_id",
+      "embedding", evenIds, k = 3)
   }
 
   test("autoSubcellsExact: smallest power of two s with (labels*s)^2 " +

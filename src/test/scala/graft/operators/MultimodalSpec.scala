@@ -504,7 +504,6 @@ class MultimodalSpec extends SparkSpec {
 
   test("colorStats: per-channel sums over a non-gray corpus match the " +
       "generation ramps end-to-end; non-image rows are excluded") {
-    import spark.implicits._
     val docs = Tables.documents(spark, sfDir).limit(60)
     val m = Multimodal.asMedia(
       Multimodal.mediaFromDocuments(docs, imageFormat = "png_rgb"))

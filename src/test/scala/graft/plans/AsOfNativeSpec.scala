@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec

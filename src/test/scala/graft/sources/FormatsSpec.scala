@@ -2,8 +2,6 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 import graft.core.Tables
 

@@ -116,7 +116,7 @@ class LocalFsSpec extends SparkSpec {
       val errors = Seq.newBuilder[String]
       def rename(a: String, b: String, opts: Options.Rename*): Unit =
         try fc.rename(new Path(dir, a), new Path(dir, b), opts: _*)
-        catch { case e: FileAlreadyExistsException => errors += s"$a->$b exists" }
+        catch { case _: FileAlreadyExistsException => errors += s"$a->$b exists" }
       put("a", "one")
       put("b", "two")
       put("c", "three")

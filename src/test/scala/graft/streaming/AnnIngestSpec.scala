@@ -21,7 +21,8 @@ class AnnIngestSpec extends SparkSpec {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val embs = Tables.embeddings(spark, sfDir)
-    val plane = Ann.detIvfCentroidPlane(embs, "embedding", "label")
+    val plane = Ann.detIvfCentroidPlaneOf(
+      Ann.buildDetIvfIndex(embs, "vec_id", "embedding", "label").centroids)
     assert(plane.length > 1, "expected a multi-cell plane")
     val batch = Ann.ivfDetHomeCells(embs, "vec_id", "embedding", "label")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -51,7 +52,8 @@ class AnnIngestSpec extends SparkSpec {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val embs = Tables.embeddings(spark, sfDir)
-    val plane = Ann.detIvfCentroidPlane(embs, "embedding", "label")
+    val plane = Ann.detIvfCentroidPlaneOf(
+      Ann.buildDetIvfIndex(embs, "vec_id", "embedding", "label").centroids)
     val batch = Ann.ivfDetTopK(embs, "vec_id", "embedding", "label",
         col("id") % 50 === 0, k = 5, nprobe = 2)
       .collect()
@@ -217,7 +219,8 @@ class AnnIngestSpec extends SparkSpec {
     val ckpt = root.resolve("ckpt").toString
 
     val embs = Tables.embeddings(spark, sfDir)
-    val plane = Ann.detIvfCentroidPlane(embs, "embedding", "label")
+    val plane = Ann.detIvfCentroidPlaneOf(
+      Ann.buildDetIvfIndex(embs, "vec_id", "embedding", "label").centroids)
     val batch = Ann.ivfDetHomeCells(embs, "vec_id", "embedding", "label")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val rows = embs.select("vec_id", "embedding")

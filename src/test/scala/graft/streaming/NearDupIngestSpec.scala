@@ -159,7 +159,6 @@ class NearDupIngestSpec extends SparkSpec {
 
   test("full topology over sf docs: gates + exact dedup + maintained " +
       "band index; accepted docs are collision-free in the final index") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val docs = graft.core.Tables.documents(spark, sfDir)
