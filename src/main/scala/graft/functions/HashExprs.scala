@@ -431,12 +431,13 @@ object HashExprs {
     * order — the integer affinity ranking bp = floor(10⁴·dot/(√nv·√nc))
     * with ties to the smallest cell and the zero-norm guard (bp = 0),
     * bit-identical to the relational rank chain the det-IVF oracles
-    * replay (dims ⋈ centroids → dots → window) AND to
-    * the streaming assignment (AnnIngest.assignCells — this is that
-    * loop as a codegen'd expression). `cells` ascending (the scan
-    * order IS the tie rule: a strictly-greater compare keeps the
-    * earlier = smaller cell on equal affinity); `plane` row-major with
-    * stride `dims`; `nc` the precomputed Σci² per cell. */
+    * replay (dims ⋈ centroids → dots → window). The one det-IVF cell
+    * ranking: index builds, batch serves and the streaming assignment
+    * and probe (AnnIngest) all call it via Ann.kernelCells. `cells`
+    * ascending (the scan order IS the tie rule: a strictly-greater
+    * compare keeps the earlier = smaller cell on equal affinity);
+    * `plane` row-major with stride `dims`; `nc` the precomputed Σci²
+    * per cell. */
   def detIvfCellsKernel(arr: ArrayData, cells: Array[Long],
                         plane: Array[Long], nc: Array[Long], dims: Int,
                         nprobe: Int): ArrayData = {

@@ -551,7 +551,7 @@ object Ann {
     * oracle recomputes the SAME s from the same counts, the
     * [[autoBitsExact]] pattern. At real scale pass an approximate
     * count (table stats) rather than running an exact count job; cap
-    * via `maxSub` (with the [[detIvfCentroidPlaneOf]] maxCells guard
+    * via `maxSub` (with the [[planeKernelOf]] maxCells guard
     * as the downstream backstop). */
   def autoSubcellsExact(n: Long, labels: Long, maxSub: Int = 1024): Int = {
     require(n > 0 && labels > 0, "need positive counts")
@@ -666,12 +666,16 @@ object Ann {
     * a persisted version cheap to store and re-serve (a 100 TB corpus's
     * IVF metadata is GBs, not TBs). Lifecycle glue (versioned persist /
     * load / streaming fold) lives in
-    * [[graft.sources.AnnIndexStore]]. */
+    * [[graft.sources.AnnIndexStore]]. `collected` is the plane a build
+    * already holds; `copy` keeps it. */
   final case class IvfIndexRelations(centroids: DataFrame,
-                                     home: DataFrame) {
-    /** [[centroids]] collected into the ranking kernel once per index
-      * value, so every serve of one memoized index shares the collect. */
-    private[operators] lazy val plane: PlaneKernel = planeKernelOf(centroids)
+                                     home: DataFrame,
+                                     collected: Option[PlaneKernel] = None) {
+    /** The ranking kernel's plane: the build's, or [[centroids]]
+      * collected once per LOADED index value, so every serve and stream
+      * of one index shares one collect. */
+    private[graft] lazy val plane: PlaneKernel =
+      collected.getOrElse(planeKernelOf(centroids))
   }
 
   /** Build the det-IVF index relations once — the offline "train +
@@ -689,12 +693,11 @@ object Ann {
     val e = detRefineLabels(spread(embs).select(col(idCol).as("id"),
       col(labelCol).cast("long").as("label"),
       col(vecCol).cast("array<double>").as("v")), subcells)
-    // map-side cell ranking (HashExprs.DetIvfCellsI64 — the streaming
-    // assignCells loop as a codegen'd expression, bit-identical to the
-    // relational rank chain the oracles replay): the coarse quantizer is
-    // collected once (maxCells-guarded index metadata) and home cells
-    // are one narrow map pass — no n×nlist exploded dots shuffle or
-    // per-id rank window
+    // map-side cell ranking (HashExprs.DetIvfCellsI64 — the one det-IVF
+    // cell ranking, bit-identical to the relational rank chain the
+    // oracles replay): the coarse quantizer is collected once
+    // (maxCells-guarded index metadata) and home cells are one narrow
+    // map pass — no n×nlist exploded dots shuffle or per-id rank window
     val pk = planeKernelOf(detIvfCentroids(detDims(e))
       .select(col("label").as("cell"), col("dim"), col("ci")))
     // EMPTY-array vectors get no home (and, at serve, no probes) — the
@@ -710,7 +713,7 @@ object Ann {
       .select(col("id"),
         element_at(kernelCells(pk, col("v"), 1), 1).as("cell"))
       .distinct()
-    IvfIndexRelations(planeRelationOf(e.sparkSession, pk), home)
+    IvfIndexRelations(planeRelationOf(e.sparkSession, pk), home, Some(pk))
   }
 
   /** Serve top-k from an ALREADY-BUILT index — the load-and-serve step:
@@ -756,18 +759,9 @@ object Ann {
   def ivfIndexCandidates(index: IvfIndexRelations, embs: DataFrame,
                          idCol: String, vecCol: String,
                          queryPred: Column, nprobe: Int): DataFrame = {
-    val e = spread(embs).select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v"))
-    // spread the tiny probe relation BEFORE the candidate join: AQE
-    // coalesces it to one partition (4k rows), and when the routing
-    // table is small enough to broadcast, probes become the STREAM
-    // side — so probe partitioning alone decides the fan-out's
-    // parallelism (the 2M deep rung ran the whole q×n pair stream on
-    // one core until this)
-    val probes = e.filter(queryPred && size(col("v")) > 0)
+    val probes = queryPanel(embs, idCol, vecCol, queryPred)
       .select(col("id").as("query_id"),
         explode(kernelCells(index.plane, col("v"), nprobe)).as("cell"))
-      .repartition(e.sparkSession.sparkContext.defaultParallelism)
     // candidate-join parallelism must come from the PLAN, not the file
     // layout: the routing table compresses to very few parquet files
     // (16 bytes/row), and the broadcast probe join fans each home row
@@ -778,18 +772,38 @@ object Ann {
     // cost is one linear shuffle of (id, cell) rows.
     val home = index.home
       .select(col("id").as("cand_id"), col("cell"))
-      .repartition(e.sparkSession.sparkContext.defaultParallelism)
+      .repartition(embs.sparkSession.sparkContext.defaultParallelism)
     // NO distinct over the q×n pair stream: pairs are unique by
     // construction — home holds exactly one (rk = 1) cell per id
-    // (builds and chain reads keep one row per id) and a query's probe
-    // cells are distinct (rank-filtered) — so a distinct here would
-    // hash/spill the whole fan-out (1.6B rows at the 2M deep rung) to
-    // remove nothing. The pair stream stays PIPELINED from the join
-    // into the k-bounded partial agg.
+    // (builds and chain reads keep one row per id), the query panel one
+    // row per query, and a query's probe cells are distinct
+    // (rank-filtered) — so a distinct here would hash/spill the whole
+    // fan-out (1.6B rows at the 2M deep rung) to remove nothing. The
+    // pair stream stays PIPELINED from the join into the k-bounded
+    // partial agg.
     probes.join(home, "cell")
       .filter(col("query_id") =!= col("cand_id"))
       .select("query_id", "cand_id")
   }
+
+  /** The query side of the det-PQ serves: the non-empty `queryPred`
+    * rows as (id, v), one row per id — the oracles probe and build LUTs
+    * per distinct query id, so a query row repeated in the corpus must
+    * not repeat its candidate pairs. The id-hashed repartition is the
+    * panel's one shuffle: it spreads the tiny panel over every core
+    * (AQE would coalesce an unsized shuffle to one partition, and when
+    * the routing table is small enough to broadcast, probes are the
+    * STREAM side of the candidate fan-out — the 2M deep rung ran the
+    * whole q×n pair stream on one core until the panel was spread), and
+    * the distinct after it reuses that partitioning. */
+  private def queryPanel(embs: DataFrame, idCol: String, vecCol: String,
+                         queryPred: Column): DataFrame =
+    embs.select(col(idCol).as("id"),
+        col(vecCol).cast("array<double>").as("v"))
+      .filter(queryPred && size(col("v")) > 0)
+      .repartition(embs.sparkSession.sparkContext.defaultParallelism,
+        col("id"))
+      .distinct()
 
   /** The det IVF-PQ index as its FOUR persistable relations — the
     * complete FAISS IVFPQ serialization: coarse quantizer + routing
@@ -797,14 +811,9 @@ object Ann {
     * ci) and the per-vector code words (id, codes). Codes are the
     * memory-bound payload a PQ index exists to shrink: 8 longs per
     * vector here versus 64 floats of raw data. */
-  final case class IvfPqIndexRelations(centroids: DataFrame,
-                                       home: DataFrame,
+  final case class IvfPqIndexRelations(ivf: IvfIndexRelations,
                                        codebook: DataFrame,
-                                       codes: DataFrame) {
-    /** The coarse level as one index value (and one plane collect). */
-    private[operators] lazy val ivf: IvfIndexRelations =
-      IvfIndexRelations(centroids, home)
-  }
+                                       codes: DataFrame)
 
   /** Build the det IVF-PQ index relations once (train + encode + add):
     * [[buildDetIvfIndex]]'s coarse level plus [[addDetPq]]'s PQ half.
@@ -828,8 +837,7 @@ object Ann {
     // reader (query LUTs, persist) reads those blocks instead of
     // re-ranking the corpus by md5
     val cb = Lineage.cut(detPqCodebook(e, ks))
-    IvfPqIndexRelations(ivf.centroids, ivf.home, cb,
-      detPqCodesKernel(e, cb))
+    IvfPqIndexRelations(ivf, cb, detPqCodesKernel(e, cb))
   }
 
   /** Serve IVF-PQ top-k from an ALREADY-BUILT index: probe cells and
@@ -849,7 +857,8 @@ object Ann {
       col(vecCol).cast("array<double>").as("v"))
     val cand = ivfIndexCandidates(index.ivf, embs, idCol, vecCol,
       queryPred, nprobe)
-    val qlutW = detPqQueryLut(e.filter(queryPred), index.codebook)
+    val qlutW = detPqQueryLut(queryPanel(embs, idCol, vecCol, queryPred),
+      index.codebook)
     // ADC only over IVF-probed candidates: the pair relation carries
     // 8-codeword rows (codes join) + the broadcast per-query LUT, and
     // the shortlist partial agg bounds the shuffle — ADC must never be
@@ -875,61 +884,44 @@ object Ann {
       .select(col("id").as(idCol), col("cell"))
       .orderBy(idCol)
 
-  /** One cell of the collected det-IVF coarse quantizer: integer
-    * micro-unit centroid coordinates (dense by dim) + the precomputed
-    * centroid norm Σci². */
-  final case class CentroidCell(cell: Long, ci: Array[Long], nc: Long)
+  /** The collected det-IVF coarse quantizer in the flat form the
+    * [[graft.functions.HashExprs.DetIvfCellsI64]] kernel consumes —
+    * cells in ascending order, integer micro-unit centroid coordinates
+    * dense by dim, the precomputed Σci² norms. */
+  final case class PlaneKernel(cells: Array[Long],
+                               flat: Array[Long],
+                               nc: Array[Long], dims: Int)
 
-  /** Collect a centroid RELATION (cell, dim, ci) — freshly built or
-    * LOADED from a persisted index version — into the broadcastable
-    * plane. The path a long-running ingest takes: load the versioned
-    * quantizer once, collect it here, ship it to every executor;
-    * arriving vectors never trigger a rebuild. Cells × dims is index
-    * metadata, not corpus data (a 4096-cell × 1024-dim plane is ~32 MB
-    * of longs); `maxCells` is the hard cap that keeps the collect
-    * bounded no matter what label column the index was built over. */
-  def detIvfCentroidPlaneOf(cent: DataFrame,
-                            maxCells: Int = 65536): Array[CentroidCell] = {
+  /** Collect a centroid RELATION (cell, dim, ci) — freshly aggregated
+    * or LOADED from a persisted index version — into the plane every
+    * consumer ranks against: one collect, map-side ranking everywhere,
+    * batch and streaming alike; arriving vectors never trigger a
+    * rebuild. Cells × dims is index metadata, not corpus data (a
+    * 4096-cell × 1024-dim plane is ~32 MB of longs); `maxCells` is the
+    * hard cap that keeps the collect bounded no matter what label
+    * column the index was built over. */
+  private def planeKernelOf(cent: DataFrame,
+                            maxCells: Int = 65536): PlaneKernel = {
     val rows = cent.groupBy("cell")
       .agg(sort_array(collect_list(struct(col("dim"), col("ci"))))
         .as("cs"))
       .limit(maxCells + 1)
       .collect()
+      .sortBy(_.getLong(0))
     require(rows.length <= maxCells,
       s"centroid plane exceeds maxCells=$maxCells — not a coarse " +
         "quantizer; pick a coarser label column or raise the cap " +
         "deliberately")
-    rows.map { r =>
-      val cis = r.getSeq[org.apache.spark.sql.Row](1)
-        .map(_.getLong(1)).toArray
-      var nc = 0L
-      var i = 0
-      while (i < cis.length) { nc += cis(i) * cis(i); i += 1 }
-      CentroidCell(r.getLong(0), cis, nc)
-    }.sortBy(_.cell)
-  }
-
-  /** The collected det-IVF coarse quantizer in the flat form the
-    * [[graft.functions.HashExprs.DetIvfCellsI64]] kernel consumes —
-    * cells in ascending order, centroid coordinates dense by dim, the
-    * precomputed Σci² norms. Built once per index value from a
-    * centroid RELATION (freshly aggregated or LOADED from a persisted
-    * index version) and fanned to every consumer: one collect, map-side
-    * ranking everywhere. */
-  final case class PlaneKernel(cells: Array[Long],
-                               flat: Array[Long],
-                               nc: Array[Long], dims: Int)
-
-  private def planeKernelOf(cent: DataFrame,
-                            maxCells: Int = 65536): PlaneKernel = {
-    val plane = detIvfCentroidPlaneOf(cent, maxCells)
-    require(plane.nonEmpty,
+    require(rows.nonEmpty,
       "det-IVF over an empty corpus: no centroid cells to rank")
-    val dimsN = plane.head.ci.length
-    val flat = new Array[Long](plane.length * dimsN)
-    plane.zipWithIndex.foreach { case (c, i) =>
-      System.arraycopy(c.ci, 0, flat, i * dimsN, dimsN) }
-    PlaneKernel(plane.map(_.cell), flat, plane.map(_.nc), dimsN)
+    val cis = rows.map(_.getSeq[org.apache.spark.sql.Row](1)
+      .map(_.getLong(1)).toArray)
+    val dimsN = cis.head.length
+    val flat = new Array[Long](cis.length * dimsN)
+    cis.zipWithIndex.foreach { case (ci, i) =>
+      System.arraycopy(ci, 0, flat, i * dimsN, dimsN) }
+    PlaneKernel(rows.map(_.getLong(0)), flat,
+      cis.map(_.foldLeft(0L)((nc, x) => nc + x * x)), dimsN)
   }
 
   /** The collected plane back as its (cell, dim, ci) relation — what a
@@ -946,8 +938,11 @@ object Ann {
     }.toSeq.toDF("cell", "dim", "ci")
   }
 
-  private def kernelCells(pk: PlaneKernel, v: Column,
-                          nprobe: Int): Column =
+  /** The `nprobe` best cells of vector `v` in rank order — the one
+    * det-IVF cell ranking: index builds, batch serves and the streaming
+    * ingest and probe ([[graft.streaming.AnnIngest]]) all call it. */
+  private[graft] def kernelCells(pk: PlaneKernel, v: Column,
+                                 nprobe: Int): Column =
     HashExprs.det_ivf_cells_i64(v, pk.cells, pk.flat, pk.nc, pk.dims,
       nprobe)
 
@@ -1033,10 +1028,6 @@ object Ann {
     // final plan), which cost more at the 50k rung than the fan-out it
     // removed.
     val pk = index.plane
-    val cells = pk.cells
-    val dimsN = pk.dims
-    val planeFlat = pk.flat
-    val ncArr = pk.nc
     // rename the centroid keys once: both residual joins re-key on
     // (cell, dim) and an un-renamed join side makes `dim` ambiguous
     val cent = index.centroids
@@ -1070,8 +1061,8 @@ object Ann {
     // of index metadata) and feeds BOTH kernels below as a plan
     // reference object
     val (ksActual, cbDimsN, cbFlat) = codebookKernelOf(cb)
-    require(cbDimsN == dimsN,
-      s"codebook dims $cbDimsN != centroid plane dims $dimsN")
+    require(cbDimsN == pk.dims,
+      s"codebook dims $cbDimsN != centroid plane dims ${pk.dims}")
     // candidate codes via the codegen'd residual-encode kernel
     // (HashExprs.PqEncodeResidI64): one map pass over the homed vectors
     // computes xi − ci against the home centroid and the
@@ -1079,21 +1070,23 @@ object Ann {
     // relational dims ⋈ home ⋈ cent → ×ks codebook join → 64M-group
     // argmin window it replaces, which was the same n×dims×ks fan-out
     // the plain-PQ kernel (detPqCodesKernel) killed in r13
+    // One row per id (detPqCodesKernel's note), deduped by id so the
+    // dedupe's shuffle is the candidate join's own
     val codesW = eHome.select(col("id").as("cand_id"),
-      HashExprs.pq_encode_resid_i64(col("v"), col("cell"), cells,
-        planeFlat, cbFlat, ksActual, cbDimsN).as("codes"))
+      HashExprs.pq_encode_resid_i64(col("v"), col("cell"), pk.cells,
+        pk.flat, cbFlat, ksActual, cbDimsN).as("codes"))
+      .dropDuplicates("cand_id")
     // probe cells AND the per-(query, probed cell) residual ADC LUTs
     // map-side from the same kernels over the query panel only
     // (HashExprs.PqLutResidI64 — the relational qrd ⋈ codebook →
     // double-groupBy chain as one expression per probe row)
-    val probesV = e.filter(queryPred && size(col("v")) > 0)
+    val probesV = queryPanel(embs, idCol, vecCol, queryPred)
       .select(col("id").as("query_id"), col("v"),
-        explode(HashExprs.det_ivf_cells_i64(col("v"), cells, planeFlat,
-          ncArr, dimsN, nprobe)).as("pcell"))
+        explode(kernelCells(pk, col("v"), nprobe)).as("pcell"))
     val probes = probesV.select("query_id", "pcell")
     val qlutW = probesV.select(col("query_id"), col("pcell"),
-      HashExprs.pq_lut_resid_i64(col("v"), col("pcell"), cells,
-        planeFlat, cbFlat, ksActual, cbDimsN).as("lut"))
+      HashExprs.pq_lut_resid_i64(col("v"), col("pcell"), pk.cells,
+        pk.flat, cbFlat, ksActual, cbDimsN).as("lut"))
     // candidates keyed by the home cell that reached them, so ADC uses
     // the matching per-cell LUT. NO distinct over the pair stream:
     // (query, cand, cell) rows are unique by construction — home holds
@@ -1236,8 +1229,12 @@ object Ann {
     * constant-sized. */
   private def detPqCodesKernel(e: DataFrame, cb: DataFrame): DataFrame = {
     val (ks, cbDims, flat) = codebookKernelOf(cb)
+    // one code row per id, as the routing table keeps one home row
+    // (buildDetIvfIndex's note): a corpus row repeated under one id
+    // would otherwise seat that candidate in several shortlist slots
     e.select(col("id"),
       HashExprs.pq_encode_i64(col("v"), flat, ks, cbDims).as("codes"))
+      .distinct()
   }
 
   /** Collect a (cw, dim, ci) codebook into the encode kernels' flat
@@ -1341,7 +1338,8 @@ object Ann {
     val e = spread(embs).select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
     val codesW = codes.select(col("id").as("cand_id"), col("codes"))
-    val qlutW = detPqQueryLut(e.filter(queryPred), codebook)
+    val qlutW = detPqQueryLut(queryPanel(embs, idCol, vecCol, queryPred),
+      codebook)
     // flat PQ: every query scans every candidate's codes — as a
     // broadcast nested-loop over the tiny LUT relation, pipelined into
     // the ADC expression and the k-bounded partial agg (no shuffle ever

@@ -139,7 +139,7 @@ object AnnQueries extends Registry {
       Sq8.prune(s, store, "sq8", keep = 3)
       Ivf.persistVersion(store, "ivf_pinned", PinnedVersion, built)
       Ivf.persistVersion(store, "ivf_pinned", PinnedVersion + 1,
-        Ann.IvfIndexRelations(built.centroids, built.home.limit(0)))
+        built.copy(home = built.home.limit(0)))
       (0L until 3L).foreach { b =>
         Ivf.foldBatchDelta(store, "ivf_delta", -1L, built.centroids)(
           built.home.filter(col("id") % 3 === b)
@@ -150,13 +150,13 @@ object AnnQueries extends Registry {
       // the two COMPRESSED families — per-vector relations (routing
       // rows, code words) land as O(batch) deltas, the static quantizer
       // halves ride along as completeness markers
-      val pqBatch = builtPq.home
+      val pqBatch = builtPq.ivf.home
         .join(builtPq.codes.withColumnRenamed("id", "cid"),
           col("id") === col("cid"))
         .select(col("id").as("vec_id"), col("cell"), col("codes"))
       (0L until 3L).foreach { b =>
         Pq.foldBatchDelta(store, "ivfpq_delta", -1L, builtPq.codebook,
-          builtPq.centroids)(
+          builtPq.ivf.centroids)(
           pqBatch.filter(col("vec_id") % 3 === b), b)
       }
       Pq.compact(s, store, "ivfpq_delta", upTo = 1L)

@@ -265,9 +265,10 @@ object AnnIndexStore {
   val Pq = new Family[IvfPqIndexRelations](
     Seq("home" -> "cell", "pqcodes" -> "codes"),
     Seq("codebook", "centroids"),
-    r => Seq(r.home, r.codes, r.codebook, r.centroids),
+    r => Seq(r.ivf.home, r.codes, r.codebook, r.ivf.centroids),
     { case Seq(home, codes, codebook, centroids) =>
-      IvfPqIndexRelations(centroids, home, codebook, codes) })
+      IvfPqIndexRelations(IvfIndexRelations(centroids, home), codebook,
+        codes) })
 
   /** SQ8: byte codes per vector; the trained `ranges` quantizer. */
   val Sq8 = new Family[Sq8IndexRelations](

@@ -1,9 +1,13 @@
 package graft.operators
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.core.Tables
+import graft.core.{Lineage, Tables}
 
 /** ANN recall against the brute-force baseline on sf0.001 embeddings
   * (500 vectors, dim 64; 10 query vectors). */
@@ -367,6 +371,34 @@ class AnnSpec extends SparkSpec {
       Ann.buildDetIvfIndex(c, "vec_id", "embedding", "label"))
     Ann.ivfIndexTopK(ivf.load(spark, store, "edge"), c, "vec_id",
       "embedding", evenIds, k = 3)
+  }
+
+  test("serving a built det index submits no Spark job at construction, " +
+      "through a cut routing table and under an added PQ half: the " +
+      "index value carries the plane its build collected") {
+    val built = Ann.buildDetIvfIndex(embs, "vec_id", "embedding", "label")
+    val cut = built.copy(home = Lineage.cut(built.home))
+    val pq = Ann.addDetPq(built, embs, "vec_id", "embedding")
+    val q = col("id") % 50 === 0
+    val serves = Seq[() => org.apache.spark.sql.DataFrame](
+      () => Ann.ivfIndexTopK(built, embs, "vec_id", "embedding", q, k = 5),
+      () => Ann.ivfIndexTopK(cut, embs, "vec_id", "embedding", q, k = 5),
+      () => Ann.ivfPqIndexTopK(pq, embs, "vec_id", "embedding", q, k = 5))
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    BusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val perServe =
+      try serves.map { serve =>
+        jobs.set(0)
+        serve()
+        BusDrain(spark.sparkContext)
+        jobs.get()
+      } finally spark.sparkContext.removeSparkListener(listener)
+    perServe shouldBe Seq(0, 0, 0)
   }
 
   test("autoSubcellsExact: smallest power of two s with (labels*s)^2 " +

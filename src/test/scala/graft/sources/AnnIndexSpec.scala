@@ -195,22 +195,22 @@ class AnnIndexSpec extends SparkSpec {
     val store = tmpStore("pqdelta")
     val built = Ann.buildDetIvfPqIndex(embs, "vec_id", "embedding",
       "label")
-    val full = built.home
+    val full = built.ivf.home
       .join(built.codes.withColumnRenamed("id", "cid"),
         col("id") === col("cid"))
       .select(col("id").as("vec_id"), col("cell"), col("codes"))
       .localCheckpoint(true)
     def batch(b: Long) = full.filter(col("vec_id") % 3 === b)
     def view(r: Ann.IvfPqIndexRelations) =
-      (r.home.collect().map(x => x.getLong(0) -> x.getLong(1)).toSet,
+      (r.ivf.home.collect().map(x => x.getLong(0) -> x.getLong(1)).toSet,
        r.codes.collect()
          .map(x => x.getLong(0) -> x.getSeq[Long](1).toList).toSet)
     // the same three "triggers" fed to both maintenance modes
     (0L until 3L).foreach { b =>
-      Pq.foldBatch(store, "snap", -1L, built.codebook, built.centroids)(
-        batch(b), b)
+      Pq.foldBatch(store, "snap", -1L, built.codebook,
+        built.ivf.centroids)(batch(b), b)
       Pq.foldBatchDelta(store, "dlt", -1L, built.codebook,
-        built.centroids)(batch(b), b)
+        built.ivf.centroids)(batch(b), b)
     }
     (0L until 3L).foreach { v =>
       view(Pq.loadDeltaChain(spark, store, "dlt", v)) shouldBe
@@ -237,9 +237,9 @@ class AnnIndexSpec extends SparkSpec {
 
   private def loadPqVersion(store: VersionedStore, name: String,
                             v: Long): Ann.IvfPqIndexRelations =
-    Ann.IvfPqIndexRelations(
-      store.getVersion(spark, s"${name}_centroids", v),
-      store.getVersion(spark, s"${name}_home", v),
+    Ann.IvfPqIndexRelations(Ann.IvfIndexRelations(
+        store.getVersion(spark, s"${name}_centroids", v),
+        store.getVersion(spark, s"${name}_home", v)),
       store.getVersion(spark, s"${name}_codebook", v),
       store.getVersion(spark, s"${name}_pqcodes", v))
 
@@ -288,7 +288,7 @@ class AnnIndexSpec extends SparkSpec {
     * over the so-far-ingested rows serves (`restricted`). */
   private def compactingIngest[R](family: AnnIndexStore.Family[R],
       name: String, chains: Seq[String], compactEvery: Int,
-      start: (Dataset[AnnIngest.VecIn], Array[Ann.CentroidCell],
+      start: (Dataset[AnnIngest.VecIn], Ann.IvfIndexRelations,
         VersionedStore, String) => StreamingQuery,
       restricted: Set[Long] => R, serve: R => Seq[(Long, Long, Long, Long)],
       inline: Seq[(Long, Long, Long, Long)]): Unit = {
@@ -296,8 +296,7 @@ class AnnIndexSpec extends SparkSpec {
     import spark.implicits._
     val embs = Tables.embeddings(spark, sfDir)
     val store = tmpStore(name)
-    val plane = Ann.detIvfCentroidPlaneOf(
-      Ann.buildDetIvfIndex(embs, "vec_id", "embedding", "label").centroids)
+    val index = Ann.buildDetIvfIndex(embs, "vec_id", "embedding", "label")
     val rows = embs.select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect()
     val parts = rows.grouped(rows.length / 5 + 1).toSeq // 5 triggers
@@ -308,7 +307,7 @@ class AnnIndexSpec extends SparkSpec {
       DeltaChain.readParts(spark, store, base, delta, vs.last).length
     }
     val in = MemoryStream[AnnIngest.VecIn]
-    val q = start(in.toDS(), plane, store,
+    val q = start(in.toDS(), index, store,
       java.nio.file.Files.createTempDirectory(s"ann_${name}_ck").toString)
     try {
       var off = 0
@@ -342,9 +341,8 @@ class AnnIndexSpec extends SparkSpec {
     val built = Ann.buildDetIvfIndex(embs, "vec_id", "embedding", "label")
     compactingIngest[Ann.IvfIndexRelations](Ivf, "ivfc", Seq("home"),
       compactEvery = 2,
-      (vecs, plane, store, ckpt) => AnnIngest.startFoldDelta(vecs, plane,
-        store, "ivfc", built.centroids, ckpt, lateness = "10 minutes",
-        compactEvery = 2),
+      (vecs, index, store, ckpt) => AnnIngest.startFoldDelta(vecs, index,
+        store, "ivfc", ckpt, lateness = "10 minutes", compactEvery = 2),
       ids => Ann.IvfIndexRelations(built.centroids,
         built.home.filter(col("id").isInCollection(ids))),
       r => topkRows(Ann.ivfIndexTopK(r, embs, "vec_id", "embedding", probe,
@@ -359,9 +357,9 @@ class AnnIndexSpec extends SparkSpec {
     * up the family's precomputed per-vector `rows`. */
   private def foldStream[R](family: AnnIndexStore.Family[R], name: String,
       rows: DataFrame, quantizer: Seq[DataFrame], compactEvery: Int)(
-      vecs: Dataset[AnnIngest.VecIn], plane: Array[Ann.CentroidCell],
+      vecs: Dataset[AnnIngest.VecIn], index: Ann.IvfIndexRelations,
       store: VersionedStore, ckpt: String): StreamingQuery =
-    AnnIngest.assignCells(vecs, plane, lateness = "10 minutes")(spark)
+    AnnIngest.assignCells(vecs, index, lateness = "10 minutes")(spark)
       .toDF().writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -377,17 +375,18 @@ class AnnIndexSpec extends SparkSpec {
     val embs = Tables.embeddings(spark, sfDir)
     val built = Ann.buildDetIvfPqIndex(embs, "vec_id", "embedding",
       "label")
-    val rows = built.home
+    val rows = built.ivf.home
       .join(built.codes.withColumnRenamed("id", "cid"),
         col("id") === col("cid"))
       .select(col("id").as("vec_id"), col("cell"), col("codes"))
       .localCheckpoint(true)
-    val q = Seq(built.codebook, built.centroids)
+    val q = Seq(built.codebook, built.ivf.centroids)
     compactingIngest[Ann.IvfPqIndexRelations](Pq, "pqc",
       Seq("home", "pqcodes"), compactEvery = 2,
       foldStream(Pq, "pqc", rows, q, compactEvery = 2),
       ids => built.copy(
-        home = built.home.filter(col("id").isInCollection(ids)),
+        ivf = built.ivf.copy(
+          home = built.ivf.home.filter(col("id").isInCollection(ids))),
         codes = built.codes.filter(col("id").isInCollection(ids))),
       r => topkRows(Ann.ivfPqIndexTopK(r, embs, "vec_id", "embedding",
         probe, k = 5)),
@@ -489,7 +488,8 @@ class AnnIndexSpec extends SparkSpec {
     Pq.foldBatch(store, "spq", -1L, cb, cent)(
       pqBatch((1L, 3L, Seq(2L, 1L))), 1L)
     val spq = Pq.load(spark, store, "spq")
-    val spqHome = spq.home.collect().map(r => r.getLong(0) -> r.getLong(1))
+    val spqHome = spq.ivf.home.collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
     spqHome.length shouldBe 2
     spqHome.toMap.apply(1L) shouldBe 3L
     val spqCodes = spq.codes.collect()
@@ -581,7 +581,7 @@ class AnnIndexSpec extends SparkSpec {
         Seq("home", "pqcodes", "codebook", "centroids"),
         Seq("home_delta", "pqcodes_delta"), Seq(cb, cent),
         in(_).select(col("vec_id"), col("p").as("cell"), codes),
-        r => Seq(cells(r.home), heads(r.codes)))
+        r => Seq(cells(r.ivf.home), heads(r.codes)))
       case "SQ8" => new Tiny[Ann.Sq8IndexRelations](Sq8,
         Seq("sq8codes", "ranges"), Seq("sq8codes_delta"),
         Seq(ranges), in(_).select(col("vec_id"), codes),
@@ -654,10 +654,11 @@ class AnnIndexSpec extends SparkSpec {
     import spark.implicits._
     val embs = Tables.embeddings(spark, sfDir)
     val built = Ann.buildDetIvfIndex(embs, "vec_id", "embedding", "label")
-    // the ingest plane comes from the PERSISTED quantizer relation —
-    // the load-once, ship-as-metadata path (never rebuilt per batch)
+    // the ingest collects its plane from the quantizer RELATION, as a
+    // loaded index does — the load-once, ship-as-metadata path (never
+    // rebuilt per batch)
     val store = tmpStore("fold")
-    val plane = Ann.detIvfCentroidPlaneOf(built.centroids)
+    val index = Ann.IvfIndexRelations(built.centroids, built.home)
     val rows = embs.select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect()
     val (half1, half2) = rows.splitAt(rows.length / 2)
@@ -665,7 +666,7 @@ class AnnIndexSpec extends SparkSpec {
 
     val in = MemoryStream[AnnIngest.VecIn]
     val ckpt = java.nio.file.Files.createTempDirectory("ann_fold_ck")
-    val q = AnnIngest.assignCells(in.toDS(), plane, lateness = "10 minutes")
+    val q = AnnIngest.assignCells(in.toDS(), index, lateness = "10 minutes")
       .toDF().writeStream
       .option("checkpointLocation", ckpt.toString)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

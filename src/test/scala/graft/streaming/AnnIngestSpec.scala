@@ -9,11 +9,23 @@ import graft.SparkSpec
 import graft.core.Tables
 import graft.operators.Ann
 
-/** Streaming ANN ingest: incremental det-IVF cell assignment against a
-  * static centroid plane (AnnIngest.assignCells). */
+/** Streaming ANN ingest and search against a static det-IVF index
+  * (AnnIngest.assignCells, AnnIngest.probeTopK). */
 class AnnIngestSpec extends SparkSpec {
 
   private def ts(i: Int): Timestamp = new Timestamp(86400000L + i * 1000L)
+
+  /** A hand-made det-IVF index: integer micro-unit centroid coordinates
+    * per cell, and the routing table's (id, cell) rows. */
+  private def indexOf(cells: Seq[(Long, Seq[Long])],
+                      home: Seq[(Long, Long)] = Nil): Ann.IvfIndexRelations = {
+    import spark.implicits._
+    Ann.IvfIndexRelations(
+      cells.flatMap { case (c, ci) =>
+        ci.zipWithIndex.map { case (x, d) => (c, d, x) } }
+        .toDF("cell", "dim", "ci"),
+      home.toDF("id", "cell"))
+  }
 
   test("stream cell assignment agrees with the batch det-IVF home " +
       "cells on the whole sf corpus") {
@@ -21,16 +33,15 @@ class AnnIngestSpec extends SparkSpec {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val embs = Tables.embeddings(spark, sfDir)
-    val plane = Ann.detIvfCentroidPlaneOf(
-      Ann.buildDetIvfIndex(embs, "vec_id", "embedding", "label").centroids)
-    assert(plane.length > 1, "expected a multi-cell plane")
+    val index = Ann.buildDetIvfIndex(embs, "vec_id", "embedding", "label")
+    assert(index.plane.cells.length > 1, "expected a multi-cell plane")
     val batch = Ann.ivfDetHomeCells(embs, "vec_id", "embedding", "label")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
     val rows = embs.select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect()
     val in = MemoryStream[AnnIngest.VecIn]
-    val q = AnnIngest.assignCells(in.toDS(), plane, lateness = "10 minutes")
+    val q = AnnIngest.assignCells(in.toDS(), index, lateness = "10 minutes")
       .toDF().writeStream.outputMode("append").format("memory")
       .queryName("ann_ingest").start()
     try {
@@ -48,12 +59,10 @@ class AnnIngestSpec extends SparkSpec {
 
   test("streaming probeTopK returns exactly the batch det-IVF top-k " +
       "for every arriving query, even when every query is re-delivered") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val embs = Tables.embeddings(spark, sfDir)
-    val plane = Ann.detIvfCentroidPlaneOf(
-      Ann.buildDetIvfIndex(embs, "vec_id", "embedding", "label").centroids)
+    val index = Ann.buildDetIvfIndex(embs, "vec_id", "embedding", "label")
     val batch = Ann.ivfDetTopK(embs, "vec_id", "embedding", "label",
         col("id") % 50 === 0, k = 5, nprobe = 2)
       .collect()
@@ -64,8 +73,8 @@ class AnnIngestSpec extends SparkSpec {
       .select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect()
     val in = MemoryStream[AnnIngest.VecIn]
-    val q = AnnIngest.probeTopK(in.toDS(), embs, "vec_id", "embedding",
-        "label", plane, k = 5, nprobe = 2, lateness = "1 minute")
+    val q = AnnIngest.probeTopK(in.toDS(), index, embs, "vec_id",
+        "embedding", k = 5, nprobe = 2, lateness = "1 minute")
       .writeStream.outputMode("append").format("memory")
       .queryName("ann_probe").start()
     try {
@@ -98,25 +107,23 @@ class AnnIngestSpec extends SparkSpec {
   test("probe-key contract: a DIFFERENT query reusing a recent " +
       "query_id inside the lateness horizon collapses into the FIRST " +
       "query's results; reuse beyond the horizon serves normally") {
-    // The documented probeTopKFrom contract (AnnIngest.scala): the
+    // The documented probeTopK contract (AnnIngest.scala): the
     // exactly-once pair dedup keeps the FIRST-seen delivery of each
     // (query_id, cand_id), so an id recycled for a NEW vector within
     // `lateness` has its pairs silently dropped — callers minting ids
     // from a sequence/UUID are safe; recyclers must keep the recycle
     // interval above lateness. This pins the behavior on both sides of
     // the horizon.
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val plane = Array(Ann.CentroidCell(1L,
-      Array(1000000L, 1000000L), 2L * 1000000L * 1000000L))
-    val home = Seq(
-      (100L, 1L, Seq(1.0, 0.0)),
-      (101L, 1L, Seq(0.0, 1.0)))
-      .toDF("cand_id", "cell", "cv")
+    val index = indexOf(Seq(1L -> Seq(1000000L, 1000000L)),
+      Seq(100L -> 1L, 101L -> 1L))
+    val corpus = Seq((100L, Seq(1.0, 0.0)), (101L, Seq(0.0, 1.0)))
+      .toDF("vec_id", "embedding")
     val in = MemoryStream[AnnIngest.VecIn]
-    val q = AnnIngest.probeTopKFrom(in.toDS(), home, plane, k = 1,
-        nprobe = 1, windowLen = "1 minute", lateness = "1 minute")
+    val q = AnnIngest.probeTopK(in.toDS(), index, corpus, "vec_id",
+        "embedding", k = 1, nprobe = 1, windowLen = "1 minute",
+        lateness = "1 minute")
       .writeStream.outputMode("append").format("memory")
       .queryName("ann_probe_reuse").start()
     val minute = 60000L
@@ -148,48 +155,39 @@ class AnnIngestSpec extends SparkSpec {
   }
 
   test("re-delivered vector ids inside the lateness horizon are " +
-      "ingested exactly once; dedup=false keeps both") {
+      "ingested exactly once") {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val plane = Array(
-      Ann.CentroidCell(1L, Array(1000000L, 0L), 1000000L * 1000000L),
-      Ann.CentroidCell(2L, Array(0L, 1000000L), 1000000L * 1000000L))
-    def run(dedup: Boolean, name: String): Seq[(Long, Long)] = {
-      val in = MemoryStream[AnnIngest.VecIn]
-      val q = AnnIngest.assignCells(in.toDS(), plane, "10 minutes",
-          dedup = dedup)
-        .toDF().writeStream.outputMode("append").format("memory")
-        .queryName(name).start()
-      try {
-        in.addData(
-          AnnIngest.VecIn(7L, ts(0), Array(1f, 0f)),
-          AnnIngest.VecIn(7L, ts(1), Array(1f, 0f)))
-        q.processAllAvailable()
-        in.addData(AnnIngest.VecIn(7L, ts(2), Array(0f, 1f)))
-        q.processAllAvailable()
-      } finally q.stop()
-      spark.table(name).collect().toSeq
-        .map(r => (r.getLong(0), r.getLong(2)))
-    }
-    val once = run(dedup = true, "ann_ingest_dedup")
+    val index = indexOf(Seq(1L -> Seq(1000000L, 0L),
+      2L -> Seq(0L, 1000000L)))
+    val in = MemoryStream[AnnIngest.VecIn]
+    val q = AnnIngest.assignCells(in.toDS(), index, "10 minutes")
+      .toDF().writeStream.outputMode("append").format("memory")
+      .queryName("ann_ingest_dedup").start()
+    try {
+      in.addData(
+        AnnIngest.VecIn(7L, ts(0), Array(1f, 0f)),
+        AnnIngest.VecIn(7L, ts(1), Array(1f, 0f)))
+      q.processAllAvailable()
+      in.addData(AnnIngest.VecIn(7L, ts(2), Array(0f, 1f)))
+      q.processAllAvailable()
+    } finally q.stop()
+    val once = spark.table("ann_ingest_dedup").collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(2)))
     once.length shouldBe 1
     once.head shouldBe ((7L, 1L))
-    val all = run(dedup = false, "ann_ingest_nodedup")
-    all.length shouldBe 3
-    all.map(_._2).sorted shouldBe Seq(1L, 1L, 2L)
   }
 
   test("assignment semantics: zero vector and exact ties route to the " +
-      "smallest cell; affinity is the integer-bp formula") {
+      "smallest cell") {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val plane = Array(
-      Ann.CentroidCell(5L, Array(1000000L, 1000000L), 2L * 1000000L * 1000000L),
-      Ann.CentroidCell(3L, Array(1000000L, 1000000L), 2L * 1000000L * 1000000L))
+    val index = indexOf(Seq(5L -> Seq(1000000L, 1000000L),
+      3L -> Seq(1000000L, 1000000L)))
     val in = MemoryStream[AnnIngest.VecIn]
-    val q = AnnIngest.assignCells(in.toDS(), plane, "10 minutes")
+    val q = AnnIngest.assignCells(in.toDS(), index, "10 minutes")
       .toDF().writeStream.outputMode("append").format("memory")
       .queryName("ann_ingest_ties").start()
     try {
@@ -199,13 +197,56 @@ class AnnIngestSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
     val got = spark.table("ann_ingest_ties").orderBy(col("vec_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
-    got(0) shouldBe ((1L, 3L, 0L)) // zero norm -> bp 0, smallest cell
-    got(1)._2 shouldBe 3L
-    // exact parallel vector: floor(1e4 * cos) = 10000 or 9999 depending
-    // on fp rounding of the sqrt product — the formula is exact-integer
-    // dot over sqrt norms, so for identical direction it lands at 10000
-    got(1)._3 shouldBe 10000L
+      .collect().map(r => (r.getLong(0), r.getLong(2)))
+    got(0) shouldBe ((1L, 3L)) // zero norm -> bp 0, smallest cell
+    got(1) shouldBe ((2L, 3L)) // equal affinity -> smallest cell
+  }
+
+  test("probe semantics: probeTopK probes exactly the cells the batch " +
+      "candidates (ivfIndexCandidates) probe, over a zero centroid and " +
+      "tied cells at nprobe = 2") {
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    // cells 3 and 5 tie everywhere, cell 9 is the zero vector (bp 0 for
+    // every query); one candidate per cell, so a query's candidates
+    // name its probed cells
+    val cellOf = Map(100L -> 3L, 101L -> 5L, 102L -> 7L, 103L -> 9L)
+    val index = indexOf(Seq(5L -> Seq(1000000L, 1000000L),
+        3L -> Seq(1000000L, 1000000L), 7L -> Seq(1000000L, -1000000L),
+        9L -> Seq(0L, 0L)), cellOf.toSeq)
+    val queries = Seq(1L -> Array(1f, 1f), 2L -> Array(1f, -1f),
+      3L -> Array(-1f, -1f), 4L -> Array(-1f, 1f))
+    val corpus = (queries.map { case (id, v) => (id, v.toSeq) } ++ Seq(
+        100L -> Seq(1f, 1f), 101L -> Seq(1f, 0.5f),
+        102L -> Seq(1f, -1f), 103L -> Seq(-1f, -1f)))
+      .toDF("vec_id", "embedding")
+    val in = MemoryStream[AnnIngest.VecIn]
+    val q = AnnIngest.probeTopK(in.toDS(), index, corpus, "vec_id",
+        "embedding", k = 10, nprobe = 2, lateness = "1 minute")
+      .writeStream.outputMode("append").format("memory")
+      .queryName("ann_probe_cells").start()
+    try {
+      in.addData(queries.map { case (id, v) =>
+        AnnIngest.VecIn(id, ts(0), v) })
+      q.processAllAvailable()
+      // advance the watermark past the window so append emits it
+      in.addData(AnnIngest.VecIn(-1L, new Timestamp(86400000L * 30),
+        Array(1f, 1f)))
+      q.processAllAvailable()
+    } finally q.stop()
+    def probed(pairs: Seq[(Long, Long)]) = pairs
+      .groupBy(_._1).map { case (qid, ps) =>
+        qid -> ps.map(p => cellOf(p._2)).toSet }
+    val streamed = probed(spark.table("ann_probe_cells")
+      .filter(col("query_id") =!= -1L).collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(2))))
+    val batch = probed(Ann.ivfIndexCandidates(index, corpus, "vec_id",
+        "embedding", col("id") > 0L && col("id") < 100L, nprobe = 2)
+      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
+    streamed shouldBe batch
+    // ties to the smallest cell, the zero centroid ranked at bp 0
+    batch shouldBe Map(1L -> Set(3L, 5L), 2L -> Set(7L, 3L),
+      3L -> Set(7L, 9L), 4L -> Set(3L, 5L))
   }
 
   test("ingest survives stop + restart exactly-once: offsets, dedup " +
@@ -219,8 +260,7 @@ class AnnIngestSpec extends SparkSpec {
     val ckpt = root.resolve("ckpt").toString
 
     val embs = Tables.embeddings(spark, sfDir)
-    val plane = Ann.detIvfCentroidPlaneOf(
-      Ann.buildDetIvfIndex(embs, "vec_id", "embedding", "label").centroids)
+    val index = Ann.buildDetIvfIndex(embs, "vec_id", "embedding", "label")
     val batch = Ann.ivfDetHomeCells(embs, "vec_id", "embedding", "label")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val rows = embs.select("vec_id", "embedding")
@@ -232,7 +272,7 @@ class AnnIngestSpec extends SparkSpec {
         spark.readStream.schema(implicitly[
             org.apache.spark.sql.Encoder[AnnIngest.VecIn]].schema)
           .parquet(inDir).as[AnnIngest.VecIn],
-        plane, lateness = "10 minutes")
+        index, lateness = "10 minutes")
       .toDF().writeStream.outputMode("append").format("parquet")
       .option("path", outDir).option("checkpointLocation", ckpt).start()
 
