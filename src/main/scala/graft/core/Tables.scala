@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables (TESTDATA.md).
@@ -14,8 +15,20 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object Tables {
 
+  /** The one parquet read path: `spark.read.parquet(path)` with the schema
+    * Spark would infer, resolved from one footer on the driver
+    * ([[shims.parquetSchema]]) instead of by Spark's schema-inference job.
+    * The footer is read at each call, so nothing can go stale. A path
+    * with no parquet file to read falls through to Spark's own read and
+    * its error (the missing path, or `UNABLE_TO_INFER_SCHEMA`). */
+  def read(spark: SparkSession, path: String): DataFrame =
+    shims.parquetSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

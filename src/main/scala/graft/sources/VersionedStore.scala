@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** Versioned dataset store — the capability surface of SDFS
   * (server/sdfs.go: put/get/get-versions/delete/ls, with a file =
   * named sequence of timestamped versions, sdfs.go:24,276-283) rebuilt on
@@ -80,7 +82,7 @@ final case class VersionedStore(root: String) {
   def get(spark: SparkSession, name: String): DataFrame = {
     val vs = versions(spark, name)
     require(vs.nonEmpty, s"no versions of $name under $root")
-    spark.read.parquet(versionPath(name, vs.last).toString)
+    Tables.read(spark, versionPath(name, vs.last).toString)
   }
 
   /** Read one explicit version (the pinned-version `get` a reader uses
@@ -90,7 +92,7 @@ final case class VersionedStore(root: String) {
   def getVersion(spark: SparkSession, name: String, v: Long): DataFrame = {
     require(fs(spark).exists(markerPath(name, v)),
       s"no committed version $v of $name under $root")
-    spark.read.parquet(versionPath(name, v).toString)
+    Tables.read(spark, versionPath(name, v).toString)
   }
 
   /** Delete one version (retention pruning — keep the newest K index
@@ -105,7 +107,7 @@ final case class VersionedStore(root: String) {
     val vs = versions(spark, name).takeRight(n)
     require(vs.nonEmpty, s"no versions of $name under $root")
     vs.map { v =>
-      spark.read.parquet(versionPath(name, v).toString)
+      Tables.read(spark, versionPath(name, v).toString)
         .withColumn("version", lit(v))
     }.reduce(_ unionByName _)
   }

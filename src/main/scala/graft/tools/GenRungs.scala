@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** Scale-ladder rung dirs. A rung is a dir holding the driver's ten
   * tables: the scaled ones written as single parquet FILES (DuckDB's
   * view pattern '<dir>/<t>.parquet' expects a file), every other table
@@ -71,11 +73,11 @@ object GenRungs {
 
   def docsRung(name: String, src: String, n: Int): Rung =
     Rung(name, src, s =>
-      Seq("documents" -> documents(s.read.parquet(s"$src/documents.parquet"), n)))
+      Seq("documents" -> documents(Tables.load(s, src, "documents"), n)))
 
   def eventsRung(name: String, src: String, n: Int): Rung =
     Rung(name, src, s =>
-      Seq("events" -> events(s.read.parquet(s"$src/events.parquet"), n)))
+      Seq("events" -> events(Tables.load(s, src, "events"), n)))
 
   /** Facts ×n: transaction history grows while every dimension table is
     * linked, not copied (dims do not grow 10× when facts do; that is
@@ -83,8 +85,8 @@ object GenRungs {
     * broadcastable). */
   def factsRung(name: String, src: String, n: Int): Rung =
     Rung(name, src, s => Seq(
-      "orders" -> facts(s.read.parquet(s"$src/orders.parquet"), "o_orderkey", n),
-      "lineitem" -> facts(s.read.parquet(s"$src/lineitem.parquet"), "l_orderkey", n)))
+      "orders" -> facts(Tables.load(s, src, "orders"), "o_orderkey", n),
+      "lineitem" -> facts(Tables.load(s, src, "lineitem"), "l_orderkey", n)))
 
   /** n label-clustered unit vectors: vec_id BIGINT, embedding
     * ARRAY<FLOAT> dim 64, label INT 0..9. Matches the DRIVER's measured
@@ -155,7 +157,7 @@ object GenRungs {
     Files.createDirectories(dir)
     val scaled = rung.scaled(spark)
     scaled.foreach { case (t, df) => writeFile(df, dir, t) }
-    graft.core.Tables.names.filterNot(scaled.map(_._1).toSet).foreach { t =>
+    Tables.names.filterNot(scaled.map(_._1).toSet).foreach { t =>
       val link = dir.resolve(s"$t.parquet")
       Files.deleteIfExists(link)
       Files.createSymbolicLink(link, Paths.get(s"${rung.src}/$t.parquet"))

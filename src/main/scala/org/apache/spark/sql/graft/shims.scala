@@ -1,9 +1,15 @@
 /* Bridge into Spark's private[sql] surface. Spark 4 removed the public
  * Column(Expression) constructor; the supported internal path is
- * org.apache.spark.sql.classic.ExpressionUtils. Keeping this single file
- * inside the org.apache.spark.sql package confines the private-API use to
- * one place; everything else in graft stays on the public API. */
+ * org.apache.spark.sql.classic.ExpressionUtils. Parquet footer-to-schema
+ * conversion is internal too. Keeping this single file inside the
+ * org.apache.spark.sql package confines the private-API use to one place;
+ * everything else in graft stays on the public API. */
 package org.apache.spark.sql.graft
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -11,6 +17,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 object shims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -46,5 +56,35 @@ object shims {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental
     if (!exp.extraOptimizations.exists(_ eq r))
       exp.extraOptimizations = exp.extraOptimizations :+ r
+  }
+
+  /** The schema Spark's parquet source infers for `path`, read on the
+    * driver.
+    *
+    * Spark's non-merging inference touches one file: `_common_metadata`,
+    * else `_metadata`, else the first data file in path order. It reads
+    * that footer through `parallelize(...).collect()`, a job per read.
+    * This picks the same file from Spark's own listing (its hidden-file
+    * filter; no job below 32 paths) and converts its footer with Spark's
+    * own footer-to-schema conversion under the session's conf. `None`
+    * when the path lists no parquet file: a missing path, or a directory
+    * without data files. */
+  def parquetSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val files = new InMemoryFileIndex(session, Seq(new Path(path)), Map.empty,
+      None).allFiles().sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val summaries = Set(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse(files.find(f => !summaries(f.getPath.getName)))
+      .map { f =>
+        val metadata = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, session.sessionState.newHadoopConf()),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, metadata),
+          new ParquetToSparkSchemaConverter(session.sessionState.conf))
+      }
   }
 }

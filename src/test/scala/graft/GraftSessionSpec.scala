@@ -51,6 +51,20 @@ class GraftSessionSpec extends SparkSpec {
     hits shouldBe empty
   }
 
+  test("src/main reads parquet through graft.core.Tables alone") {
+    // spark.read.parquet infers the schema with a Spark job per read;
+    // Tables.read resolves it from one footer on the driver
+    val chain = """(\s*\.\s*(option|options|schema)\s*\([^)]*\))*"""
+    val reads = (raw"""\bread$chain\s*\.\s*parquet\s*\(|""" +
+      raw"""format\s*\(\s*"parquet"\s*\)$chain\s*\.\s*load\s*\(""").r
+    val readers = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => reads.findFirstIn(Files.readString(p)).isDefined)
+      .map(p => Paths.get("src/main/scala").relativize(p).toString)
+      .toSeq
+    readers shouldBe Seq("graft/core/Tables.scala")
+  }
+
   test("src/main cuts lineage through graft.core.Lineage alone") {
     // one module decides eager vs lazy and owns the storage call, so
     // swapping localCheckpoint for a reliable checkpoint is one edit

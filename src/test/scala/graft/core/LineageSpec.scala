@@ -1,13 +1,12 @@
 package graft.core
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.{Accumulators, BusDrain}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
@@ -108,16 +107,11 @@ class LineageSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("rounds folds n rounds, passing the round index, with no job") {
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    val folded = withListener(listener) {
+    val (folded, jobs) = jobsDuring {
       Lineage.rounds(spark.range(1).toDF(), 3)((df, i) =>
         df.select((col("id") * 10 + i).as("id")))
     }
-    jobs.get() shouldBe 0
+    jobs shouldBe 0
     folded.collect().map(_.getLong(0)) shouldBe Array(123L)
   }
 

@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.graft.BusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -384,21 +380,7 @@ class AnnSpec extends SparkSpec {
       () => Ann.ivfIndexTopK(built, embs, "vec_id", "embedding", q, k = 5),
       () => Ann.ivfIndexTopK(cut, embs, "vec_id", "embedding", q, k = 5),
       () => Ann.ivfPqIndexTopK(pq, embs, "vec_id", "embedding", q, k = 5))
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    BusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val perServe =
-      try serves.map { serve =>
-        jobs.set(0)
-        serve()
-        BusDrain(spark.sparkContext)
-        jobs.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
-    perServe shouldBe Seq(0, 0, 0)
+    serves.map(serve => jobsDuring(serve())._2) shouldBe Seq(0, 0, 0)
   }
 
   test("autoSubcellsExact: smallest power of two s with (labels*s)^2 " +

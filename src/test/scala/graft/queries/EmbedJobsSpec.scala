@@ -1,10 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.graft.BusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.{SparkEntry, SparkSpec}
 import graft.core.Memo
 
@@ -19,19 +14,9 @@ class EmbedJobsSpec extends SparkSpec {
     // start cold: the shared triangle and probe weights are built here
     Memo.clearKeys(spark, Memo.keys(spark).filter(k =>
       k.startsWith("cov_tri:") || k.startsWith("linear_probe:")))
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    BusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val rows = Seq("embed_linear_probe", "embed_pca_power")
-        .map(q => SparkEntry.queries(q)(spark, sfDir).collect().length)
-      rows shouldBe Seq(64, 64)
-      BusDrain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() <= 15, s"${jobs.get()} jobs")
+    val (rows, jobs) = jobsDuring(Seq("embed_linear_probe", "embed_pca_power")
+      .map(q => SparkEntry.queries(q)(spark, sfDir).collect().length))
+    rows shouldBe Seq(64, 64)
+    assert(jobs <= 15, s"$jobs jobs")
   }
 }

@@ -1,21 +1,24 @@
 #!/usr/bin/env python3
-r"""Write an edge-case table dir: the named tables hold every row twice.
+r"""Write an edge-case table dir: the named tables rewritten as one kind.
 
-Usage: python3 tools/edge_dirs.py <srcDir> <outDir> <table>[,<table>...]
+Usage: python3 tools/edge_dirs.py [--kind KIND] <srcDir> <outDir> <table>[,<table>...]
 
 <srcDir> is an sf dir (one <table>.parquet per table). In <outDir> each
-named table is rewritten with every row repeated (DuckDB COPY of the
-table UNION ALL itself), and every other table is symlinked to its
-source file. The result is an sf dir: graft.Verify, tools/check_oracle.py
-and graft.Bench run on it unchanged, e.g.
+named table is rewritten by DuckDB COPY as KIND, and every other table is
+symlinked to its source file. Kinds:
 
-  python3 tools/edge_dirs.py /data/sf0.01 /tmp/dup embeddings
-  SPARK_GRAFT_ONLY=ann_ivf_,ann_pq_det \
-    sbt "runMain graft.Verify /tmp/dup /tmp/v"
-  python3 tools/check_oracle.py /tmp/dup /tmp/v
+  dup      every row twice (the table UNION ALL itself; the default)
+  empty    no rows, the source's columns and types
+  one-row  the source's first row
 
-Only the duplicated-row kind exists so far; empty, one-row and null
-tables are further kinds of the same sweep.
+The result is an sf dir: graft.Verify, tools/check_oracle.py and
+graft.Bench run on it unchanged, e.g.
+
+  python3 tools/edge_dirs.py --kind empty /data/sf0.01 /tmp/empty embeddings
+  SPARK_GRAFT_ONLY=embed_ sbt "runMain graft.Verify /tmp/empty /tmp/v"
+  python3 tools/check_oracle.py /tmp/empty /tmp/v
+
+The null-injection kind of the same sweep does not exist yet.
 """
 import glob
 import os
@@ -23,13 +26,25 @@ import sys
 
 import duckdb
 
+# kind -> the SELECT that rewrites a table read as `src`
+KINDS = {
+    "dup": "SELECT * FROM {src} UNION ALL SELECT * FROM {src}",
+    "empty": "SELECT * FROM {src} LIMIT 0",
+    # DuckDB keeps a file's row order by default, so LIMIT 1 is its
+    # first row
+    "one-row": "SELECT * FROM {src} LIMIT 1",
+}
 
-def write_doubled(src_dir, out_dir, doubled):
+
+def write_edge(src_dir, out_dir, named, kind="dup"):
     """Write `out_dir` from `src_dir`; returns {table: rows written}."""
-    doubled = set(doubled)
+    if kind not in KINDS:
+        raise ValueError(f"no such kind: {kind} "
+                         f"(kinds: {', '.join(sorted(KINDS))})")
+    named = set(named)
     tables = sorted(os.path.basename(p)[:-len(".parquet")]
                     for p in glob.glob(os.path.join(src_dir, "*.parquet")))
-    missing = doubled - set(tables)
+    missing = named - set(tables)
     if missing:
         raise ValueError(f"no such table in {src_dir}: "
                          f"{', '.join(sorted(missing))}")
@@ -42,10 +57,9 @@ def write_doubled(src_dir, out_dir, doubled):
             dst = os.path.join(out_dir, f"{t}.parquet")
             if os.path.lexists(dst):
                 os.remove(dst)
-            if t in doubled:
-                con.execute(
-                    f"COPY (SELECT * FROM '{src}' UNION ALL "
-                    f"SELECT * FROM '{src}') TO '{dst}' (FORMAT parquet)")
+            if t in named:
+                select = KINDS[kind].format(src=f"'{src}'")
+                con.execute(f"COPY ({select}) TO '{dst}' (FORMAT parquet)")
                 written[t] = con.execute(
                     f"SELECT count(*) FROM '{dst}'").fetchone()[0]
             else:
@@ -56,10 +70,14 @@ def write_doubled(src_dir, out_dir, doubled):
 
 
 def main(argv):
-    if len(argv) != 4:
+    args = argv[1:]
+    kind = "dup"
+    if args[:1] == ["--kind"] and len(args) > 1:
+        kind, args = args[1], args[2:]
+    if len(args) != 3:
         sys.exit(__doc__)
-    src_dir, out_dir, names = argv[1], argv[2], argv[3].split(",")
-    for t, n in write_doubled(src_dir, out_dir, names).items():
+    src_dir, out_dir, names = args[0], args[1], args[2].split(",")
+    for t, n in write_edge(src_dir, out_dir, names, kind).items():
         print(f"{t}: {n} rows")
 
 

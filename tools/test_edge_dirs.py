@@ -1,4 +1,4 @@
-"""Tests for edge_dirs.py's duplicated-row table dir.
+"""Tests for edge_dirs.py's edge-case table dirs.
 
 Run from the repo root: python3 -m unittest discover -s tools -p 'test_*.py'
 """
@@ -21,7 +21,15 @@ def rows(path):
         con.close()
 
 
-class WriteDoubledTest(unittest.TestCase):
+def schema(path):
+    con = duckdb.connect()
+    try:
+        return con.execute(f"DESCRIBE SELECT * FROM '{path}'").fetchall()
+    finally:
+        con.close()
+
+
+class WriteEdgeTest(unittest.TestCase):
 
     def setUp(self):
         self.tmp = tempfile.TemporaryDirectory()
@@ -39,8 +47,8 @@ class WriteDoubledTest(unittest.TestCase):
 
     def test_named_tables_hold_every_row_twice(self):
         out = os.path.join(self.tmp.name, "out")
-        written = edge_dirs.write_doubled(self.src, out,
-                                          ["embeddings", "documents"])
+        written = edge_dirs.write_edge(self.src, out,
+                                       ["embeddings", "documents"])
         self.assertEqual(written, {"documents": 4, "embeddings": 6})
         for t in ("embeddings", "documents"):
             p = os.path.join(out, f"{t}.parquet")
@@ -50,7 +58,7 @@ class WriteDoubledTest(unittest.TestCase):
 
     def test_other_tables_are_symlinks_to_the_source(self):
         out = os.path.join(self.tmp.name, "out")
-        edge_dirs.write_doubled(self.src, out, ["embeddings"])
+        edge_dirs.write_edge(self.src, out, ["embeddings"])
         self.assertEqual(sorted(os.listdir(out)),
                          ["documents.parquet", "embeddings.parquet",
                           "region.parquet"])
@@ -62,17 +70,46 @@ class WriteDoubledTest(unittest.TestCase):
 
     def test_rewrite_over_an_existing_dir(self):
         out = os.path.join(self.tmp.name, "out")
-        edge_dirs.write_doubled(self.src, out, ["embeddings"])
-        written = edge_dirs.write_doubled(self.src, out, ["region"])
+        edge_dirs.write_edge(self.src, out, ["embeddings"])
+        written = edge_dirs.write_edge(self.src, out, ["region"])
         self.assertEqual(written, {"region": 10})
         self.assertTrue(os.path.islink(os.path.join(out,
                                                     "embeddings.parquet")))
 
+    def test_empty_kind_keeps_the_columns_and_no_rows(self):
+        out = os.path.join(self.tmp.name, "out")
+        written = edge_dirs.write_edge(self.src, out, ["embeddings"],
+                                       "empty")
+        self.assertEqual(written, {"embeddings": 0})
+        p = os.path.join(out, "embeddings.parquet")
+        self.assertEqual(rows(p), [])
+        self.assertEqual(schema(p), schema(os.path.join(
+            self.src, "embeddings.parquet")))
+        self.assertTrue(os.path.islink(os.path.join(out, "region.parquet")))
+
+    def test_one_row_kind_keeps_the_first_row(self):
+        out = os.path.join(self.tmp.name, "out")
+        written = edge_dirs.write_edge(self.src, out,
+                                       ["embeddings", "region"], "one-row")
+        self.assertEqual(written, {"embeddings": 1, "region": 1})
+        for t in ("embeddings", "region"):
+            p = os.path.join(out, f"{t}.parquet")
+            self.assertEqual(rows(p), [(0, "r0")])
+            self.assertEqual(schema(p), schema(os.path.join(
+                self.src, f"{t}.parquet")))
+        self.assertTrue(os.path.islink(os.path.join(out,
+                                                    "documents.parquet")))
+
+    def test_unknown_kind_is_an_error(self):
+        with self.assertRaises(ValueError):
+            edge_dirs.write_edge(self.src, os.path.join(self.tmp.name, "out"),
+                                 ["region"], "nulls")
+
     def test_unknown_table_is_an_error(self):
         with self.assertRaises(ValueError):
-            edge_dirs.write_doubled(self.src,
-                                    os.path.join(self.tmp.name, "out"),
-                                    ["nope"])
+            edge_dirs.write_edge(self.src,
+                                 os.path.join(self.tmp.name, "out"),
+                                 ["nope"])
 
 
 if __name__ == "__main__":
